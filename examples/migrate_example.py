@@ -9,7 +9,8 @@ The original: connect to Mongo + Influx, then for EVERY collection apply
         return row
 
 with querylimit=200000, insertlimit=150, and a progress TUI. The same
-program here — declarative, partition-parallel, with the same knobs:
+program here — declarative, partition-parallel, with the same knobs
+(querylimit excepted: input splits replace skip/limit pagination):
 
     PYTHONPATH=.. python migrate_example.py
 """
@@ -26,7 +27,6 @@ def main() -> None:
         config=EngineConfig(
             table_concurrency=2,   # reference `limit` (index.js:50)
             insert_limit=150,      # examples/migrate.js:21
-            query_limit=200_000,   # examples/migrate.js:17 (informational)
             empty_series=False,
         ),
     )

@@ -38,12 +38,6 @@ class EngineConfig:
     #: file sinks batch at the partition/row-group level instead.
     insert_limit: int = 100
 
-    #: Hint for source chunk sizing (reference `mongodb.querylimit`,
-    #: index.js:47). Informational under Spark: input-split partitioning
-    #: replaces skip/limit pagination (SURVEY.md §4.3.1). Retained so sources
-    #: that need explicit partitioning (JDBC, Mongo connector) can use it.
-    query_limit: int = 100_000
-
     # -- modes ------------------------------------------------------------
     #: Truncate each destination series before loading (reference
     #: `emptySeries`, index.js:52, delete at :328).

@@ -114,9 +114,6 @@ class Engine:
             # memory; 64 MB broadcasts mid-size dims (saving a shuffle of
             # the fact side) while truly large tables still exceed it.
             "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-            # Let Python Data Sources (sources/mongospool.py) receive
-            # pushed filters; off by default in Spark 4.1.
-            "spark.sql.python.filterPushdown.enabled": "true",
             # NOTE on canChangeCachedPlanOutputPartitioning (deliberately
             # NOT set): it was briefly enabled so persisted iteration
             # intermediates would AQE-coalesce, but the iterative
@@ -153,9 +150,8 @@ class Engine:
         if tables is not None:
             names = tables
         else:
-            # Enumerate names only — Catalog.tables() would also construct
-            # every DataFrame (a schema-inference scan for csv/json), all
-            # discarded here and re-read in _migrate_table.
+            # Enumerate names only: constructing every DataFrame up front
+            # would cost a schema-inference scan per table for csv/json.
             from node_mongo2influx_spark.sources.catalog import is_system_table
 
             names = [

@@ -223,21 +223,13 @@ class InfluxLineProtocolSink(Sink):
         # action, so upstream Observation metrics fire and we get an exact
         # sent-count back; foreachPartition drops to the RDD path, which
         # bypasses the SQL listener (observe() would never resolve).
-        def send_partition(batches_iter: Iterator) -> Iterator:
+        def send_partition(pdfs: Iterator) -> Iterator:
             import pandas as pd
 
             sent = 0
-            buf: list[str] = []
-            for pdf in batches_iter:
-                for line in pdf["line"]:
-                    buf.append(line)
-                    if len(buf) >= limit:
-                        transport(series, buf)
-                        sent += len(buf)
-                        buf = []
-            if buf:
-                transport(series, buf)
-                sent += len(buf)
+            for batch in batches((line for pdf in pdfs for line in pdf["line"]), limit):
+                transport(series, batch)
+                sent += len(batch)
             yield pd.DataFrame({"sent": [sent]})
 
         stats = (
@@ -267,7 +259,7 @@ class InfluxLineProtocolSink(Sink):
 
 def batches(lines: Iterable[str], limit: int) -> Iterator[list[str]]:
     """Chunk an iterable into ``limit``-sized lists (reference insertlimit
-    batching, index.js:209-212). Exposed for tests."""
+    batching, index.js:209-212) — the chunker behind every sink POST."""
     batch: list[str] = []
     for line in lines:
         batch.append(line)

@@ -16,7 +16,7 @@ behind import so the engine has no hard dependency.
 from __future__ import annotations
 
 import pathlib
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -39,12 +39,6 @@ class Catalog:
 
     def read(self, name: str) -> DataFrame:
         raise NotImplementedError
-
-    def tables(self, system_prefixes: Sequence[str] = ()) -> Iterator[tuple[str, DataFrame]]:
-        for name in self.table_names():
-            if is_system_table(name, system_prefixes):
-                continue
-            yield name, self.read(name)
 
 
 class DirectoryCatalog(Catalog):
@@ -93,32 +87,33 @@ class SpoolCatalog(Catalog):
     """A mongoexport dump directory: ``<dir>/<collection>/<*.jsonl>``
     (each collection a sub-directory of BSON-extended-JSON spool files).
 
-    Backed by the `mongospool` Python Data Source
-    (:mod:`~node_mongo2influx_spark.sources.mongospool`) — one
-    snapshot-stable input partition per spool file. With this catalog,
-    ``Engine.migrate`` runs the reference's EXACT end-to-end use case
-    (every Mongo collection → prepare → Influx) from a dump, no live
+    A read infers the schema on the driver, splits the spool files with
+    ``spark.read.text`` (splits break at newlines) and decodes each split
+    in ``mapInArrow`` with the decoder of
+    :mod:`~node_mongo2influx_spark.sources.mongospool`. It needs no session
+    conf, and filters on the result are plain Spark filters. With this
+    catalog, ``Engine.migrate`` runs the reference's EXACT end-to-end use
+    case (every Mongo collection → prepare → Influx) from a dump, no live
     mongod required.
     """
 
     def __init__(self, spark: SparkSession, path: str) -> None:
         super().__init__(spark)
         self.path = pathlib.Path(path)
-        from node_mongo2influx_spark.sources.mongospool import (
-            MongoSpoolDataSource,
-        )
-
-        spark.dataSource.register(MongoSpoolDataSource)
 
     def table_names(self) -> list[str]:
         return sorted(p.name for p in self.path.iterdir() if p.is_dir())
 
     def read(self, name: str) -> DataFrame:
-        return (
-            self.spark.read.format("mongospool")
-            .option("path", str(self.path / name))
-            .load()
+        from node_mongo2influx_spark.sources.mongospool import (
+            arrow_decoder,
+            infer_schema,
+            spool_files,
         )
+
+        files = spool_files(self.path / name)
+        schema = infer_schema(files)
+        return self.spark.read.text(files).mapInArrow(arrow_decoder(schema), schema)
 
 
 class SessionCatalog(Catalog):

@@ -1,16 +1,19 @@
-"""`mongospool` — a Spark Python Data Source for MongoDB JSON dumps.
+"""`mongospool` — MongoDB JSON dumps (mongoexport spools) as Spark rows.
 
 The reference reads live Mongo collections with skip/limit pagination
 (index.js:186-198 — unstable under concurrent writes, see SURVEY §4.3.1).
 The container has no mongod, but the OTHER standard Mongo interchange path
 — `mongoexport` newline-delimited JSON (one BSON-extended-JSON document
-per line) — is fully expressible as a first-class Spark source via the
-Python Data Source API (Spark 4):
+per line) — maps onto stock Spark:
 
-* **Partition planning replaces pagination**: one input partition per
-  spool file (mongoexport shards naturally per collection chunk), so reads
-  scale with files and are snapshot-stable — precisely the fix for the
-  reference's skip/limit hazard.
+* **Batch reads are file splits, not pagination**: ``spark.read.text``
+  over the spool files, then :func:`arrow_decoder` in ``mapInArrow``.
+  Text splits break at newlines, so even a one-file collection decodes on
+  every core, and a read is snapshot-stable — the fix for the reference's
+  skip/limit hazard. Filters are ordinary Spark filters above the decode.
+* **The streaming tail** is the ``mongospool`` Python Data Source
+  (:class:`MongoSpoolDataSource`), whose byte-range offsets keep
+  delivering lines appended to a file already listed.
 * **BSON extended JSON is decoded**, not passed through: ``{"$oid": …}``
   → string id, ``{"$date": epoch-ms | ISO | {"$numberLong"}}`` → timestamp
   (exact integer millis, pre-1970 and far-future included),
@@ -24,15 +27,18 @@ Python Data Source API (Spark 4):
   objects stay JSON strings (the reference's schemaless rows flow through
   the same way — a truthy `time` is the only structural requirement,
   applied later by TransformSpec).
-* **Schema** comes from ``schema(...)`` on the reader or is inferred from
-  a sample of leading documents (first ``_SCHEMA_SAMPLE_LINES`` non-blank
+* **Schema** is inferred on the driver by :func:`infer_schema` from a
+  sample of leading documents (first ``_SCHEMA_SAMPLE_LINES`` non-blank
   lines of the first file — union of keys; conflicting types widen to
-  string, the schemaless-safe choice).
+  string, the schemaless-safe choice). A stream reader may pass its own
+  ``schema(...)`` instead.
 
 Usage::
 
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", dump_dir).load()
+    df = SpoolCatalog(spark, dump_dir).read(collection)   # batch
+    spark.dataSource.register(MongoSpoolDataSource)        # streaming tail
+    sdf = (spark.readStream.format("mongospool").schema(schema)
+           .option("path", collection_dir).load())
 """
 
 from __future__ import annotations
@@ -43,18 +49,7 @@ import pathlib
 from datetime import datetime, timedelta, timezone
 from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
     BinaryType,
     DataType,
@@ -136,7 +131,10 @@ def _decode_extended(v):
                 ) + timedelta(milliseconds=ms)
             if isinstance(d, float):
                 return datetime.fromtimestamp(d / 1000.0, tz=timezone.utc)
-            return datetime.fromisoformat(str(d).replace("Z", "+00:00"))
+            dt = datetime.fromisoformat(str(d).replace("Z", "+00:00"))
+            # BSON dates are UTC; an ISO string without an offset must not
+            # take the worker's local zone
+            return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
         if "$numberLong" in v:
             return int(v["$numberLong"])
         if "$numberInt" in v:
@@ -203,10 +201,10 @@ def _infer_type(v) -> DataType:
 
 
 def _coerce(v, dtype: DataType):
-    """The ONE value-shaping rule, shared by row building AND pushed-filter
-    evaluation. Divergence here is silent row loss: Spark does not
-    re-apply filters a source accepted in pushFilters, so the filter must
-    see exactly the value the row would carry."""
+    """The ONE value-shaping rule: every column value of a decoded row,
+    batch or stream, goes through it, so a document reads the same on
+    both paths. Values that do not fit a string column (widened by mixed
+    types) are re-rendered as text."""
     v = _decode_extended(v)
     if v is not None and isinstance(dtype, StringType) and not isinstance(v, str):
         # bytes can't json.dumps; a $binary landing in a string-widened
@@ -219,179 +217,109 @@ def _coerce(v, dtype: DataType):
     return v
 
 
-class MongoSpoolDataSource(DataSource):
-    """See module docstring. Options: ``path`` (dir of .json/.jsonl files)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "mongospool"
-
-    def _files(self) -> list[str]:
-        root = pathlib.Path(self.options["path"])
-        files = sorted(
-            str(p)
-            for pat in ("*.json", "*.jsonl", "*.ndjson")
-            for p in root.glob(pat)
-        )
-        if not files:
-            raise FileNotFoundError(f"no spool files under {root}")
-        return files
-
-    def schema(self) -> StructType:
-        """Infer from a sample: union of keys over the first
-        ``_SCHEMA_SAMPLE_LINES`` non-blank documents of the first file;
-        the first non-null occurrence types a field, a later conflicting
-        type widens it to string. `.schema(...)` on the reader overrides
-        inference entirely (the right call for production dumps)."""
-        first = self._files()[0]
-        names: list[str] = []  # insertion order = column order
-        types: dict[str, DataType | None] = {}
-        n_docs = 0
-        with open(first, "r", encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    doc = json.loads(line)
-                except json.JSONDecodeError as exc:
-                    raise ValueError(
-                        f"spool file {first} line {n_docs + 1} is not valid "
-                        f"JSON: {exc}"
-                    ) from exc
-                n_docs += 1
-                for k, v in doc.items():
-                    if k not in types:
-                        names.append(k)
-                        types[k] = None
-                    t = None if v is None else _infer_type(v)
-                    if t is None:
-                        continue
-                    if types[k] is None:
-                        types[k] = t
-                    elif type(types[k]) is not type(t):
-                        types[k] = StringType()  # mixed types: widen
-                if n_docs >= _SCHEMA_SAMPLE_LINES:
-                    break
-        if n_docs == 0:
-            raise ValueError(
-                f"cannot infer schema: spool file {first} has no documents "
-                "(pass an explicit .schema(...) or remove the empty file)"
-            )
-        return StructType(
-            [
-                StructField(k, types[k] or StringType(), nullable=True)
-                for k in names
-            ]
-        )
-
-    def reader(self, schema: StructType) -> "MongoSpoolReader":
-        return MongoSpoolReader(self._files(), schema)
-
-    def simpleStreamReader(self, schema: StructType) -> "MongoSpoolStreamReader":
-        return MongoSpoolStreamReader(self.options["path"], schema)
+def spool_files(path) -> list[str]:
+    """The spool files of one collection directory, sorted."""
+    root = pathlib.Path(path)
+    return sorted(
+        str(p) for pat in ("*.json", "*.jsonl", "*.ndjson") for p in root.glob(pat)
+    )
 
 
-#: Comparison filters the reader evaluates itself (pushdown). Everything
-#: else is returned to Spark as unsupported and re-checked post-scan.
-_PUSHABLE = {
-    EqualTo: lambda v, x: v == x,
-    GreaterThan: lambda v, x: v > x,
-    GreaterThanOrEqual: lambda v, x: v >= x,
-    LessThan: lambda v, x: v < x,
-    LessThanOrEqual: lambda v, x: v <= x,
-}
-
-#: Python types a filter constant may have per declared column type for
-#: the comparison to be well-defined against a _coerce()d value. A filter
-#: whose constant doesn't fit is NOT pushed (yielded back to Spark) —
-#: never evaluated approximately.
-_COMPARABLE = {
-    StringType: (str,),
-    LongType: (int, float),
-    DoubleType: (int, float),
-    TimestampType: (datetime,),
-}
-
-
-class MongoSpoolReader(DataSourceReader):
-    def __init__(self, files: list[str], schema: StructType) -> None:
-        self.files = files
-        self.schema = schema
-        self.fields = [(f.name, f.dataType) for f in schema.fields]
-        self._dtypes = {f.name: f.dataType for f in schema.fields}
-        self._pushed: list = []
-
-    def pushFilters(self, filters: list[Filter]):
-        """Accept flat comparison filters — rows failing them never leave
-        the source (the custom-source half of predicate pushdown). Spark
-        re-applies anything we yield back as unsupported.
-
-        A filter is pushed ONLY when we can evaluate it exactly as Spark
-        would see the built row: known column, known dtype, and a filter
-        constant whose type is comparable with that dtype. Anything else
-        goes back to Spark — approximate evaluation here silently loses
-        rows, because Spark trusts accepted filters and never re-checks
-        them (spark.sql.python.filterPushdown)."""
-        for f in filters:
-            kind = type(f)
-            if kind not in _PUSHABLE or len(f.attribute) != 1:
-                yield f
+def infer_schema(files: list[str]) -> StructType:
+    """Infer from a sample: union of keys over the first
+    ``_SCHEMA_SAMPLE_LINES`` non-blank documents of the first file; the
+    first non-null occurrence types a field, a later conflicting type
+    widens it to string."""
+    if not files:
+        raise FileNotFoundError("no spool files (*.json, *.jsonl, *.ndjson)")
+    first = files[0]
+    names: list[str] = []  # insertion order = column order
+    types: dict[str, DataType | None] = {}
+    n_docs = 0
+    with open(first, "r", encoding="utf-8") as fh:
+        for line in fh:
+            line = line.strip()
+            if not line:
                 continue
-            name = f.attribute[0]
-            dtype = self._dtypes.get(name)
-            ok_types = _COMPARABLE.get(type(dtype))
-            if (
-                ok_types is None
-                or not isinstance(f.value, ok_types)
-                or isinstance(f.value, bool)
-            ):
-                yield f
-                continue
-            self._pushed.append((name, dtype, _PUSHABLE[kind], f.value))
-
-    def _keep(self, doc: dict) -> bool:
-        for name, dtype, op, want in self._pushed:
-            # coerce with the SAME rule row building uses, so mixed-type
-            # schemaless values (e.g. int 5 in a string column -> "5")
-            # compare against what Spark will actually see
-            v = _coerce(doc.get(name), dtype)
-            if v is None:
-                return False  # NULL never satisfies a comparison
             try:
-                if not op(v, want):
-                    return False
-            except TypeError:
-                # value is incomparable even after coercion (malformed doc
-                # for a non-string column). Keep the row: Spark surfaces
-                # the row-conversion error instead of us silently eating
-                # the document.
-                return True
-        return True
+                doc = json.loads(line)
+            except json.JSONDecodeError as exc:
+                raise ValueError(
+                    f"spool file {first} line {n_docs + 1} is not valid "
+                    f"JSON: {exc}"
+                ) from exc
+            n_docs += 1
+            for k, v in doc.items():
+                if k not in types:
+                    names.append(k)
+                    types[k] = None
+                t = None if v is None else _infer_type(v)
+                if t is None:
+                    continue
+                if types[k] is None:
+                    types[k] = t
+                elif type(types[k]) is not type(t):
+                    types[k] = StringType()  # mixed types: widen
+            if n_docs >= _SCHEMA_SAMPLE_LINES:
+                break
+    if n_docs == 0:
+        raise ValueError(
+            f"cannot infer schema: spool file {first} has no documents "
+            "(pass an explicit .schema(...) or remove the empty file)"
+        )
+    return StructType(
+        [StructField(k, types[k] or StringType(), nullable=True) for k in names]
+    )
 
-    def partitions(self):
-        # one partition per spool file: snapshot-stable, scales with files
-        # (the skip/limit pagination replacement — SURVEY §4.3.1)
-        return [InputPartition(f) for f in self.files]
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        yield from _read_file(partition.value, self.fields, self._keep)
-
-
-def _rows_from_lines(lines: Iterator[str], fields, keep=None) -> Iterator[tuple]:
+def _rows_from_lines(lines, fields) -> Iterator[tuple]:
     for line in lines:
         line = line.strip()
         if not line:
             continue
         doc = json.loads(line)
-        if keep is not None and not keep(doc):
-            continue
         yield tuple(_coerce(doc.get(name), dtype) for name, dtype in fields)
 
 
-def _read_file(path: str, fields, keep=None) -> Iterator[tuple]:
-    with open(path, "r", encoding="utf-8") as fh:
-        yield from _rows_from_lines(fh, fields, keep)
+def arrow_decoder(schema: StructType):
+    """The ``mapInArrow`` function that turns ``spark.read.text`` batches
+    (one ``value`` column of spool lines) into rows of ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fields = [(f.name, f.dataType) for f in schema.fields]
+    arrow_schema = to_arrow_schema(schema)
+
+    def decode(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            rows = list(_rows_from_lines(batch.column(0).to_pylist(), fields))
+            if rows:
+                columns = zip(*rows)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=t) for c, t in zip(columns, arrow_schema.types)],
+                    schema=arrow_schema,
+                )
+
+    return decode
+
+
+class MongoSpoolDataSource(DataSource):
+    """The streaming tail of one collection directory (option ``path``).
+    Batch reads go through :func:`arrow_decoder` instead."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "mongospool"
+
+    def schema(self) -> StructType:
+        """Inferred by :func:`infer_schema`; ``.schema(...)`` on the reader
+        overrides inference entirely (the right call for a stream that
+        starts on an empty directory)."""
+        return infer_schema(spool_files(self.options["path"]))
+
+    def simpleStreamReader(self, schema: StructType) -> "MongoSpoolStreamReader":
+        return MongoSpoolStreamReader(self.options["path"], schema)
 
 
 def _complete_prefix_len(path: str) -> int:
@@ -423,7 +351,7 @@ def _read_byte_range(path: str, start: int, end: int, fields) -> list[tuple]:
         fh.seek(start)
         blob = fh.read(end - start)
     lines = blob.decode("utf-8").splitlines()
-    return list(_rows_from_lines(iter(lines), fields))
+    return list(_rows_from_lines(lines, fields))
 
 
 class MongoSpoolStreamReader(SimpleDataSourceStreamReader):
@@ -440,36 +368,17 @@ class MongoSpoolStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, path: str, schema: StructType) -> None:
-        self.path = pathlib.Path(path)
+        self.path = path
         self.fields = [(f.name, f.dataType) for f in schema.fields]
-
-    def _all_files(self) -> list[str]:
-        return sorted(
-            str(p)
-            for pat in ("*.json", "*.jsonl", "*.ndjson")
-            for p in self.path.glob(pat)
-        )
 
     def initialOffset(self) -> dict:
         return {"sizes": {}}
 
-    @staticmethod
-    def _sizes(offset: dict) -> dict[str, int]:
-        if "sizes" in offset:
-            return dict(offset["sizes"])
-        # legacy file-set offsets (pre-(file,size)): treat listed files as
-        # fully delivered at their current complete length
-        return {
-            f: _complete_prefix_len(f)
-            for f in offset.get("seen", [])
-            if pathlib.Path(f).exists()
-        }
-
     def read(self, start: dict):
-        done = self._sizes(start)
+        done = start["sizes"]
         rows: list[tuple] = []
         end_sizes = dict(done)
-        for f in self._all_files():
+        for f in spool_files(self.path):
             upto = _complete_prefix_len(f)
             already = done.get(f, 0)
             if upto > already:
@@ -479,7 +388,7 @@ class MongoSpoolStreamReader(SimpleDataSourceStreamReader):
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # replay: exactly the byte ranges the original batch covered
-        a, b = self._sizes(start), self._sizes(end)
+        a, b = start["sizes"], end["sizes"]
         rows: list[tuple] = []
         for f in sorted(b):
             lo, hi = a.get(f, 0), b[f]

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from node_mongo2influx_spark.plans.tables import load
-from node_mongo2influx_spark.sources.catalog import DirectoryCatalog
+from node_mongo2influx_spark.sources.catalog import DirectoryCatalog, SpoolCatalog
 from node_mongo2influx_spark.sources.schema_merge import (
     merge_read_json,
     union_heterogeneous,
@@ -48,12 +48,11 @@ def test_merge_read_json_schema_drift(spark, tmp_path):
 
 def test_mongospool_python_datasource_roundtrip(spark, sf_dir, tmp_path):
     # write a mongoexport-style dump (BSON extended JSON, one doc/line,
-    # several files), read it back through the registered Python Data
-    # Source, and check values + partition planning.
+    # several files), read it back through SpoolCatalog, and check values
+    # and inferred types.
     import json
 
     from node_mongo2influx_spark.plans.tables import load
-    from node_mongo2influx_spark.sources.mongospool import MongoSpoolDataSource
 
     rows = (
         load(spark, sf_dir, "events")
@@ -63,7 +62,7 @@ def test_mongospool_python_datasource_roundtrip(spark, sf_dir, tmp_path):
     )
     dump = tmp_path / "dump"
     dump.mkdir()
-    for i in range(3):  # 3 spool files -> 3 partitions
+    for i in range(3):
         with open(dump / f"events.{i}.jsonl", "w") as fh:
             for r in rows[i::3]:
                 fh.write(
@@ -82,9 +81,7 @@ def test_mongospool_python_datasource_roundtrip(spark, sf_dir, tmp_path):
                     + "\n"
                 )
 
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", str(dump)).load()
-    assert df.rdd.getNumPartitions() == 3
+    df = SpoolCatalog(spark, str(dump.parent)).read(dump.name)
     got = {r["event_id"]: r for r in df.collect()}
     assert len(got) == 300
     sample = rows[0]
@@ -112,7 +109,6 @@ def test_spool_catalog_migrates_dump_to_influx(spark, sf_dir, tmp_path):
     from node_mongo2influx_spark.plans.tables import load
     from node_mongo2influx_spark.sinks import InfluxLineProtocolSink
     from node_mongo2influx_spark.sinks.influx import SpoolTransport
-    from node_mongo2influx_spark.sources.catalog import SpoolCatalog
 
     rows = (
         load(spark, sf_dir, "events")
@@ -163,18 +159,15 @@ def test_spool_catalog_migrates_dump_to_influx(spark, sf_dir, tmp_path):
 def test_mongospool_filter_pushdown(spark, tmp_path):
     import json
 
-    from node_mongo2influx_spark.sources.mongospool import MongoSpoolDataSource
-
     d = tmp_path / "pf"
     d.mkdir()
     with open(d / "a.jsonl", "w") as fh:
         for i in range(100):
             fh.write(json.dumps({"k": i, "v": float(i) / 10}) + "\n")
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", str(d)).load()
+    df = SpoolCatalog(spark, str(d.parent)).read(d.name)
     out = df.where("k >= 90 AND v < 9.5").collect()
     assert sorted(r["k"] for r in out) == [90, 91, 92, 93, 94]
-    # unsupported filter shapes still work (re-applied by Spark post-scan)
+    # any filter shape works: filters run as a Spark Filter above the decode
     assert df.where("k % 7 = 0").count() == 15
 
 
@@ -229,14 +222,10 @@ def test_mongospool_stream_reader_tails_new_files(spark, tmp_path):
 
 
 def test_mongospool_pushdown_mixed_type_values(spark, tmp_path):
-    # Schemaless collections routinely mix types per key. The pushed
-    # filter must compare against the COERCED value (what Spark sees in
-    # the built row), not the raw decoded JSON value — Spark never
-    # re-applies filters the source accepted, so a divergence silently
-    # loses rows.
+    # Schemaless collections routinely mix types per key. A filter must
+    # compare against the COERCED value (what the built row carries), not
+    # the raw decoded JSON value, or it silently loses rows.
     import json
-
-    from node_mongo2influx_spark.sources.mongospool import MongoSpoolDataSource
 
     d = tmp_path / "mixed"
     d.mkdir()
@@ -244,8 +233,7 @@ def test_mongospool_pushdown_mixed_type_values(spark, tmp_path):
         fh.write(json.dumps({"k": "x"}) + "\n")   # schema infers k: string
         fh.write(json.dumps({"k": 5}) + "\n")     # int in a string column
         fh.write(json.dumps({"k": None}) + "\n")
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", str(d)).load()
+    df = SpoolCatalog(spark, str(d.parent)).read(d.name)
     # unfiltered read stringifies the 5
     assert sorted(r["k"] for r in df.collect() if r["k"] is not None) == ["5", "x"]
     # the filter must see "5" too
@@ -253,35 +241,59 @@ def test_mongospool_pushdown_mixed_type_values(spark, tmp_path):
     assert [r["k"] for r in df.where("k >= 'x'").collect()] == ["x"]
 
 
-def test_mongospool_pushdown_rejects_incomparable_constants(tmp_path):
-    # A filter whose constant can't compare against the column dtype is
-    # yielded back to Spark, never evaluated approximately.
+def test_spool_catalog_reads_without_filter_pushdown_conf(spark, tmp_path):
+    # A session that never enabled Python Data Source filter pushdown (the
+    # Spark default) must still read and filter a spool.
     import json
 
-    from node_mongo2influx_spark.sources.mongospool import (
-        MongoSpoolReader,
-    )
-    from pyspark.sql.datasource import EqualTo
-    from pyspark.sql.types import LongType, StructField, StructType
+    key = "spark.sql.python.filterPushdown.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        d = tmp_path / "plain"
+        d.mkdir()
+        with open(d / "a.jsonl", "w") as fh:
+            for i in range(20):
+                fh.write(json.dumps({"k": i, "s": f"v{i}"}) + "\n")
+        df = SpoolCatalog(spark, str(tmp_path)).read("plain")
+        out = df.where("k >= 15 AND s != 'v17'").collect()
+        assert sorted((r["k"], r["s"]) for r in out) == [
+            (15, "v15"), (16, "v16"), (18, "v18"), (19, "v19"),
+        ]
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
-    f = tmp_path / "x.jsonl"
-    f.write_text(json.dumps({"k": 1}) + "\n")
-    schema = StructType([StructField("k", LongType())])
-    r = MongoSpoolReader([str(f)], schema)
-    returned = list(r.pushFilters([EqualTo(("k",), "not-a-number"),
-                                   EqualTo(("missing",), 1),
-                                   EqualTo(("k",), 1)]))
-    # string-vs-long and unknown-column filters bounce; the int one sticks
-    assert len(returned) == 2
-    assert len(r._pushed) == 1
+
+def test_spool_catalog_splits_one_file_at_newlines(spark, tmp_path):
+    # A one-file collection read with small file splits decodes on several
+    # tasks; each document must come out exactly once, whatever split
+    # boundary falls inside its line.
+    import json
+
+    d = tmp_path / "onefile"
+    d.mkdir()
+    with open(d / "a.jsonl", "w") as fh:
+        for i in range(2000):
+            fh.write(json.dumps({"k": i, "pad": "x" * (i % 37)}) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        df = SpoolCatalog(spark, str(tmp_path)).read("onefile")
+        assert df.rdd.getNumPartitions() > 1
+        got = sorted(r["k"] for r in df.select("k").collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert got == list(range(2000))
 
 
 def test_mongospool_schema_sampled_beyond_first_line(spark, tmp_path):
     # Sparse fields appearing only in later documents must still get
     # columns (round-3 inferred from line 1 only).
     import json
-
-    from node_mongo2influx_spark.sources.mongospool import MongoSpoolDataSource
 
     d = tmp_path / "sparse"
     d.mkdir()
@@ -290,8 +302,7 @@ def test_mongospool_schema_sampled_beyond_first_line(spark, tmp_path):
         fh.write("\n")  # blank lines are skipped, not fatal
         fh.write(json.dumps({"a": 2, "b": "later", "c": 1.5}) + "\n")
         fh.write(json.dumps({"a": "mixed"}) + "\n")  # widens a to string
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", str(d)).load()
+    df = SpoolCatalog(spark, str(d.parent)).read(d.name)
     assert [f.name for f in df.schema.fields] == ["a", "b", "c"]
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert types == {"a": "string", "b": "string", "c": "double"}
@@ -445,8 +456,6 @@ def test_mongospool_extended_json_type_coverage(spark, tmp_path):
     import json
     from datetime import datetime, timedelta, timezone
 
-    from node_mongo2influx_spark.sources.mongospool import MongoSpoolDataSource
-
     epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
     t1905 = datetime(1905, 3, 1, 7, 0, 0, 500000, tzinfo=timezone.utc)
     t2200 = datetime(2200, 1, 2, 3, 4, 5, 678000, tzinfo=timezone.utc)
@@ -482,8 +491,7 @@ def test_mongospool_extended_json_type_coverage(spark, tmp_path):
     (dump / "c.jsonl").write_text(
         "".join(json.dumps(d) + "\n" for d in docs)
     )
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", str(dump)).load()
+    df = SpoolCatalog(spark, str(dump.parent)).read(dump.name)
     kinds = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert kinds == {
         "_id": "string", "event_id": "bigint", "ts": "timestamp",
@@ -495,6 +503,12 @@ def test_mongospool_extended_json_type_coverage(spark, tmp_path):
     assert got[1]["ts"] == t1905.replace(tzinfo=None)
     assert got[2]["ts"] == t2200.replace(tzinfo=None)
     assert got[3]["ts"] == datetime(2031, 5, 6, 7, 8, 9, 10000)
+    # an ISO $date without an offset is UTC, whatever the worker's zone
+    from node_mongo2influx_spark.sources.mongospool import _decode_extended
+
+    assert _decode_extended({"$date": "2031-05-06T07:08:09.010"}) == datetime(
+        2031, 5, 6, 7, 8, 9, 10000, tzinfo=timezone.utc
+    )
     # int64 edges exact
     assert got[1]["n"] == 2**63 - 1 and got[2]["n"] == -(2**63)
     # Decimal128: exact lexical string
@@ -517,7 +531,6 @@ def test_spool_migrate_green_over_extended_types(spark, tmp_path):
     from node_mongo2influx_spark import Engine, TransformSpec
     from node_mongo2influx_spark.sinks import InfluxLineProtocolSink
     from node_mongo2influx_spark.sinks.influx import SpoolTransport
-    from node_mongo2influx_spark.sources.catalog import SpoolCatalog
 
     coll = tmp_path / "xd" / "readings"
     coll.mkdir(parents=True)
@@ -567,8 +580,6 @@ def test_mongospool_binary_uuid_timestamp_regex_decode(spark, tmp_path):
     import base64
     import json
 
-    from node_mongo2influx_spark.sources.mongospool import MongoSpoolDataSource
-
     payload = bytes(range(7)) + b"\x00\xff"
     docs = [
         {
@@ -601,8 +612,7 @@ def test_mongospool_binary_uuid_timestamp_regex_decode(spark, tmp_path):
     dump = tmp_path / "bdump"
     dump.mkdir()
     (dump / "c.jsonl").write_text("".join(json.dumps(d) + "\n" for d in docs))
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", str(dump)).load()
+    df = SpoolCatalog(spark, str(dump.parent)).read(dump.name)
     kinds = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert kinds == {
         "k": "bigint", "blob": "binary", "uid": "string",
@@ -628,10 +638,7 @@ def test_mongospool_hostile_binary_and_timestamp_degrade(spark, tmp_path):
     # oplog stamp fails LongType row conversion).
     import json
 
-    from node_mongo2influx_spark.sources.mongospool import (
-        MongoSpoolDataSource,
-        _decode_extended,
-    )
+    from node_mongo2influx_spark.sources.mongospool import _decode_extended
 
     # unit level: both hostile shapes return the JSON string verbatim
     bad_b64 = {"$binary": "not!!valid@@base64"}
@@ -652,8 +659,7 @@ def test_mongospool_hostile_binary_and_timestamp_degrade(spark, tmp_path):
     dump = tmp_path / "hostiledump"
     dump.mkdir()
     (dump / "c.jsonl").write_text("".join(json.dumps(d) + "\n" for d in docs))
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", str(dump)).load()
+    df = SpoolCatalog(spark, str(dump.parent)).read(dump.name)
     got = {r["k"]: r for r in df.collect()}
     assert json.loads(got[1]["blob"]) == bad_b64
     assert json.loads(got[2]["blob"]) == bad_b64_v2
@@ -669,8 +675,6 @@ def test_mongospool_spool_to_multimodal_composition(spark, tmp_path):
     import json
 
     from node_mongo2influx_spark.operators import multimodal
-    from node_mongo2influx_spark.sources.mongospool import MongoSpoolDataSource
-
     png = (
         b"\x89PNG\r\n\x1a\n"
         + (13).to_bytes(4, "big") + b"IHDR"
@@ -697,8 +701,7 @@ def test_mongospool_spool_to_multimodal_composition(spark, tmp_path):
     dump = tmp_path / "mdump"
     dump.mkdir()
     (dump / "c.jsonl").write_text("".join(json.dumps(d) + "\n" for d in docs))
-    spark.dataSource.register(MongoSpoolDataSource)
-    df = spark.read.format("mongospool").option("path", str(dump)).load()
+    df = SpoolCatalog(spark, str(dump.parent)).read(dump.name)
     assert df.schema["payload"].dataType.simpleString() == "binary"
 
     mimes = {
