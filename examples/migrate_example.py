@@ -26,7 +26,6 @@ def main() -> None:
         master="local[*]",
         config=EngineConfig(
             table_concurrency=2,   # reference `limit` (index.js:50)
-            insert_limit=150,      # examples/migrate.js:21
             empty_series=False,
         ),
     )
@@ -37,7 +36,7 @@ def main() -> None:
 
     catalog = DirectoryCatalog(engine.spark, "/root/testdata/sf0.001")
     sink = InfluxLineProtocolSink(SpoolTransport("/tmp/migrate_example_spool"),
-                                  insert_limit=150)
+                                  insert_limit=150)  # examples/migrate.js:21
     # For a live InfluxDB instead:
     #   from node_mongo2influx_spark.sinks.influx import HttpTransport
     #   sink = InfluxLineProtocolSink(HttpTransport("http://localhost:8086", "grafinflux"))

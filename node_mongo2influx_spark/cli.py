@@ -34,7 +34,7 @@ def _parse_kv(pairs: list[str]) -> dict[str, str]:
     return out
 
 
-def _build_sink(spec: str, insert_limit: int):
+def _build_sink(spec: str, insert_limit: int, time_column: str):
     from node_mongo2influx_spark.sinks import (
         InfluxLineProtocolSink,
         MemorySink,
@@ -47,13 +47,15 @@ def _build_sink(spec: str, insert_limit: int):
     if kind == "parquet":
         return ParquetSink(rest)
     if kind == "influx-spool":
-        return InfluxLineProtocolSink(SpoolTransport(rest), insert_limit=insert_limit)
+        return InfluxLineProtocolSink(
+            SpoolTransport(rest), insert_limit=insert_limit, time_column=time_column
+        )
     if kind == "influx":
         url, _, db = rest.partition("#")
         if not db:
             raise SystemExit("influx sink needs <url>#<database>")
         return InfluxLineProtocolSink(
-            HttpTransport(url, db), insert_limit=insert_limit
+            HttpTransport(url, db), insert_limit=insert_limit, time_column=time_column
         )
     if kind == "memory":
         return MemorySink()
@@ -197,7 +199,6 @@ def main(argv: list[str] | None = None) -> int:
         master=args.master,
         config=EngineConfig(
             table_concurrency=args.limit,
-            insert_limit=args.insert_limit,
             empty_series=args.empty_series,
         ),
     )
@@ -214,7 +215,7 @@ def main(argv: list[str] | None = None) -> int:
         if src_kind == "spool"
         else DirectoryCatalog(engine.spark, args.source)
     )
-    sink = _build_sink(args.sink, args.insert_limit)
+    sink = _build_sink(args.sink, args.insert_limit, args.time_column)
     report = engine.migrate(catalog, spec, sink, tables=args.tables)
 
     print(

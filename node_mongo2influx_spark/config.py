@@ -32,12 +32,6 @@ class EngineConfig:
     #: scheduler interleaves their tasks across executors.
     table_concurrency: int = 2
 
-    # -- sink batching ----------------------------------------------------
-    #: Points per sink write batch (reference `insertlimit`, index.js:51).
-    #: Only meaningful for record-batched sinks (InfluxDB line protocol);
-    #: file sinks batch at the partition/row-group level instead.
-    insert_limit: int = 100
-
     # -- modes ------------------------------------------------------------
     #: Truncate each destination series before loading (reference
     #: `emptySeries`, index.js:52, delete at :328).
@@ -60,11 +54,8 @@ class EngineConfig:
     system_prefixes: tuple[str, ...] = ("system.", "system_")
 
     # -- spark tuning -------------------------------------------------------
-    #: Target shuffle partition count for local/test runs. On a real cluster
-    #: leave AQE (enabled by Engine.builder) to coalesce at runtime.
-    shuffle_partitions: int = 32
-
-    #: Extra SparkSession configs applied by :meth:`Engine.builder`.
+    #: Extra SparkSession configs applied by :meth:`Engine.builder` (e.g.
+    #: ``spark.sql.shuffle.partitions``, 32 unless set here).
     spark_conf: dict[str, str] = field(default_factory=dict)
 
     def merged(self, **overrides: object) -> "EngineConfig":

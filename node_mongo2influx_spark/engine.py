@@ -33,7 +33,12 @@ logger = logging.getLogger("node_mongo2influx_spark")
 @dataclass
 class TableReport:
     """Per-table outcome — the engine analogue of the reference's per-
-    collection completion log (index.js:266-273)."""
+    collection completion log (index.js:266-273).
+
+    ``rows_in = rows_written + rows_skipped``. ``rows_skipped`` counts the
+    rows the transform's time filter drops and, when the sink counts what
+    it writes, also the rows the sink drops (the Influx sink cannot render
+    a row whose non-time fields are all NULL)."""
 
     table: str
     rows_in: int = 0
@@ -108,7 +113,7 @@ class Engine:
             "spark.sql.adaptive.coalescePartitions.enabled": "true",
             "spark.sql.adaptive.skewJoin.enabled": "true",
             "spark.sql.execution.arrow.pyspark.enabled": "true",
-            "spark.sql.shuffle.partitions": str(cfg.shuffle_partitions),
+            "spark.sql.shuffle.partitions": "32",
             "spark.sql.session.timeZone": "UTC",
             # Spark's 10 MB broadcast ceiling predates modern executor
             # memory; 64 MB broadcasts mid-size dims (saving a shuffle of
@@ -214,10 +219,11 @@ class Engine:
         if obs is not None:
             stats = obs.get
             rep.rows_in = stats["rows_in"]
-            rep.rows_skipped = stats["rows_skipped"]
             rep.rows_written = (
-                written if written >= 0 else rep.rows_in - rep.rows_skipped
+                written if written >= 0 else rep.rows_in - stats["rows_skipped"]
             )
+            # rows a counting sink drops itself are skipped too
+            rep.rows_skipped = rep.rows_in - rep.rows_written
         else:
             rep.rows_written = written if written >= 0 else 0
         if self.config.logging:

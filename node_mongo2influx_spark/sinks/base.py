@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame
 class Sink:
     """Destination for one-table-per-series writes."""
 
-    #: Sinks that truncate by deletion (vs overwrite) set this.
-    supports_truncate: bool = False
+    #: Every sink implements ``truncate`` (by deletion or as overwrite).
+    supports_truncate: bool = True
 
     def write(self, df: DataFrame, series: str) -> int:
         """Append ``df`` as series ``series``. Returns rows written when the

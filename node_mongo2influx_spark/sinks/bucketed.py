@@ -17,8 +17,6 @@ from node_mongo2influx_spark.sinks.base import Sink
 
 
 class BucketedTableSink(Sink):
-    supports_truncate = True
-
     def __init__(
         self,
         bucket_by: str,

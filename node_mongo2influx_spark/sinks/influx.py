@@ -10,9 +10,10 @@ Spark-first design — the two halves are deliberately split:
    line-protocol string *entirely with Column expressions* (concat /
    format_string / regexp_replace), so serialization runs inside whole-stage
    codegen on executors. No Python touches row contents.
-2. **Delivery** (the edge): ``foreachPartition`` over the rendered lines,
-   chunking each partition into ``insert_limit``-line POST bodies. The
-   transport is an injectable callable so tests swap HTTP for a spool
+2. **Delivery** (the edge): one ``mapInArrow`` pass over the rendered
+   lines, chunking each partition into ``insert_limit``-line POST bodies
+   and yielding one ``sent`` count per partition, which the driver sums.
+   The transport is an injectable callable so tests swap HTTP for a spool
    directory; the default HTTP transport uses stdlib ``urllib`` (no extra
    deps). Partition-parallel — the reference wrote batches strictly serially
    with pooling disabled (index.js:227, {pool:false} :242).
@@ -129,7 +130,8 @@ def render_lines(
         F.lit(" "),
         (F.unix_micros(F.col(time_column).cast("timestamp")) * 1000).cast("string"),
     )
-    # Two row classes render as malformed/poisonous lines and are dropped:
+    # Two row classes render as malformed/poisonous lines and are dropped
+    # (Engine.migrate counts them as skipped):
     # all-fields-NULL ('series  <ts>' — no information for a field-value
     # store, 400s the batch) and NULL time (concat goes NULL; a None among
     # the lines would crash '\n'.join mid-POST). Upstream TransformSpec
@@ -199,62 +201,53 @@ class SpoolTransport:
 
 
 class InfluxLineProtocolSink(Sink):
-    supports_truncate = True
-
     def __init__(
         self,
         transport: Transport,
         insert_limit: int = 100,
         time_column: str = "time",
-        truncate_fn: Callable[[str], None] | None = None,
         dedup_tag: str | None = None,
     ) -> None:
         self.transport = transport
         self.insert_limit = insert_limit
         self.time_column = time_column
-        self.truncate_fn = truncate_fn
         self.dedup_tag = dedup_tag
 
     def write(self, df: DataFrame, series: str) -> int:
         lines_df = render_lines(df, series, self.time_column, self.dedup_tag)
         transport, limit = self.transport, self.insert_limit
 
-        # Delivery via mapInPandas (not foreachPartition): it stays a SQL
+        # Delivery via mapInArrow (not foreachPartition): it stays a SQL
         # action, so upstream Observation metrics fire and we get an exact
         # sent-count back; foreachPartition drops to the RDD path, which
-        # bypasses the SQL listener (observe() would never resolve).
-        def send_partition(pdfs: Iterator) -> Iterator:
-            import pandas as pd
+        # bypasses the SQL listener (observe() would never resolve). One
+        # count row per partition, summed here: no aggregate, so one job.
+        def send_partition(arrow_batches: Iterator) -> Iterator:
+            import pyarrow as pa
 
+            lines = (ln for b in arrow_batches for ln in b.column(0).to_pylist())
             sent = 0
-            for batch in batches((line for pdf in pdfs for line in pdf["line"]), limit):
+            for batch in batches(lines, limit):
                 transport(series, batch)
                 sent += len(batch)
-            yield pd.DataFrame({"sent": [sent]})
+            yield pa.RecordBatch.from_pydict({"sent": [sent]})
 
-        stats = (
-            lines_df.mapInPandas(send_partition, schema="sent long")
-            .agg(F.sum("sent").alias("sent"))
-            .collect()
-        )
-        return int(stats[0]["sent"] or 0)
+        rows = lines_df.mapInArrow(send_partition, schema="sent long").collect()
+        return sum(r["sent"] for r in rows)
 
     def truncate(self, series: str) -> None:
         # The reference issues `DELETE FROM <series> WHERE time < now()` by
         # string concatenation (index.js:328) — injection-prone; here the
-        # deletion is either the injected callable or the transport's own
-        # parameterized truncate (HttpTransport.truncate).
-        if self.truncate_fn is not None:
-            self.truncate_fn(series)
-        elif hasattr(self.transport, "truncate"):
-            self.transport.truncate(series)
-        else:
+        # deletion is the transport's own parameterized truncate
+        # (HttpTransport.truncate).
+        if not hasattr(self.transport, "truncate"):
             # Never silently skip a requested truncate (empty_series mode
             # would otherwise bulk-load on top of stale data).
             raise RuntimeError(
                 f"transport {type(self.transport).__name__} cannot truncate; "
-                "pass truncate_fn or use a transport with .truncate()"
+                "use a transport with .truncate()"
             )
+        self.transport.truncate(series)
 
 
 def batches(lines: Iterable[str], limit: int) -> Iterator[list[str]]:

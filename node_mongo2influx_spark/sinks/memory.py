@@ -16,8 +16,6 @@ from node_mongo2influx_spark.sinks.base import Sink
 
 
 class MemorySink(Sink):
-    supports_truncate = True
-
     def __init__(self) -> None:
         self.series: dict[str, list[Row]] = {}
         self._lock = threading.Lock()

@@ -14,8 +14,6 @@ from node_mongo2influx_spark.sinks.base import Sink
 
 
 class NoopSink(Sink):
-    supports_truncate = True
-
     def write(self, df: DataFrame, series: str) -> int:
         df.write.format("noop").mode("overwrite").save()
         return -1

@@ -67,8 +67,6 @@ def _partition_pred(pcols, tuples):
 
 
 class ParquetSink(Sink):
-    supports_truncate = True
-
     def __init__(
         self,
         path: str,
@@ -98,17 +96,10 @@ class ParquetSink(Sink):
         self._truncated: set[str] = set()
 
     def write(self, df: DataFrame, series: str) -> int:
+        overwrite = self.dynamic_overwrite or series in self._truncated
+        writer = df.write.mode("overwrite" if overwrite else "append")
         if self.dynamic_overwrite:
-            writer = (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self.partition_by)
-            )
-            writer.parquet(str(self.path / series))
-            self._truncated.discard(series)
-            return -1
-        mode = "overwrite" if series in self._truncated else "append"
-        writer = df.write.mode(mode)
+            writer = writer.option("partitionOverwriteMode", "dynamic")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(str(self.path / series))

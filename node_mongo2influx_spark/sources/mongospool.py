@@ -375,16 +375,13 @@ class MongoSpoolStreamReader(SimpleDataSourceStreamReader):
         return {"sizes": {}}
 
     def read(self, start: dict):
-        done = start["sizes"]
-        rows: list[tuple] = []
-        end_sizes = dict(done)
+        sizes = dict(start["sizes"])
         for f in spool_files(self.path):
             upto = _complete_prefix_len(f)
-            already = done.get(f, 0)
-            if upto > already:
-                rows.extend(_read_byte_range(f, already, upto, self.fields))
-                end_sizes[f] = upto
-        return (iter(rows), {"sizes": end_sizes})
+            if upto > sizes.get(f, 0):  # an offset never moves backwards
+                sizes[f] = upto
+        end = {"sizes": sizes}
+        return self.readBetweenOffsets(start, end), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # replay: exactly the byte ranges the original batch covered

@@ -46,7 +46,9 @@ def _timestamp_columns(path: str) -> tuple[list[str], list[str]]:
         if not parts:
             return [], []
         first = str(parts[0])
-    schema = pq.read_schema(first)
+    # Spark writes timestamps as INT96, which pyarrow would report as nanos;
+    # coercing INT96 to micros reports what Spark reads back.
+    schema = pq.ParquetFile(first, coerce_int96_timestamp_unit="us").schema_arrow
     nanos, ntz = [], []
     for f in schema:
         if not pt.is_timestamp(f.type):

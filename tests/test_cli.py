@@ -94,3 +94,25 @@ def test_cli_adhoc_sql(capsys):
     out = capsys.readouterr().out
     assert rc == 0
     assert "rows: 5" in out and "click" in out
+
+
+def test_cli_time_column_reaches_influx_sink(spark, sf_dir, tmp_path, capsys):
+    import pathlib
+
+    rc = main([
+        "--source", sf_dir,
+        "--sink", f"influx-spool:{tmp_path}/lp",
+        "--tables", "events",
+        "--time-column", "ts",
+        "--master", "local[4]",
+    ])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0 and report["failed"] == []
+    assert report["tables"]["events"]["rows_written"] == 1000
+    lines = [
+        ln
+        for f in pathlib.Path(tmp_path, "lp", "events").glob("*.lp")
+        for ln in f.read_text().splitlines()
+    ]
+    assert len(lines) == 1000
+    assert not any(" ts=" in ln or ",ts=" in ln for ln in lines)

@@ -89,6 +89,21 @@ def test_migrate_truncate_mode(engine, catalog, tmp_path):
     assert n_trunc == 1000
 
 
+
+def test_parquet_sink_output_reads_back(engine, catalog, tmp_path):
+    # Spark writes `time` as INT96; reading the series back must not take
+    # it for nanos.
+    from node_mongo2influx_spark.sources.parquet_compat import read_parquet
+
+    spec = TransformSpec(rename={"ts": "time"}, drop=["props"])
+    engine.migrate(catalog, spec, ParquetSink(str(tmp_path / "out")), tables=["events"])
+    back = read_parquet(engine.spark, str(tmp_path / "out" / "events"))
+    want = spec.compile(catalog.read("events"))
+    assert back.dtypes == want.dtypes
+    assert back.count() == want.count() == 1000
+    assert back.exceptAll(want).isEmpty() and want.exceptAll(back).isEmpty()
+
+
 def test_table_failure_is_isolated(engine, catalog):
     # A transform referencing a missing column fails that table only.
     spec = TransformSpec(rename={"no_such_column": "time"}, time_column="time")

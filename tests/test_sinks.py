@@ -170,3 +170,34 @@ def test_full_pipeline_into_influx_sink(engine, sf_dir, tmp_path):
         for ln in f.read_text().splitlines()
     ]
     assert len(lines) == 1000
+
+
+def test_influx_rows_in_equals_written_plus_skipped(engine, tmp_path):
+    # The renderer drops a row whose non-time fields are all NULL; the
+    # engine must count it as skipped, next to the null-time row.
+    from node_mongo2influx_spark.sources.catalog import SessionCatalog
+
+    t = datetime.datetime(2024, 1, 1)
+    engine.spark.createDataFrame(
+        [(t, 1.0, "a"), (t, None, None), (None, 3.0, "c"), (t, 4.0, None)],
+        "time timestamp, v double, s string",
+    ).createOrReplaceTempView("all_null_fields")
+    try:
+        report = engine.migrate(
+            SessionCatalog(engine.spark),
+            TransformSpec(),
+            InfluxLineProtocolSink(SpoolTransport(str(tmp_path))),
+            tables=["all_null_fields"],
+        )
+    finally:
+        engine.spark.catalog.dropTempView("all_null_fields")
+    [tr] = report.tables
+    assert tr.error is None
+    assert (tr.rows_in, tr.rows_written, tr.rows_skipped) == (4, 2, 2)
+    assert tr.rows_in == tr.rows_written + tr.rows_skipped
+    lines = [
+        ln
+        for f in pathlib.Path(tmp_path, "all_null_fields").glob("*.lp")
+        for ln in f.read_text().splitlines()
+    ]
+    assert len(lines) == tr.rows_written
