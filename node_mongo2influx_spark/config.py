@@ -4,8 +4,9 @@ Mirrors the reference's configuration model (/root/reference/index.js:25-54)
 with two deliberate fixes recorded in SURVEY.md §4.3:
 
 * explicit-None semantics — the reference silently ignores falsy overrides
-  (``if (options.limit)`` guards, index.js:74-77), so ``logging: false`` could
-  never be set. Here every field set explicitly wins, including falsy values.
+  (``if (options.limit)`` guards, index.js:74-77), so a falsy option
+  (``false``, ``0``) could never be set. Here every field set explicitly
+  wins, including falsy values.
 * instance-scoped — the reference keeps all state module-global
   (index.js:21-23, 56-58); two engines in one process would share counters.
   ``EngineConfig`` is a plain dataclass owned by its ``Engine``.
@@ -37,21 +38,11 @@ class EngineConfig:
     #: `emptySeries`, index.js:52, delete at :328).
     empty_series: bool = False
 
-    #: Emit per-table progress logs (reference `logging`, index.js:49).
-    logging: bool = True
-
     #: Abort the whole migration on the first table failure — the
     #: reference's behavior (async.eachLimit error semantics,
     #: index.js:294-316). Default False: failures are isolated per table
     #: and reported (partial progress is durable either way).
     fail_fast: bool = False
-
-    # -- catalog filtering -------------------------------------------------
-    #: Skip tables whose name starts with one of these prefixes. The
-    #: reference skips any name *containing* "system" (index.js:298), which
-    #: over-matches (e.g. "ecosystem"); we use prefix semantics per
-    #: SURVEY.md §4.3.3. Set to () to migrate everything.
-    system_prefixes: tuple[str, ...] = ("system.", "system_")
 
     # -- spark tuning -------------------------------------------------------
     #: Extra SparkSession configs applied by :meth:`Engine.builder` (e.g.

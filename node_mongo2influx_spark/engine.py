@@ -159,11 +159,7 @@ class Engine:
             # would cost a schema-inference scan per table for csv/json.
             from node_mongo2influx_spark.sources.catalog import is_system_table
 
-            names = [
-                n
-                for n in catalog.table_names()
-                if not is_system_table(n, self.config.system_prefixes)
-            ]
+            names = [n for n in catalog.table_names() if not is_system_table(n)]
         report = MigrationReport()
         t0 = time.monotonic()
         max_workers = max(1, self.config.table_concurrency)
@@ -186,21 +182,19 @@ class Engine:
                     # index.js:294-316). fail_fast=True restores reference
                     # behavior: cancel what hasn't started, re-raise.
                     report.tables.append(TableReport(table=name, error=str(exc)))
-                    if self.config.logging:
-                        logger.exception("table %s failed", name)
+                    logger.exception("table %s failed", name)
                     if self.config.fail_fast:
                         for f in futures:
                             f.cancel()
                         report.seconds = time.monotonic() - t0
                         raise
                 done += 1
-                if self.config.logging:
-                    # Overall progress (reference M2, index.js:126) — but
-                    # counting FINISHED tables, not started (SURVEY §4.3.4).
-                    logger.info(
-                        "progress: %d/%d tables (%.0f%%)",
-                        done, len(names), 100.0 * done / max(len(names), 1),
-                    )
+                # Overall progress (reference M2, index.js:126) — but
+                # counting FINISHED tables, not started (SURVEY §4.3.4).
+                logger.info(
+                    "progress: %d/%d tables (%.0f%%)",
+                    done, len(names), 100.0 * done / max(len(names), 1),
+                )
         report.seconds = time.monotonic() - t0
         return report
 
@@ -208,29 +202,24 @@ class Engine:
         self, catalog: Catalog, name: str, transform: TransformSpec, sink: Sink
     ) -> TableReport:
         t0 = time.monotonic()
-        if self.config.logging:
-            logger.info("table %s: starting", name)
+        logger.info("table %s: starting", name)
         if self.config.empty_series:
             sink.truncate(name)
         df = catalog.read(name)
         out, obs = transform.apply(df)
         written = sink.write(out, name)
         rep = TableReport(table=name, seconds=time.monotonic() - t0)
-        if obs is not None:
-            stats = obs.get
-            rep.rows_in = stats["rows_in"]
-            rep.rows_written = (
-                written if written >= 0 else rep.rows_in - stats["rows_skipped"]
-            )
-            # rows a counting sink drops itself are skipped too
-            rep.rows_skipped = rep.rows_in - rep.rows_written
-        else:
-            rep.rows_written = written if written >= 0 else 0
-        if self.config.logging:
-            logger.info(
-                "table %s: %d rows in, %d written, %d skipped "
-                "(success %.1f%%, %.0f rows/s)",
-                name, rep.rows_in, rep.rows_written, rep.rows_skipped,
-                rep.success_rate, rep.rows_per_sec,
-            )
+        stats = obs.get
+        rep.rows_in = stats["rows_in"]
+        rep.rows_written = (
+            written if written >= 0 else rep.rows_in - stats["rows_skipped"]
+        )
+        # rows a counting sink drops itself are skipped too
+        rep.rows_skipped = rep.rows_in - rep.rows_written
+        logger.info(
+            "table %s: %d rows in, %d written, %d skipped "
+            "(success %.1f%%, %.0f rows/s)",
+            name, rep.rows_in, rep.rows_written, rep.rows_skipped,
+            rep.success_rate, rep.rows_per_sec,
+        )
         return rep

@@ -30,16 +30,3 @@ def finite_measure(col: Column | str) -> Column:
     """Spark Column: ``col`` when finite, NULL otherwise (NULL stays NULL)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.when(~F.isnan(c) & (F.abs(c) != F.lit(float("inf"))), c)
-
-
-def finite_measure_sql(expr: str) -> str:
-    """Spark-SQL text twin of :func:`finite_measure`."""
-    return (
-        f"CASE WHEN NOT isnan({expr}) "
-        f"AND abs({expr}) != double('Infinity') THEN {expr} END"
-    )
-
-
-def finite_measure_duckdb_sql(expr: str) -> str:
-    """DuckDB twin: isfinite() is NULL-safe (NULL -> NULL -> NULL)."""
-    return f"CASE WHEN isfinite({expr}) THEN {expr} END"

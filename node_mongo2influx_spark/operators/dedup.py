@@ -1071,21 +1071,6 @@ def bloom_fill(geom: dict, n_keys: int | None = None) -> float:
     return 1.0 - math.exp(-geom["k"] * n / geom["m"])
 
 
-def bloom_positions(df: DataFrame, fp_col: str, geom: dict) -> DataFrame:
-    """The filter itself: the DISTINCT set of set-bit positions for the
-    fingerprints in ``df[fp_col]`` — one row per set bit (≤ m rows
-    however large the key set grows), mergeable by set union, and
-    bit-identical across engines (portable FNV-1a + fmix32, exact
-    integer arithmetic; CLAUDE.md: FNV alone is low-byte-biased on
-    sequential keys, the fmix32 finalizer is load-bearing)."""
-    from node_mongo2influx_spark.functions.phash import (
-        fmix32_spark_inline,
-        fnv1a32_spark_sql,
-    )
-
-    return _bloom_positions_from_hashes(_bloom_hashes(df, fp_col), geom)
-
-
 def _bloom_hashes(df: DataFrame, fp_col: str) -> DataFrame:
     """Distinct portable 32-bit hashes of ``df[fp_col]`` — the
     membership-effective key set (positions and classification depend

@@ -57,12 +57,6 @@ class TransformSpec:
         where:    optional SQL predicate applied after the above.
         time_column: the column that must be non-null for a row to survive
                   (reference F1, index.js:235). ``None`` disables the filter.
-        count_skipped: attach one-pass skip accounting (reference M3). The
-                  observe() node must see pre-filter rows, which pins the
-                  filter above the scan; set False when accounting isn't
-                  needed and the time filter becomes scan-pushable — at
-                  100 TB that's the difference between reading and skipping
-                  the null-time row groups.
         batch_fn: optional Arrow-batched transform (mapInPandas). Requires
                   ``batch_schema`` describing the output.
         batch_schema: DDL schema string for ``batch_fn`` output.
@@ -74,7 +68,6 @@ class TransformSpec:
     set: Mapping[str, str] = field(default_factory=dict)
     where: Optional[str] = None
     time_column: Optional[str] = "time"
-    count_skipped: bool = True
     batch_fn: Optional[BatchFn] = None
     batch_schema: Optional[str] = None
 
@@ -102,20 +95,28 @@ class TransformSpec:
             df = df.where(self.where)
         return df
 
-    def apply(self, df: DataFrame) -> tuple[DataFrame, Optional[Observation]]:
+    def valid(self, df: DataFrame) -> DataFrame:
+        """Transform and drop invalid-time rows, with no accounting. With
+        no ``observe()`` node to pin it, the time filter can push into the
+        scan — at 100 TB that's the difference between reading and
+        skipping the null-time row groups."""
+        out = self.compile(df)
+        if self.time_column is not None:
+            out = out.where(F.col(self.time_column).isNotNull())
+        return out
+
+    def apply(self, df: DataFrame) -> tuple[DataFrame, Observation]:
         """Transform, filter invalid-time rows, attach skip accounting.
 
         Returns ``(valid_rows_df, observation)``. After the returned frame is
         consumed by an action, ``observation.get`` yields ``rows_in`` /
         ``rows_skipped`` — the one-pass equivalent of the reference's
         ``rowsSkipped`` counter and success-rate log (index.js:271-272),
-        with no second scan.
+        with no second scan. The observe() node must see pre-filter rows,
+        which pins the filter above the scan; use :meth:`valid` when no
+        accounting is needed.
         """
         out = self.compile(df)
-        if not self.count_skipped:
-            if self.time_column is not None:
-                out = out.where(F.col(self.time_column).isNotNull())
-            return out, None
         obs = Observation()
         if self.time_column is None:
             # No validity filter, but still count rows one-pass so sinks

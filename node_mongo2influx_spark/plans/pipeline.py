@@ -30,10 +30,9 @@ from node_mongo2influx_spark.plans.tables import TABLE_NAMES, load
     "— rename ts→time, keep all fields, drop rows lacking time (S3+T1+T3+F1).",
 )
 def migrate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # count_skipped=False: no accounting consumer here, so the time filter
-    # is left free to push into the scan (Engine.migrate keeps it on).
-    spec = TransformSpec(rename={"ts": "time"}, count_skipped=False)
-    out, _ = spec.apply(load(spark, sf_dir, "events"))
+    # valid(), not apply(): no accounting consumer here, so the time filter
+    # is left free to push into the scan (Engine.migrate counts).
+    out = TransformSpec(rename={"ts": "time"}).valid(load(spark, sf_dir, "events"))
     return out.select("event_id", "time", "user_id", "event_type", "value", "props")
 
 

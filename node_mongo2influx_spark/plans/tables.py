@@ -16,10 +16,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
 def stable_round(col, digits: int = 4):
     """Engine-stable rounding: floor(x·10^d + 0.5)/10^d.
 

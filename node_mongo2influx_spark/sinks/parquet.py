@@ -10,8 +10,9 @@ from __future__ import annotations
 
 import functools
 import pathlib
+import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from node_mongo2influx_spark.sinks.base import Sink
@@ -52,8 +53,6 @@ def _has_data_files(store_dir: pathlib.Path) -> bool:
 def _partition_pred(pcols, tuples):
     """OR-of-AND partition predicate from NATIVE values (a cast() on the
     partition column would defeat partition pruning)."""
-    import functools
-
     return functools.reduce(
         lambda a, b: a | b,
         (
@@ -63,6 +62,62 @@ def _partition_pred(pcols, tuples):
             )
             for t in tuples
         ),
+    )
+
+
+def _collect_parts(df: DataFrame, cols) -> dict[tuple[str, ...], tuple]:
+    """The distinct ``cols`` tuples of ``df``, keyed by their STRING form
+    (read-back types differ from delta types — day=2024-01-01 comes back
+    DATE) but carrying NATIVE values for :func:`_partition_pred`."""
+    return {
+        tuple(str(r[c]) for c in cols): tuple(r[c] for c in cols)
+        for r in df.select(*cols).distinct().collect()
+    }
+
+
+def _non_null(df: DataFrame, cols) -> DataFrame:
+    """Rows of ``df`` whose ``cols`` are all non-null — rows that name a
+    location."""
+    return df.where(
+        functools.reduce(lambda a, b: a & b, (F.col(c).isNotNull() for c in cols))
+    )
+
+
+def _check_order_col(order_col: str, df: DataFrame, stored: bool) -> None:
+    if order_col not in df.columns:
+        raise ValueError(
+            f"order_col {order_col!r} is not in the stored schema — the "
+            "store was written without the version guard; rebuild it (or "
+            "upsert unguarded)"
+            if stored
+            else f"order_col {order_col!r} is not a delta column — the "
+            "guarded merge persists it with the rows and compares "
+            "versions on key collision"
+        )
+
+
+def _latest(
+    delta: DataFrame,
+    keys,
+    order_col: str,
+    stored: DataFrame | None = None,
+    evolve_schema: bool = False,
+) -> DataFrame:
+    """Versioned merge: per key keep the row with the larger
+    ``order_col``; the delta wins ties (__src desc) so a replayed
+    identical delta leaves the store byte-equal."""
+    tagged = delta.withColumn("__src", F.lit(1))
+    if stored is not None:
+        tagged = stored.withColumn("__src", F.lit(0)).unionByName(
+            tagged, allowMissingColumns=evolve_schema
+        )
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(order_col).desc(), F.col("__src").desc()
+    )
+    return (
+        tagged.withColumn("__rk", F.row_number().over(w))
+        .where(F.col("__rk") == 1)
+        .drop("__rk", "__src")
     )
 
 
@@ -165,24 +220,15 @@ class ParquetSink(Sink):
         world per run; at 100 TB an upsert rewrites only the partitions
         the day's delta lands in.
         """
-        if not self.dynamic_overwrite:
-            raise ValueError("upsert requires dynamic_overwrite (and partition_by)")
-        if order_col is not None and order_col not in delta.columns:
-            raise ValueError(
-                f"order_col {order_col!r} is not a delta column — the "
-                "guarded merge persists it with the rows and compares "
-                "versions on key collision"
-            )
+        self._require_dynamic("upsert")
+        if order_col is not None:
+            _check_order_col(order_col, delta, stored=False)
         pcols = list(self.partition_by)
-        touched = [
-            tuple(r[c] for c in pcols)
-            for r in delta.select(*pcols).distinct().collect()
-        ]
+        touched = _collect_parts(delta, pcols)
         if not touched:
             # Empty delta (e.g. an empty CDC micro-batch): nothing to merge
-            # or rewrite — and the reduce() below has no identity element.
+            # or rewrite — and _partition_pred has no identity element.
             return 0
-        target = str(self.path / series)
         # Probe store existence explicitly instead of catching read errors:
         # a TRANSIENT read failure treated as "store absent" would
         # dynamic-overwrite the touched partitions with delta rows only,
@@ -190,40 +236,17 @@ class ParquetSink(Sink):
         # absent store may take the delta-only path; real errors propagate
         # (see _has_data_files for what "exists" means).
         store_dir = self.path / series
-        existing = df_reader(target) if _has_data_files(store_dir) else None
-        if existing is not None:
-            stored = existing.where(_partition_pred(pcols, touched))
+        if _has_data_files(store_dir):
+            stored = df_reader(str(store_dir)).where(
+                _partition_pred(pcols, touched.values())
+            )
             if order_col is None:
-                kept = stored.join(
+                merged = stored.join(
                     delta.select(*keys).distinct(), list(keys), "left_anti"
-                )
-                merged = kept.unionByName(
-                    delta, allowMissingColumns=evolve_schema
-                )
+                ).unionByName(delta, allowMissingColumns=evolve_schema)
             else:
-                if order_col not in stored.columns:
-                    raise ValueError(
-                        f"order_col {order_col!r} is not in the stored "
-                        "schema — the store was written without the "
-                        "version guard; rebuild it (or upsert unguarded)"
-                    )
-                from pyspark.sql import Window
-
-                # versioned merge: per key keep the row with the larger
-                # version; the delta wins ties (__src desc) so a replayed
-                # identical delta leaves the store byte-equal
-                tagged = stored.withColumn("__src", F.lit(0)).unionByName(
-                    delta.withColumn("__src", F.lit(1)),
-                    allowMissingColumns=evolve_schema,
-                )
-                w = Window.partitionBy(*keys).orderBy(
-                    F.col(order_col).desc(), F.col("__src").desc()
-                )
-                merged = (
-                    tagged.withColumn("__rk", F.row_number().over(w))
-                    .where(F.col("__rk") == 1)
-                    .drop("__rk", "__src")
-                )
+                _check_order_col(order_col, stored, stored=True)
+                merged = _latest(delta, keys, order_col, stored, evolve_schema)
             # Materialize BEFORE the overwrite: the merge reads the very
             # partitions dynamic overwrite is about to replace, and Spark
             # (rightly) refuses to overwrite a path still in its read
@@ -232,16 +255,7 @@ class ParquetSink(Sink):
             merged = merged.localCheckpoint(eager=True)
         else:
             merged = delta
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self.partition_by)
-            .parquet(target)
-        )
-        # Invalidate the session's cached file listing for the path:
-        # pre-upsert DataFrames over it would otherwise FAILED_READ_FILE
-        # on the replaced files.
-        delta.sparkSession.catalog.refreshByPath(target)
+        self._rewrite(merged, series)
         return len(touched)
 
     def upsert_guarded_moving(
@@ -294,101 +308,27 @@ class ParquetSink(Sink):
         (no scan), ordered feeds with migrating keys
         ``upsert()+sweep_moved_keys`` (before-image tier, O(delta)).
         """
-        if not self.dynamic_overwrite:
-            raise ValueError(
-                "upsert_guarded_moving requires dynamic_overwrite "
-                "(and partition_by)"
-            )
-        if order_col not in delta.columns:
-            raise ValueError(
-                f"order_col {order_col!r} is not a delta column — the "
-                "guarded merge persists it with the rows and compares "
-                "versions on key collision"
-            )
-        from pyspark.sql import Window
-
-        pcols = list(self.partition_by)
-        claimed = {
-            tuple(str(r[c]) for c in pcols): tuple(r[c] for c in pcols)
-            for r in delta.select(*pcols).distinct().collect()
-        }
-        if not claimed:
+        self._require_dynamic("upsert_guarded_moving")
+        _check_order_col(order_col, delta, stored=False)
+        cand = _collect_parts(delta, list(self.partition_by))
+        if not cand:
             return 0
-        spark = delta.sparkSession
         store_dir = self.path / series
-        target = str(store_dir)
-        w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-            F.col(order_col).desc(), F.col("__src").desc()
-        )
-
-        def _winners(tagged: DataFrame) -> DataFrame:
-            return (
-                tagged.withColumn("__rk", F.row_number().over(w))
-                .where(F.col("__rk") == 1)
-                .drop("__rk", "__src")
-            )
-
         if not _has_data_files(store_dir):
-            merged = _winners(delta.withColumn("__src", F.lit(1)))
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self.partition_by)
-                .parquet(target)
-            )
-            spark.catalog.refreshByPath(target)
-            return len(claimed)
-        existing = df_reader(target)
-        if order_col not in existing.columns:
-            raise ValueError(
-                f"order_col {order_col!r} is not in the stored schema — "
-                "the store was written without the version guard; "
-                "rebuild it (or upsert unguarded)"
-            )
-        # key-location scan: every partition a delta key currently lives
-        # in. No broadcast hint on the key set (a CDC delta is unbounded
-        # — AQE picks the strategy from real sizes).
-        dkeys = delta.select(*keys).distinct()
-        scan_cols = list(dict.fromkeys([*keys, *pcols]))
-        locs = (
-            existing.select(*scan_cols)
-            .join(dkeys, list(keys), "left_semi")
-            .select(*pcols)
-            .distinct()
-            .collect()
-        )
-        cand = dict(claimed)
-        for r in locs:
-            cand[tuple(str(r[c]) for c in pcols)] = tuple(
-                r[c] for c in pcols
-            )
-        stored = existing.where(_partition_pred(pcols, list(cand.values())))
-        tagged = stored.withColumn("__src", F.lit(0)).unionByName(
-            delta.withColumn("__src", F.lit(1)),
-            allowMissingColumns=evolve_schema,
-        )
+            self._rewrite(_latest(delta, keys, order_col), series)
+            return len(cand)
+        existing = df_reader(str(store_dir))
+        _check_order_col(order_col, existing, stored=True)
+        # every partition a delta key currently lives in joins the claimed
+        # ones; the scan runs on the frame already read
+        cand.update(self._locate(existing, delta.select(*keys).distinct(), keys))
+        stored = existing.where(_partition_pred(self.partition_by, cand.values()))
         # one materialization before the overwrite (read-lineage rule);
         # survivors are read off the checkpointed blocks, no recompute
-        merged = _winners(tagged).localCheckpoint(eager=True)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self.partition_by)
-            .parquet(target)
-        )
-        survivors = {
-            tuple(str(r[c]) for c in pcols)
-            for r in merged.select(*pcols).distinct().collect()
-        }
-        import shutil
-
-        for t in set(cand) - survivors:
-            d = store_dir
-            for c, v in zip(pcols, t):
-                d = d / f"{c}={v}"
-            if d.exists():
-                shutil.rmtree(d)
-        spark.catalog.refreshByPath(target)
+        merged = _latest(
+            delta, keys, order_col, stored, evolve_schema
+        ).localCheckpoint(eager=True)
+        self._rewrite(merged, series, cand)
         return len(cand)
 
     def sweep_moved_keys(
@@ -435,119 +375,51 @@ class ParquetSink(Sink):
         ``str()`` (simple scalar partition values, the layout this sink
         writes).
         """
-        if not self.dynamic_overwrite:
-            raise ValueError(
-                "sweep_moved_keys requires dynamic_overwrite (and partition_by)"
-            )
+        self._require_dynamic("sweep_moved_keys")
         pcols = list(self.partition_by)
         store_dir = self.path / series
         if not _has_data_files(store_dir):
             return 0
-        target = str(store_dir)
-        spark = delta.sparkSession
         # the delta's OWN partition footprint was already cleaned by
         # upsert's left_anti — sweep only partitions outside it
-        new_parts = {
-            tuple(str(r[c]) for c in pcols)
-            for r in delta.select(*pcols).distinct().collect()
-        }
+        new_parts = _collect_parts(delta, pcols)
         dkeys = delta.select(*keys).distinct()
-        # partition tuples keyed by their STRING form (read-back types
-        # differ from delta types — day=2024-01-01 comes back DATE) but
-        # carrying NATIVE values for the pruning predicate: a cast() on
-        # the partition column in the filter would defeat partition
-        # pruning, turning the O(stale partitions) rewrite into a scan.
         if prev_cols is not None:
             if len(prev_cols) != len(pcols):
-                raise ValueError(
-                    "prev_cols must align 1:1 with partition_by"
-                )
+                raise ValueError("prev_cols must align 1:1 with partition_by")
             prev_src = prev_source if prev_source is not None else delta
-            cand = {
-                tuple(str(r[c]) for c in prev_cols): tuple(
-                    r[c] for c in prev_cols
-                )
-                for r in prev_src.select(*prev_cols).distinct().collect()
-                if all(r[c] is not None for c in prev_cols)
-            }
+            cand = _collect_parts(_non_null(prev_src, prev_cols), prev_cols)
         else:
-            # column-pruned key-location scan; NO broadcast hint on the
-            # key set — a CDC delta is unbounded (an availableNow backlog
-            # batch can carry millions of keys), so AQE picks the join
-            # strategy from real sizes, matching upsert's own left_anti.
-            # dict.fromkeys dedups key∩partition column overlap (a
-            # partition column may legally be part of the key).
-            scan_cols = list(dict.fromkeys([*keys, *pcols]))
-            locs = (
-                df_reader(target)
-                .select(*scan_cols)
-                .join(dkeys, list(keys), "left_semi")
-                .select(*pcols)
-                .distinct()
-                .collect()
-            )
-            cand = {
-                tuple(str(r[c]) for c in pcols): tuple(r[c] for c in pcols)
-                for r in locs
-            }
-        def on_disk(t: tuple[str, ...]) -> bool:
-            d = store_dir
-            for c, v in zip(pcols, t):
-                d = d / f"{c}={v}"
-            return d.exists()
-
-        # drop before-image partitions already swept (or never written):
-        # keeps the replay a true no-op and the return value honest
-        stale = {
-            t: cand[t] for t in sorted(set(cand) - new_parts) if on_disk(t)
-        }
+            cand = self._locate(df_reader(str(store_dir)), dkeys, keys)
         return self._drop_keys_from_partitions(
-            df_reader, spark, dkeys, keys, series, stale
+            df_reader, dkeys, keys, series, cand, exclude=new_parts
         )
 
     def _drop_keys_from_partitions(
-        self, df_reader, spark, dkeys: DataFrame, keys, series: str,
-        stale: dict[tuple[str, ...], tuple],
+        self, df_reader, dkeys: DataFrame, keys, series: str,
+        cand: dict[tuple[str, ...], tuple], exclude=(),
     ) -> int:
         """Shared tail of sweep_moved_keys / delete_keys: rewrite the
-        ``stale`` partitions (str-form → native-value tuples) dropping
-        every key in ``dkeys``; partitions left empty are removed as
-        directories. Returns len(stale)."""
+        ``cand`` partitions (str-form → native-value tuples) outside
+        ``exclude`` that exist on disk, dropping every key in ``dkeys``;
+        partitions left empty are removed as directories. Returns the
+        number of partitions rewritten/dropped."""
+        # skip candidates already swept (or never written): keeps the
+        # replay a true no-op and the return value honest
+        stale = {
+            t: cand[t]
+            for t in sorted(set(cand) - set(exclude))
+            if self._part_dir(series, t).exists()
+        }
         if not stale:
             return 0
-        import shutil
-
-        pcols = list(self.partition_by)
-        store_dir = self.path / series
-        target = str(store_dir)
         kept = (
-            df_reader(target)
-            .where(_partition_pred(pcols, list(stale.values())))
+            df_reader(str(self.path / series))
+            .where(_partition_pred(self.partition_by, stale.values()))
             .join(dkeys, list(keys), "left_anti")
             .localCheckpoint(eager=True)  # lineage reads what we rewrite
         )
-        survivors = {
-            tuple(str(r[c]) for c in pcols)
-            for r in kept.select(*pcols).distinct().collect()
-        }
-        if survivors:
-            (
-                kept.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self.partition_by)
-                .parquet(target)
-            )
-        # partitions with no survivors: dynamic overwrite writes nothing
-        # for them — drop the directories (retention_sweep's mechanism)
-        for t in stale:
-            if t in survivors:
-                continue
-            d = store_dir
-            for c, v in zip(pcols, t):
-                d = d / f"{c}={v}"
-            if d.exists():
-                shutil.rmtree(d)
-        spark.catalog.refreshByPath(target)
+        self._rewrite(kept, series, stale)
         return len(stale)
 
     def delete_keys(
@@ -593,16 +465,11 @@ class ParquetSink(Sink):
         nothing to drop, or rewrites identical rows). Returns the number
         of partitions rewritten/dropped.
         """
-        if not self.dynamic_overwrite:
-            raise ValueError(
-                "delete_keys requires dynamic_overwrite (and partition_by)"
-            )
+        self._require_dynamic("delete_keys")
         pcols = list(self.partition_by)
         store_dir = self.path / series
         if not _has_data_files(store_dir):
             return 0
-        target = str(store_dir)
-        spark = deletes.sparkSession
         dkeys = deletes.select(*keys).distinct()
         src = (
             loc_source.join(dkeys, list(keys), "left_semi")
@@ -613,15 +480,8 @@ class ParquetSink(Sink):
         located: list[DataFrame] = []
 
         def _collect_named(cols: list[str]) -> None:
-            named = src.where(
-                functools.reduce(
-                    lambda a, b: a & b, (F.col(c).isNotNull() for c in cols)
-                )
-            )
-            for r in named.select(*cols).distinct().collect():
-                cand[tuple(str(r[c]) for c in cols)] = tuple(
-                    r[c] for c in cols
-                )
+            named = _non_null(src, cols)
+            cand.update(_collect_parts(named, cols))
             located.append(named.select(*keys).distinct())
 
         if all(c in src.columns for c in pcols):
@@ -638,29 +498,59 @@ class ParquetSink(Sink):
         if force_scan:
             missing = dkeys
         if force_scan or not located or missing.limit(1).count() > 0:
-            scan_cols = list(dict.fromkeys([*keys, *pcols]))
-            for r in (
-                df_reader(target)
-                .select(*scan_cols)
-                .join(missing, list(keys), "left_semi")
-                .select(*pcols)
-                .distinct()
-                .collect()
-            ):
-                cand[tuple(str(r[c]) for c in pcols)] = tuple(
-                    r[c] for c in pcols
-                )
+            cand.update(self._locate(df_reader(str(store_dir)), missing, keys))
+        return self._drop_keys_from_partitions(df_reader, dkeys, keys, series, cand)
 
-        def on_disk(t: tuple[str, ...]) -> bool:
-            d = store_dir
-            for c, v in zip(pcols, t):
-                d = d / f"{c}={v}"
-            return d.exists()
+    def _require_dynamic(self, op: str) -> None:
+        if not self.dynamic_overwrite:
+            raise ValueError(f"{op} requires dynamic_overwrite (and partition_by)")
 
-        stale = {t: cand[t] for t in sorted(cand) if on_disk(t)}
-        return self._drop_keys_from_partitions(
-            df_reader, spark, dkeys, keys, series, stale
+    def _part_dir(self, series: str, t: tuple[str, ...]) -> pathlib.Path:
+        """The directory of the partition whose values render as ``t``."""
+        d = self.path / series
+        for c, v in zip(self.partition_by, t):
+            d = d / f"{c}={v}"
+        return d
+
+    def _locate(
+        self, existing: DataFrame, dkeys: DataFrame, keys
+    ) -> dict[tuple[str, ...], tuple]:
+        """Column-pruned key-location scan: every partition of ``existing``
+        holding a key in ``dkeys``. NO broadcast hint on the key set — a
+        CDC delta is unbounded (an availableNow backlog batch can carry
+        millions of keys), so AQE picks the join strategy from real
+        sizes, matching upsert's own left_anti. dict.fromkeys dedups
+        key∩partition column overlap (a partition column may legally be
+        part of the key)."""
+        scan_cols = list(dict.fromkeys([*keys, *self.partition_by]))
+        return _collect_parts(
+            existing.select(*scan_cols).join(dkeys, list(keys), "left_semi"),
+            self.partition_by,
         )
+
+    def _rewrite(self, frame: DataFrame, series: str, cand=()) -> None:
+        """Dynamic-overwrite ``frame`` into the series; each ``cand``
+        partition (string form) the frame holds no rows for is removed as
+        a directory — dynamic overwrite cannot express an emptied
+        partition, and writes nothing for it (retention_sweep's
+        mechanism). Without ``cand`` there is no survivor probe. Ends by
+        invalidating the session's cached file listing for the path:
+        DataFrames over it from before the rewrite would otherwise
+        FAILED_READ_FILE on the replaced files."""
+        target = str(self.path / series)
+        survivors = set(_collect_parts(frame, self.partition_by)) if cand else set()
+        if survivors or not cand:
+            (
+                frame.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*self.partition_by)
+                .parquet(target)
+            )
+        for t in set(cand) - survivors:
+            d = self._part_dir(series, t)
+            if d.exists():
+                shutil.rmtree(d)
+        frame.sparkSession.catalog.refreshByPath(target)
 
     def retention_sweep(self, series: str, keep_from: str) -> list[str]:
         """Drop whole partitions older than ``keep_from`` — the InfluxDB

@@ -21,7 +21,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 
-def is_system_table(name: str, prefixes: Sequence[str]) -> bool:
+#: Tables whose name starts with one of these prefixes are not migrated.
+SYSTEM_PREFIXES = ("system.", "system_")
+
+
+def is_system_table(name: str, prefixes: Sequence[str] = SYSTEM_PREFIXES) -> bool:
     """Prefix-based system-table filter (deliberate fix of index.js:298's
     substring match, which would skip a user table named "ecosystem")."""
     return any(name.startswith(p) for p in prefixes)

@@ -21,6 +21,7 @@ dedup key for effectively-once, as in batch (sinks/base.py).
 
 from __future__ import annotations
 
+import pathlib
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from node_mongo2influx_spark.operators.transform import TransformSpec
 from node_mongo2influx_spark.sinks.base import Sink
+from node_mongo2influx_spark.sinks.parquet import _has_data_files
 
 
 def read_stream(
@@ -58,13 +60,11 @@ def migrate_stream(
     """Continuous migrate: transform + time-filter each micro-batch, deliver
     through the batch sink adapter (foreachBatch).
 
-    ``transform.compile`` (not ``apply``) is used — streaming plans can't
-    carry ``observe`` the same way; per-batch counts are derived in the
-    batch function instead.
+    ``transform.valid`` (not ``apply``) is used — streaming plans can't
+    carry ``observe`` the same way, so null-time rows are dropped without
+    accounting and no per-batch counts are reported.
     """
-    out = transform.compile(source)
-    if transform.time_column:
-        out = out.where(F.col(transform.time_column).isNotNull())
+    out = transform.valid(source)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         sink.write(batch_df, series)
@@ -765,23 +765,11 @@ def ann_index_maintenance_stream(
     )
 
 
-def _store_is_empty(store_dir: str) -> bool:
-    """The CLAUDE.md r6 store-reader rule, shared by the partial-log
-    readers below: a directory holding only _SUCCESS/metadata (an
-    all-empty first batch, compaction debris) is UNREADABLE
-    (UNABLE_TO_INFER_SCHEMA) and must read as EMPTY, not wedge."""
-    import pathlib
-
-    from node_mongo2influx_spark.sinks.parquet import _has_data_files
-
-    return not _has_data_files(pathlib.Path(store_dir))
-
-
 def read_drift_log(spark, log_dir: str) -> DataFrame:
     """The drift log written by :func:`ann_index_maintenance_stream`
     (``drift_log_dir``): one row per live-key batch. A data-file-less
     store reads as EMPTY (the shared store-reader rule)."""
-    if _store_is_empty(log_dir):
+    if not _has_data_files(pathlib.Path(log_dir)):
         return spark.createDataFrame(
             [],
             "base_rel_err double, delta_rel_err double, ratio double, "
@@ -884,7 +872,7 @@ def read_rollup_store(
     events, however the batches sliced them. A data-file-less store
     reads as EMPTY (``key_type`` pins the key column's type on that
     path — parquet footers can't supply it when there are none)."""
-    if _store_is_empty(store_dir):
+    if not _has_data_files(pathlib.Path(store_dir)):
         return spark.createDataFrame(
             [],
             f"{key_col} {key_type}, bucket timestamp, n long, "
@@ -959,7 +947,7 @@ def read_distinct_store(
     from) so the empty frame's schema matches a populated store's."""
     from node_mongo2influx_spark.functions.hll import hll_estimate
 
-    if _store_is_empty(store_dir):
+    if not _has_data_files(pathlib.Path(store_dir)):
         return spark.createDataFrame(
             [],
             f"{key_col} {key_type}, used_buckets long, zero_buckets long, "
@@ -1024,7 +1012,7 @@ def read_integrity_store(spark, store_dir: str) -> DataFrame:
     store with no data files (the r6 store-reader rule)."""
     from node_mongo2influx_spark.operators import integrity
 
-    if _store_is_empty(store_dir):
+    if not _has_data_files(pathlib.Path(store_dir)):
         return spark.createDataFrame([], integrity.CENSUS_FIELDS)
     per_id = (
         spark.read.parquet(store_dir)

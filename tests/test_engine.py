@@ -138,8 +138,56 @@ def test_influx_transport_truncate(engine, sf_dir):
 
 
 def test_config_merge_explicit_falsy_wins(engine):
-    cfg = engine.config.merged(logging=False, table_concurrency=1)
-    assert cfg.logging is False
+    from node_mongo2influx_spark.config import EngineConfig
+
+    cfg = EngineConfig(empty_series=True).merged(
+        empty_series=False, table_concurrency=1
+    )
+    assert cfg.empty_series is False
     assert cfg.table_concurrency == 1
     with pytest.raises(ValueError):
         engine.config.merged(nonexistent_key=1)
+
+
+def _sink_count(kind: str, sink, spark, out) -> int:
+    if kind == "memory":
+        return len(sink.series["events"])
+    if kind == "parquet":
+        return spark.read.parquet(str(out / "events")).count()
+    return sum(
+        len(f.read_text().splitlines()) for f in (out / "events").glob("*.lp")
+    )
+
+
+@pytest.mark.parametrize("time_column", ["time", None])
+@pytest.mark.parametrize("kind", ["memory", "parquet", "influx"])
+def test_migrate_contract_every_sink(engine, catalog, tmp_path, kind, time_column):
+    # Per table rows_in = rows_written + rows_skipped, and the sink holds
+    # exactly rows_written rows (or lines). Null-time rows are skipped by
+    # the time filter, or, with no filter, by the Influx renderer alone.
+    from node_mongo2influx_spark.sinks.influx import (
+        InfluxLineProtocolSink,
+        SpoolTransport,
+    )
+
+    out = tmp_path / "out"
+    sink = {
+        "memory": MemorySink,
+        "parquet": lambda: ParquetSink(str(out)),
+        "influx": lambda: InfluxLineProtocolSink(SpoolTransport(str(out))),
+    }[kind]()
+    spec = TransformSpec(
+        rename={"ts": "time"},
+        set={"time": "CASE WHEN event_type = 'error' THEN NULL ELSE time END"},
+        time_column=time_column,
+    )
+    n_null = spec.compile(catalog.read("events")).where("time IS NULL").count()
+    assert n_null > 0
+    report = engine.migrate(catalog, spec, sink, tables=["events"])
+    assert not report.failed
+    [tr] = report.tables
+    assert tr.rows_in == 1000
+    assert tr.rows_in == tr.rows_written + tr.rows_skipped
+    drops_null = time_column is not None or kind == "influx"
+    assert tr.rows_skipped == (n_null if drops_null else 0)
+    assert _sink_count(kind, sink, engine.spark, out) == tr.rows_written

@@ -22,7 +22,6 @@ def specs(draw):
         drop=drop,
         where=where,
         time_column="time" if rename_time else "ts",
-        count_skipped=True,
     )
 
 
