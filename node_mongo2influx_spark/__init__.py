@@ -17,6 +17,9 @@ Entry points:
 from node_mongo2influx_spark.config import EngineConfig
 from node_mongo2influx_spark.engine import Engine, MigrationReport, TableReport
 from node_mongo2influx_spark.operators.transform import TransformSpec
+from node_mongo2influx_spark.worker_zipimport import install as _install_zipimport
+
+_install_zipimport()
 
 __all__ = [
     "Engine",

@@ -28,10 +28,11 @@ per line) — maps onto stock Spark:
   the same way — a truthy `time` is the only structural requirement,
   applied later by TransformSpec).
 * **Schema** is inferred on the driver by :func:`infer_schema` from a
-  sample of leading documents (first ``_SCHEMA_SAMPLE_LINES`` non-blank
-  lines of the first file — union of keys; conflicting types widen to
-  string, the schemaless-safe choice). A stream reader may pass its own
-  ``schema(...)`` instead.
+  sample of leading documents (the first ``_SCHEMA_SAMPLE_LINES``
+  non-blank lines, read across the files in order — union of keys;
+  conflicting types widen to string, the schemaless-safe choice). A later
+  document whose value does not fit fails the read, naming the column and
+  the document. A stream reader may pass its own ``schema(...)`` instead.
 
 Usage::
 
@@ -61,9 +62,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-#: Leading non-blank lines of the first spool file examined by schema
-#: inference. Sparse/optional fields are routine in mongoexport dumps —
-#: one document is not a schema.
+#: Leading non-blank lines of the spool files (in sorted order) examined
+#: by schema inference. Sparse/optional fields are routine in mongoexport
+#: dumps — one document is not a schema.
 _SCHEMA_SAMPLE_LINES = 100
 
 
@@ -225,47 +226,51 @@ def spool_files(path) -> list[str]:
     )
 
 
+def _nonblank_lines(files: list[str]) -> Iterator[tuple[str, int, str]]:
+    for path in files:
+        with open(path, "r", encoding="utf-8") as fh:
+            for line_no, line in enumerate(fh, 1):
+                line = line.strip()
+                if line:
+                    yield path, line_no, line
+
+
 def infer_schema(files: list[str]) -> StructType:
     """Infer from a sample: union of keys over the first
-    ``_SCHEMA_SAMPLE_LINES`` non-blank documents of the first file; the
-    first non-null occurrence types a field, a later conflicting type
-    widens it to string."""
+    ``_SCHEMA_SAMPLE_LINES`` non-blank documents, reading the files in
+    order until that many are seen; the first non-null occurrence types a
+    field, a later conflicting type widens it to string."""
     if not files:
         raise FileNotFoundError("no spool files (*.json, *.jsonl, *.ndjson)")
-    first = files[0]
     names: list[str] = []  # insertion order = column order
     types: dict[str, DataType | None] = {}
     n_docs = 0
-    with open(first, "r", encoding="utf-8") as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
+    for path, line_no, line in _nonblank_lines(files):
+        try:
+            doc = json.loads(line)
+        except json.JSONDecodeError as exc:
+            raise ValueError(
+                f"spool file {path} line {line_no} is not valid JSON: {exc}"
+            ) from exc
+        n_docs += 1
+        for k, v in doc.items():
+            if k not in types:
+                names.append(k)
+                types[k] = None
+            t = None if v is None else _infer_type(v)
+            if t is None:
                 continue
-            try:
-                doc = json.loads(line)
-            except json.JSONDecodeError as exc:
-                raise ValueError(
-                    f"spool file {first} line {n_docs + 1} is not valid "
-                    f"JSON: {exc}"
-                ) from exc
-            n_docs += 1
-            for k, v in doc.items():
-                if k not in types:
-                    names.append(k)
-                    types[k] = None
-                t = None if v is None else _infer_type(v)
-                if t is None:
-                    continue
-                if types[k] is None:
-                    types[k] = t
-                elif type(types[k]) is not type(t):
-                    types[k] = StringType()  # mixed types: widen
-            if n_docs >= _SCHEMA_SAMPLE_LINES:
-                break
+            if types[k] is None:
+                types[k] = t
+            elif type(types[k]) is not type(t):
+                types[k] = StringType()  # mixed types: widen
+        if n_docs >= _SCHEMA_SAMPLE_LINES:
+            break
     if n_docs == 0:
         raise ValueError(
-            f"cannot infer schema: spool file {first} has no documents "
-            "(pass an explicit .schema(...) or remove the empty file)"
+            f"cannot infer schema: no spool file in "
+            f"{pathlib.Path(files[0]).parent} has a document (pass an "
+            "explicit .schema(...) or remove the empty files)"
         )
     return StructType(
         [StructField(k, types[k] or StringType(), nullable=True) for k in names]
@@ -293,15 +298,40 @@ def arrow_decoder(schema: StructType):
         import pyarrow as pa
 
         for batch in batches:
-            rows = list(_rows_from_lines(batch.column(0).to_pylist(), fields))
+            lines = batch.column(0).to_pylist()
+            rows = list(_rows_from_lines(lines, fields))
             if rows:
                 columns = zip(*rows)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, type=t) for c, t in zip(columns, arrow_schema.types)],
-                    schema=arrow_schema,
-                )
+                try:
+                    arrays = [
+                        pa.array(c, type=t)
+                        for c, t in zip(columns, arrow_schema.types)
+                    ]
+                except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError) as exc:
+                    raise _type_mismatch(lines, rows, schema, arrow_schema) from exc
+                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return decode
+
+
+def _type_mismatch(lines, rows, schema: StructType, arrow_schema) -> Exception:
+    """The error path of :func:`arrow_decoder`: name the first value that
+    does not fit its column's inferred type, and its document. A mismatch
+    fails the read rather than widening the column."""
+    import pyarrow as pa
+
+    docs = [line.strip() for line in lines if line.strip()]
+    for field, t, column in zip(schema.fields, arrow_schema.types, zip(*rows)):
+        for doc, v in zip(docs, column):
+            try:
+                pa.array([v], type=t)
+            except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+                return ValueError(
+                    f"spool column {field.name!r} was inferred as "
+                    f"{field.dataType.simpleString()}, but a document holds "
+                    f"{v!r}: {doc}"
+                )
+    return ValueError("spool documents do not fit the inferred schema")
 
 
 class MongoSpoolDataSource(DataSource):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from node_mongo2influx_spark.plans.tables import load
 from node_mongo2influx_spark.sources.catalog import DirectoryCatalog, SpoolCatalog
 from node_mongo2influx_spark.sources.schema_merge import (
@@ -322,6 +324,38 @@ def test_mongospool_schema_empty_file_clear_error(tmp_path):
         raise AssertionError("expected ValueError")
     except ValueError as exc:
         assert "cannot infer schema" in str(exc)
+
+
+def test_mongospool_schema_reads_past_empty_first_file(spark, tmp_path):
+    import json
+
+    d = tmp_path / "late"
+    d.mkdir()
+    (d / "a.jsonl").write_text("")
+    (d / "b.jsonl").write_text(
+        "".join(json.dumps({"k": i, "s": f"v{i}"}) + "\n" for i in range(3))
+    )
+    df = SpoolCatalog(spark, str(tmp_path)).read("late")
+    assert sorted((r["k"], r["s"]) for r in df.collect()) == [
+        (0, "v0"), (1, "v1"), (2, "v2")
+    ]
+
+
+def test_mongospool_late_type_mismatch_names_column(spark, tmp_path):
+    # Documents past the schema sample whose value does not fit the
+    # inferred type fail the read with the column, type and document named.
+    import json
+
+    d = tmp_path / "drift"
+    d.mkdir()
+    docs = [{"n": i, "s": "x"} for i in range(120)] + [{"n": "oops", "s": "y"}]
+    (d / "a.jsonl").write_text("".join(json.dumps(doc) + "\n" for doc in docs))
+    df = SpoolCatalog(spark, str(tmp_path)).read("drift")
+    with pytest.raises(Exception) as info:
+        df.collect()
+    msg = str(info.value)
+    assert "spool column 'n' was inferred as bigint" in msg
+    assert "'oops'" in msg and '{"n": "oops", "s": "y"}' in msg
 
 
 def test_mongospool_stream_offsets_track_file_growth(tmp_path):
