@@ -807,42 +807,6 @@ def _cell_partial_sums(base: DataFrame, centroids_unit: np.ndarray) -> DataFrame
     return base.mapInPandas(kernel, schema="cell int, n long, s array<double>")
 
 
-def _assign_cells(
-    base: DataFrame,
-    centroids_unit: np.ndarray,
-    tl_index: tuple[np.ndarray, list[np.ndarray]] | None = None,
-) -> DataFrame:
-    """(vid, cell): nearest-centroid assignment by cosine, one matmul per
-    Arrow batch. Ids only — nothing data-sized rides the candidate join.
-    ``tl_index`` routes through the two-level coarse quantizer; the
-    CALLER decides, because corpus assignment and query probing must use
-    the SAME quantizer — mismatched routing silently loses neighbors
-    whose routed cell isn't in the flat probe set."""
-    cents = centroids_unit  # closure capture; k × dim, broadcast with the task
-    if tl_index is None and len(cents) <= _SQL_ASSIGN_MAX_CELLS:
-        # r12: flat argmax over a small centroid set — pure expression
-        # work, no Python stage (see _cells_table_sql; argmax ties take
-        # the lowest cell id in both spellings).
-        return _cells_table_sql(base, cents, "vid", "vec", 1, with_vec=False)
-    base = _spread_kernel_input(base)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            pdf = _nn(pdf)
-            mat = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-            if not len(mat):
-                continue
-            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            cell = _top_cells(mat / norms, cents, 1, tl_index)[:, 0].astype(
-                np.int32
-            )
-            yield pd.DataFrame({"vid": pdf["vid"], "cell": cell})
-
-    return base.mapInPandas(kernel, schema="vid long, cell int")
-
-
 def knn_cosine_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -891,55 +855,13 @@ def knn_cosine_ivf(
     # routed cell may not be in a flat probe set).
     tl_index = two_level_index(cents) if len(cents) >= 128 else None
 
-    c = _assign_cells(
-        corpus.selectExpr(
-            f"`{id_col}` AS vid",
-            f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS vec",
-        ),
-        cents,
-        tl_index,
+    c = _cells_table(
+        _spread_kernel_input(corpus), cents, id_col, vec_col, 1, False, tl_index
     ).select(F.col("vid").alias("neighbor_id"), "cell")
-
-    n_probe_eff = min(n_probe, len(cents))
-
-    if tl_index is None and len(cents) <= _SQL_ASSIGN_MAX_CELLS:
-        # r12: the n_probe-nearest-cells probe over a small centroid set
-        # is pure expression work — no Python stage (see
-        # _cells_table_sql); SAME quantizer spelling as _assign_cells'
-        # fast path, so corpus and query routing stay co-located.
-        q = _cells_table_sql(
-            queries, cents, id_col, vec_col, n_probe_eff, with_vec=False
-        ).selectExpr("vid AS query_id", "cell")
-    else:
-
-        def probe_kernel(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                pdf = _nn(pdf)
-                mat = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-                if not len(mat):
-                    continue
-                norms = np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-                )
-                # n_probe nearest cells per query, exploded pandas-side
-                # (the probe table is queries × n_probe rows —
-                # broadcast-sized); SAME routing as the corpus side.
-                top = _top_cells(mat / norms, cents, n_probe_eff, tl_index)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(
-                            pdf["vid"].to_numpy(), n_probe_eff
-                        ),
-                        "cell": top.ravel().astype(np.int32),
-                    }
-                )
-
-        q = queries.selectExpr(
-            f"`{id_col}` AS vid",
-            f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS vec",
-        ).mapInPandas(probe_kernel, schema="query_id long, cell int")
+    # the probe table is queries × n_probe rows — broadcast-sized, unspread
+    q = _cells_table(
+        queries, cents, id_col, vec_col, n_probe, False, tl_index
+    ).select(F.col("vid").alias("query_id"), "cell")
 
     cand = (
         c.join(F.broadcast(q) if bounded else q, "cell")
@@ -1001,19 +923,20 @@ def _top_cells(
     flat is 0.60 / 0.73 / 0.76 / 0.82 (of flat's 0.86) at p1 2/3/4/6 —
     4 keeps ~88% of flat's recall at a cost that still shrinks
     relative to flat as n_cells grows (k1 + p1·n_cells/k1 vs n_cells).
-    Returns (n, n_assign) cell ids; rows whose probed children are
-    fewer than n_assign pad with their best cell (duplicates are
-    harmless — the candidate join dedups)."""
+    Returns (n, n_assign) cell ids, best first; score ties rank by
+    ascending cell id in both branches (as ``argmax`` does). Rows whose
+    probed children are fewer than n_assign pad with their best cell
+    (duplicates are harmless — the candidate join dedups)."""
     n = len(unit_rows)
     if tl_index is None:
         sims = unit_rows @ cents.T
         if n_assign == 1:
             return sims.argmax(axis=1)[:, None]
-        return np.argsort(-sims, axis=1)[:, :n_assign]
+        return np.argsort(-sims, axis=1, kind="stable")[:, :n_assign]
     c1, children = tl_index
     p1 = min(p1, len(c1))
     s1 = unit_rows @ c1.T
-    top1 = np.argsort(-s1, axis=1)[:, :p1]
+    top1 = np.argsort(-s1, axis=1, kind="stable")[:, :p1]
     rows_acc, cells_acc, sims_acc = [], [], []
     for g in range(len(c1)):
         mask = (top1 == g).any(axis=1)
@@ -1028,7 +951,7 @@ def _top_cells(
     rows = np.concatenate(rows_acc)
     cells = np.concatenate(cells_acc)
     sims = np.concatenate(sims_acc)
-    order = np.lexsort((-sims, rows))
+    order = np.lexsort((cells, -sims, rows))
     rows, cells = rows[order], cells[order]
     # first n_assign per row group (rows sorted, sims descending inside)
     starts = np.searchsorted(rows, np.arange(n))
@@ -1047,6 +970,50 @@ def _top_cells(
             )
         out[i] = sel
     return out
+
+
+def _cells_table(
+    df: DataFrame,
+    cents: np.ndarray,
+    id_col: str,
+    vec_col: str,
+    n: int,
+    with_vec: bool,
+    tl_index: tuple[np.ndarray, list[np.ndarray]] | None,
+) -> DataFrame:
+    """(vid, cell[, vec]): each row repeated for its ``n`` nearest IVF
+    cells by cosine, through :func:`_top_cells` — the one coarse
+    quantizer every IVF assignment and probe uses, so corpus and query
+    sides route identically. One matmul per Arrow batch; null vectors
+    have no cell. ``tl_index`` selects two-level routing; the CALLER
+    decides, because both sides must use the same quantizer. The
+    kernel's parallelism is ``df``'s partitioning: corpus-sized callers
+    pass it through :func:`_spread_kernel_input` first."""
+    n = min(n, len(cents))
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            pdf = _nn(pdf)
+            mat = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
+            if not len(mat):
+                continue
+            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+            top = _top_cells(mat / norms, cents, n, tl_index)
+            out = {
+                "vid": np.repeat(pdf["vid"].to_numpy(), n),
+                "cell": top.ravel().astype(np.int32),
+            }
+            if with_vec:
+                out["vec"] = np.repeat(pdf["vec"].to_numpy(), n)
+            yield pd.DataFrame(out)
+
+    schema = "vid long, cell int" + (", vec array<double>" if with_vec else "")
+    return df.selectExpr(
+        f"`{id_col}` AS vid",
+        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS vec",
+    ).mapInPandas(kernel, schema=schema)
 
 
 def _estimate_oversized_cells(
@@ -1397,55 +1364,16 @@ def cosine_pairs_ivf(
         two_level = len(cents) >= 128
     tl_index = two_level_index(cents) if two_level else None
     fused = pair_backend == "fused"
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            pdf = _nn(pdf)
-            mat = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-            if not len(mat):
-                continue
-            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            top = _top_cells(mat / norms, cents, n_assign_eff, tl_index)
-            out = {
-                "vid": np.repeat(pdf["vid"].to_numpy(), n_assign_eff),
-                "cell": top.ravel().astype(np.int32),
-            }
-            if fused:
-                # the fused backend scores inside the cell groups, so the
-                # vector must ride the (single) cell shuffle
-                out["vec"] = np.repeat(
-                    pdf["vec"].to_numpy(), n_assign_eff
-                )
-            yield pd.DataFrame(out)
-
     # Spread the Arrow kernel if (and only if) the source is narrow: a
     # single-split parquet table would run the whole assignment matmul in
-    # ONE Python worker (same failure class as the entity-resolution
-    # single-core scoring fix), while a 100 TB scan already has hundreds
-    # of splits and must NOT gain a full-corpus shuffle here.
-    cell_schema = (
-        "vid long, cell int, vec array<double>" if fused else "vid long, cell int"
+    # ONE Python worker, while a 100 TB scan already has hundreds of
+    # splits and must NOT gain a full-corpus shuffle here. The fused
+    # backend scores inside the cell groups, so the vector rides the
+    # (single) cell shuffle.
+    cellt = _cells_table(
+        _spread_kernel_input(df), cents, id_col, vec_col, n_assign_eff, fused,
+        tl_index,
     )
-    if tl_index is None and len(cents) <= _SQL_ASSIGN_MAX_CELLS:
-        # r12 (the VERDICT r11 #1 class): flat assignment over a small
-        # centroid set is pure expression work — no Python stage, no
-        # spread exchange (see _cells_table_sql; row-equality vs the
-        # kernel verified at all three SFs + hostile fixtures). The
-        # two-level route and wide centroid sets keep the kernel: the
-        # routed gather is genuine bulk linear algebra, and past 16
-        # cells numpy's argsort tie order is not reproducible in SQL.
-        cellt = _cells_table_sql(
-            df, cents, id_col, vec_col, n_assign_eff, with_vec=fused
-        )
-    else:
-        cellt = _spread_kernel_input(
-            df.selectExpr(
-                f"`{id_col}` AS vid",
-                f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS vec",
-            )
-        ).mapInPandas(kernel, schema=cell_schema)
 
     if fused:
         oversized = None
@@ -2056,8 +1984,7 @@ def _ivfpq_candidates(
     qids = np.asarray([r["qid"] for r in qrows], dtype=np.int64)
     qmat = np.asarray([r["qv"] for r in qrows], dtype=np.float64)
     qnorm = np.maximum(np.linalg.norm(qmat, axis=1), 1e-12)
-    qcos = (qmat / qnorm[:, None]) @ cents.T          # (q, n_cells)
-    probed = np.argsort(-qcos, axis=1)[:, :n_probe]    # (q, n_probe)
+    probed = _top_cells(qmat / qnorm[:, None], cents, n_probe, None)
     anc = anchors
     bk = books
     topn = short
@@ -2197,85 +2124,6 @@ def knn_cosine_ivfpq_batch(
     )
 
 
-#: the cosine-argmax assignment can be spelled as JVM expressions only
-#: while numpy's argsort tie order is reproducible: np.argsort uses
-#: insertion sort (stable) for arrays up to 16 elements, so score ties
-#: between distinct cells rank by ascending cell id in BOTH spellings;
-#: past 16 cells introsort's tie order is arbitrary and the kernel
-#: spelling stays authoritative.
-_SQL_ASSIGN_MAX_CELLS = 16
-
-
-def _cells_table_sql(
-    df: DataFrame,
-    cents: np.ndarray,
-    id_col: str,
-    vec_col: str,
-    n_assign: int,
-    with_vec: bool,
-) -> DataFrame:
-    """(vid, cell[, vec]): each row replicated to its ``n_assign``
-    nearest coarse cells — the cosine-argmax quantizer spelled as JVM
-    Column expressions instead of a mapInPandas kernel (r12, VERDICT r11
-    #1). The centroid matrix is model-sized, so it rides the expression
-    as ONE constant-folded array<array<double>> literal (the
-    pq_recall_probe codebook pattern) and the per-row top-n_assign
-    assignment is a struct array_sort — guide §4's boundary rule taken
-    to zero: the assignment costs NO Python stage, no Arrow exchange,
-    and no round-robin spread (kernel parallelism was the input
-    partitioning; an expression needs neither). Callers gate on
-    ``_SQL_ASSIGN_MAX_CELLS`` (tie-order note there) and on the flat
-    quantizer (the two-level route keeps the kernel). Row-equality vs
-    the kernel spelling verified at all three SFs + hostile embedding
-    fixtures before the swap."""
-    n_cells = len(cents)
-    cb = "array(" + ", ".join(
-        "array(" + ", ".join(f"{x!r}D" for x in row) + ")" for row in cents
-    ) + ")"
-    base = df.selectExpr(
-        f"CAST(`{id_col}` AS BIGINT) AS vid",
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS vec",
-    ).where("vec IS NOT NULL")  # the kernel's _nn null-row drop
-    # normalized vector aliased in its OWN projection: referenced once
-    # per centroid by the scoring fold (the CollapseProject
-    # multi-reference rule); same max(norm, 1e-12) guard as the kernel
-    scored = base.selectExpr(
-        "vid",
-        "vec",
-        "transform(vec, x -> x / greatest("
-        "sqrt(aggregate(vec, 0.0D, (a, x) -> a + x * x)), 1e-12)) AS __uv",
-    )
-    cells = (
-        f"slice(array_sort(transform(sequence(0, {n_cells - 1}), j -> "
-        f"named_struct('s', 0.0D - aggregate(zip_with(__uv, "
-        f"element_at({cb}, j + 1), (x, y) -> x * y), 0.0D, "
-        f"(a, v) -> a + v), 'c', j))), 1, {min(n_assign, n_cells)})"
-    )
-    out = ["vid", "explode(transform(__cells, p -> CAST(p.c AS INT))) AS cell"]
-    if with_vec:
-        out.append("vec")
-    return scored.selectExpr("vid", f"{cells} AS __cells", "vec").selectExpr(*out)
-
-
-def _ivfpq_probe_table(
-    queries: DataFrame,
-    cents: np.ndarray,
-    id_col: str,
-    vec_col: str,
-    n_probe_eff: int,
-) -> DataFrame:
-    """(query_id, cell, qvec) probe table: each query row replicated to
-    its n_probe nearest coarse cells — the same cosine-argmax quantizer
-    as the corpus side (one model, both sides). Map-only; nothing
-    query-sized touches the driver. Spelled as JVM expressions via
-    :func:`_cells_table_sql` (r12): the probe pass costs no Python
-    stage. IVFPQ cell counts are bounded by the LUT geometry (the
-    registered paths use 16), within the SQL-assign tie contract."""
-    return _cells_table_sql(
-        queries, cents, id_col, vec_col, n_probe_eff, with_vec=True
-    ).selectExpr("vid AS query_id", "cell", "vec AS qvec")
-
-
 def _ivfpq_batch_candidates(
     codes: DataFrame,
     queries: DataFrame,
@@ -2296,9 +2144,12 @@ def _ivfpq_batch_candidates(
     face (knn_cosine_ivfpq_query)."""
     from pyspark.sql import Window
 
-    qprobe = _ivfpq_probe_table(
-        queries, cents, id_col, vec_col, min(n_probe, len(cents))
-    )
+    # (query_id, cell, qvec): each query row repeated for its n_probe
+    # nearest cells — the same flat quantizer as the corpus side. Map-only;
+    # nothing query-sized touches the driver.
+    qprobe = _cells_table(
+        queries, cents, id_col, vec_col, n_probe, True, None
+    ).selectExpr("vid AS query_id", "cell", "vec AS qvec")
 
     def adc_cogroup(code_pdf, q_pdf):
         import pandas as pd
@@ -2857,8 +2708,8 @@ def knn_cosine_ivfpq_query(
         # the n_probe-replicated probe table for reuse
         probed_cells = [
             int(r["cell"])
-            for r in _ivfpq_probe_table(
-                queries, cents, id_col, vec_col, n_probe
+            for r in _cells_table(
+                queries, cents, id_col, vec_col, n_probe, False, None
             )
             .select("cell")
             .distinct()
@@ -2890,7 +2741,7 @@ def knn_cosine_ivfpq_query(
             [], "query_id long, neighbor_id long, cosine double"
         )
     qnorm = np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    probed = np.argsort(-((qmat / qnorm) @ cents.T), axis=1)[:, :n_probe]
+    probed = _top_cells(qmat / qnorm, cents, n_probe, None)
     all_cells = sorted({int(c) for row in probed for c in row})
 
     codes = spark.read.parquet(f"{path}/codes").where(

@@ -633,6 +633,10 @@ def range_join_clicks_near_purchase(spark: SparkSession, sf_dir: str) -> DataFra
                -- saturate in Spark — r10 trap) fall back to the plain
                -- double sum, documented as outside the deterministic
                -- contract; count(...)=0 keeps all-NULL -> NULL.
+               -- Error bound: each term is within 5e-7 of value * k, so
+               -- vwap is within count * 5e-7 / |sum(k)| of the exact
+               -- quotient — at most half the 1e-4 rounding only while
+               -- count <= 100 * |sum(k)| (see ohlc_vwap_hourly).
                floor((CASE
                       WHEN count(value * k) = 0 THEN NULL
                       WHEN max(abs(value * k)) <= 1e12
@@ -714,6 +718,13 @@ def ohlc_vwap_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         # to the plain double sum, outside the deterministic contract
         # (no fixture reaches it; oracle_flap_check gates the registry).
         # count(...) = 0 keeps the all-NULL group -> NULL.
+        # Error bound: floor(term * 1e6 + 5e-1) / 1e6 is within 5e-7 of
+        # its term, so the VWAP is within count * 5e-7 / |sum(k)| of the
+        # exact quotient (count = the non-NULL terms). That is at most
+        # half the 1e-4 output rounding only while
+        # count <= 100 * |sum(k)|, and near a rounding boundary even a
+        # smaller error can flip the last digit against the exact VWAP
+        # (not against the oracle, which sums the same lattice).
         stable_round(
             F.try_divide(
                 F.expr(

@@ -304,7 +304,7 @@ def arrow_decoder(schema: StructType):
                 columns = zip(*rows)
                 try:
                     arrays = [
-                        pa.array(c, type=t)
+                        _arrow_column(c, t)
                         for c, t in zip(columns, arrow_schema.types)
                     ]
                 except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError) as exc:
@@ -312,6 +312,26 @@ def arrow_decoder(schema: StructType):
                 yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return decode
+
+
+def _arrow_column(values, t):
+    """One decoded column as an Arrow array of type ``t``. A ``bigint``
+    column is inferred first and then cast safely: ``pa.array(values,
+    type=int64)`` silently truncates a double such as 1.5, while the safe
+    cast raises on it and still reads an integral 2.0 as 2. Strings,
+    booleans and timestamps stay errors, as in a direct conversion."""
+    import pyarrow as pa
+
+    if not pa.types.is_int64(t):
+        return pa.array(values, type=t)
+    arr = pa.array(values)
+    if not (
+        pa.types.is_integer(arr.type)
+        or pa.types.is_floating(arr.type)
+        or pa.types.is_null(arr.type)
+    ):
+        raise pa.ArrowTypeError(f"{arr.type} values in a bigint column")
+    return arr.cast(t)
 
 
 def _type_mismatch(lines, rows, schema: StructType, arrow_schema) -> Exception:
@@ -324,7 +344,7 @@ def _type_mismatch(lines, rows, schema: StructType, arrow_schema) -> Exception:
     for field, t, column in zip(schema.fields, arrow_schema.types, zip(*rows)):
         for doc, v in zip(docs, column):
             try:
-                pa.array([v], type=t)
+                _arrow_column([v], t)
             except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
                 return ValueError(
                     f"spool column {field.name!r} was inferred as "

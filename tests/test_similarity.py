@@ -860,6 +860,34 @@ def test_two_level_assignment_tracks_flat():
     assert overlap >= 0.5, overlap
 
 
+
+def test_top_cells_ties_take_lowest_cell_id():
+    # Equal cell scores rank by ascending cell id in both quantizer
+    # branches, so a vector's cells do not depend on the sort algorithm.
+    a = np.array([1.0, 0.0, 0.0, 0.0])
+    b = np.array([0.0, 1.0, 0.0, 0.0])
+    c = np.array([0.5, np.sqrt(0.75), 0.0, 0.0])
+    cents = np.array([a] * 5 + [b] * 5 + [a] * 3 + [c] * 3)
+    q = a[None, :]
+    tied = [0, 1, 2, 3, 4, 10, 11, 12]
+    assert similarity._top_cells(q, cents, 8, None)[0].tolist() == tied
+    assert similarity._top_cells(q, cents, 1, None)[0].tolist() == [0]
+    # two-level: two tied L1 groups whose children are listed out of
+    # order, and a third group (cells 5-9, 13-15) scoring lower
+    c1 = np.array([a, a, b])
+    children = [
+        np.array([12, 10, 11]),
+        np.array([4, 2, 0, 3, 1]),
+        np.array([9, 13, 5, 15, 6, 8, 14, 7]),
+    ]
+    tl = (c1, children)
+    for p1 in (2, 3):
+        got = similarity._top_cells(q, cents, 8, tl, p1=p1)
+        assert got[0].tolist() == tied, p1
+    # a tie between L1 groups probes the lower group id first
+    got = similarity._top_cells(q, cents, 3, tl, p1=1)
+    assert got[0].tolist() == [10, 11, 12]
+
 def test_cosine_pairs_ivf_two_level_recall(spark):
     # End-to-end: with many cells and two-level routing ON, the IVF pair
     # tier still recovers the bulk of the exact near-dup pairs.

@@ -1,4 +1,4 @@
-"""Source coverage: csv/json catalogs, heterogeneous schema merging."""
+"""Source coverage: csv/json catalogs and mongoexport spools."""
 
 from __future__ import annotations
 
@@ -6,10 +6,6 @@ import pytest
 
 from node_mongo2influx_spark.plans.tables import load
 from node_mongo2influx_spark.sources.catalog import DirectoryCatalog, SpoolCatalog
-from node_mongo2influx_spark.sources.schema_merge import (
-    merge_read_json,
-    union_heterogeneous,
-)
 
 
 def test_catalog_reads_csv_and_json(spark, sf_dir, tmp_path):
@@ -22,30 +18,6 @@ def test_catalog_reads_csv_and_json(spark, sf_dir, tmp_path):
     assert cat.read("ejson").count() == 1000
     # csv type inference produced numeric ids
     assert dict(cat.read("ecsv").dtypes)["event_id"] in ("int", "bigint")
-
-
-def test_union_heterogeneous_fields(spark):
-    a = spark.createDataFrame([(1, "x")], "id long, a string")
-    b = spark.createDataFrame([(2, 3.5)], "id long, b double")
-    c = spark.createDataFrame([(3, "y", 9.9)], "id long, a string, b double")
-    out = union_heterogeneous([a, b, c]).orderBy("id").collect()
-    assert [r.asDict() for r in out] == [
-        {"id": 1, "a": "x", "b": None},
-        {"id": 2, "a": None, "b": 3.5},
-        {"id": 3, "a": "y", "b": 9.9},
-    ]
-
-
-def test_merge_read_json_schema_drift(spark, tmp_path):
-    # two files, drifting fields and a type widening (int -> double)
-    f1 = tmp_path / "p1.json"
-    f2 = tmp_path / "p2.json"
-    f1.write_text('{"id": 1, "v": 2}\n{"id": 2, "v": 3}\n')
-    f2.write_text('{"id": 3, "v": 4.5, "extra": "hi"}\n')
-    df = merge_read_json(spark, [str(f1), str(f2)])
-    assert set(df.columns) == {"id", "v", "extra"}
-    assert dict(df.dtypes)["v"] == "double"
-    assert df.where("extra IS NOT NULL").count() == 1
 
 
 def test_mongospool_python_datasource_roundtrip(spark, sf_dir, tmp_path):
@@ -341,21 +313,23 @@ def test_mongospool_schema_reads_past_empty_first_file(spark, tmp_path):
     ]
 
 
-def test_mongospool_late_type_mismatch_names_column(spark, tmp_path):
+@pytest.mark.parametrize("bad", ["oops", 1.5])
+def test_mongospool_late_type_mismatch_names_column(spark, tmp_path, bad):
     # Documents past the schema sample whose value does not fit the
     # inferred type fail the read with the column, type and document named.
+    # A fraction in a bigint column is a mismatch too, not a truncation.
     import json
 
     d = tmp_path / "drift"
     d.mkdir()
-    docs = [{"n": i, "s": "x"} for i in range(120)] + [{"n": "oops", "s": "y"}]
+    docs = [{"n": i, "s": "x"} for i in range(120)] + [{"n": bad, "s": "y"}]
     (d / "a.jsonl").write_text("".join(json.dumps(doc) + "\n" for doc in docs))
     df = SpoolCatalog(spark, str(tmp_path)).read("drift")
     with pytest.raises(Exception) as info:
         df.collect()
     msg = str(info.value)
     assert "spool column 'n' was inferred as bigint" in msg
-    assert "'oops'" in msg and '{"n": "oops", "s": "y"}' in msg
+    assert repr(bad) in msg and json.dumps({"n": bad, "s": "y"}) in msg
 
 
 def test_mongospool_stream_offsets_track_file_growth(tmp_path):

@@ -9,18 +9,24 @@ equally. Each (side, rep) is its own Spark process (cold, like the
 driver's bench); within a process each query runs `inner` times and the
 min is kept; across outer reps the min-of-mins per side is compared.
 
+Each side's process runs with its checkout as the working directory:
+Python workers import the package from the driver's working directory
+first, so a shared working directory would run one side's worker-side
+code (every mapInPandas kernel) on both sides.
+
 Usage:
-  python tools/bench_ab.py --a /tmp/r5repo --b /root/repo \
+  python tools/bench_ab.py --a ../old --b . \
       --queries knn_cosine_pq,corpus_segment_dedup --outer 3 --inner 3
 
 Prints one JSON line: per-query {a, b, ratio_b_over_a} on the min basis.
-Set up the A side with: git worktree add /tmp/r5repo <commit>.
+Set up the A side with: git clone . ../old && git -C ../old checkout <commit>.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import subprocess
 import sys
 
@@ -55,8 +61,10 @@ print("ABRESULT " + json.dumps(out))
 
 
 def _run_side(repo: str, queries: str, inner: int) -> dict[str, float]:
+    repo = os.path.abspath(repo)
     proc = subprocess.run(
         [sys.executable, "-u", "-c", _RUNNER, repo, queries, str(inner)],
+        cwd=repo,
         capture_output=True,
         text=True,
         timeout=900,
