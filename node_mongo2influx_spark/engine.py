@@ -16,6 +16,7 @@ metrics + the Spark UI). What remains is ~100 lines of driver logic.
 from __future__ import annotations
 
 import logging
+import pathlib
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -119,6 +120,12 @@ class Engine:
             # memory; 64 MB broadcasts mid-size dims (saving a shuffle of
             # the fact side) while truly large tables still exceed it.
             "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+            # Python workers import this package (spool decode, Influx
+            # delivery) from any working directory; Spark merges the
+            # variable with the worker's own PYTHONPATH.
+            "spark.executorEnv.PYTHONPATH": str(
+                pathlib.Path(__file__).resolve().parent.parent
+            ),
             # NOTE on canChangeCachedPlanOutputPartitioning (deliberately
             # NOT set): it was briefly enabled so persisted iteration
             # intermediates would AQE-coalesce, but the iterative

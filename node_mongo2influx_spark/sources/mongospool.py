@@ -13,7 +13,8 @@ per line) — maps onto stock Spark:
   skip/limit hazard. Filters are ordinary Spark filters above the decode.
 * **The streaming tail** is the ``mongospool`` Python Data Source
   (:class:`MongoSpoolDataSource`), whose byte-range offsets keep
-  delivering lines appended to a file already listed.
+  delivering lines appended to a file already listed. Both paths run one
+  decode, :func:`_decode_lines`, into Arrow record batches.
 * **BSON extended JSON is decoded**, not passed through: ``{"$oid": …}``
   → string id, ``{"$date": epoch-ms | ISO | {"$numberLong"}}`` → timestamp
   (exact integer millis, pre-1970 and far-future included),
@@ -51,6 +52,7 @@ from datetime import datetime, timedelta, timezone
 from typing import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DataType,
@@ -202,10 +204,10 @@ def _infer_type(v) -> DataType:
 
 
 def _coerce(v, dtype: DataType):
-    """The ONE value-shaping rule: every column value of a decoded row,
-    batch or stream, goes through it, so a document reads the same on
-    both paths. Values that do not fit a string column (widened by mixed
-    types) are re-rendered as text."""
+    """The ONE value-shaping rule of :func:`_decode_lines`, the decode of
+    both batch and stream, whose one Arrow conversion is :func:`_arrow_column`.
+    Values that do not fit a string column (widened by mixed types) are
+    re-rendered as text."""
     v = _decode_extended(v)
     if v is not None and isinstance(dtype, StringType) and not isinstance(v, str):
         # bytes can't json.dumps; a $binary landing in a string-widened
@@ -286,45 +288,52 @@ def _rows_from_lines(lines, fields) -> Iterator[tuple]:
         yield tuple(_coerce(doc.get(name), dtype) for name, dtype in fields)
 
 
+def _decode_lines(lines, schema: StructType, arrow_schema):
+    """The ONE spool decode, batch and stream: lines (blank ones skipped) →
+    a ``pyarrow.RecordBatch``, rows shaped by :func:`_coerce`, columns made
+    by :func:`_arrow_column`. A column that does not fit fails the read."""
+    import pyarrow as pa
+
+    rows = list(_rows_from_lines(lines, [(f.name, f.dataType) for f in schema.fields]))
+    columns = zip(*rows) if rows else ([] for _ in schema.fields)
+    arrays = []
+    for field, t, column in zip(schema.fields, arrow_schema.types, columns):
+        try:
+            arrays.append(_arrow_column(column, t))
+        except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError) as exc:
+            raise _type_mismatch(lines, column, field, t) from exc
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+
 def arrow_decoder(schema: StructType):
     """The ``mapInArrow`` function that turns ``spark.read.text`` batches
     (one ``value`` column of spool lines) into rows of ``schema``."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    fields = [(f.name, f.dataType) for f in schema.fields]
     arrow_schema = to_arrow_schema(schema)
 
     def decode(batches):
-        import pyarrow as pa
-
         for batch in batches:
-            lines = batch.column(0).to_pylist()
-            rows = list(_rows_from_lines(lines, fields))
-            if rows:
-                columns = zip(*rows)
-                try:
-                    arrays = [
-                        _arrow_column(c, t)
-                        for c, t in zip(columns, arrow_schema.types)
-                    ]
-                except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError) as exc:
-                    raise _type_mismatch(lines, rows, schema, arrow_schema) from exc
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+            yield _decode_lines(batch.column(0).to_pylist(), schema, arrow_schema)
 
     return decode
 
 
 def _arrow_column(values, t):
     """One decoded column as an Arrow array of type ``t``. A ``bigint``
-    column is inferred first and then cast safely: ``pa.array(values,
-    type=int64)`` silently truncates a double such as 1.5, while the safe
-    cast raises on it and still reads an integral 2.0 as 2. Strings,
-    booleans and timestamps stay errors, as in a direct conversion."""
+    column is inferred, then cast safely: a direct ``pa.array(values,
+    type=int64)`` truncates 1.5, while the safe cast raises on it and reads
+    2.0 as 2; strings, booleans and timestamps stay errors. Only when
+    inference fails (an integer above 2**53 beside a double) do values
+    whose doubles are all integral convert directly, losing nothing."""
     import pyarrow as pa
 
     if not pa.types.is_int64(t):
         return pa.array(values, type=t)
-    arr = pa.array(values)
+    try:
+        arr = pa.array(values)
+    except pa.ArrowInvalid:
+        if any(isinstance(v, float) and not v.is_integer() for v in values):
+            raise
+        return pa.array(values, type=t)
     if not (
         pa.types.is_integer(arr.type)
         or pa.types.is_floating(arr.type)
@@ -334,24 +343,19 @@ def _arrow_column(values, t):
     return arr.cast(t)
 
 
-def _type_mismatch(lines, rows, schema: StructType, arrow_schema) -> Exception:
-    """The error path of :func:`arrow_decoder`: name the first value that
-    does not fit its column's inferred type, and its document. A mismatch
-    fails the read rather than widening the column."""
+def _type_mismatch(lines, column, field: StructField, t) -> Exception:
+    """The error for a column that failed to convert, naming its first value
+    that does not fit and the document. A mismatch fails; it never widens."""
     import pyarrow as pa
 
+    msg = f"spool column {field.name!r} was inferred as {field.dataType.simpleString()}"
     docs = [line.strip() for line in lines if line.strip()]
-    for field, t, column in zip(schema.fields, arrow_schema.types, zip(*rows)):
-        for doc, v in zip(docs, column):
-            try:
-                _arrow_column([v], t)
-            except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
-                return ValueError(
-                    f"spool column {field.name!r} was inferred as "
-                    f"{field.dataType.simpleString()}, but a document holds "
-                    f"{v!r}: {doc}"
-                )
-    return ValueError("spool documents do not fit the inferred schema")
+    for doc, v in zip(docs, column):
+        try:
+            _arrow_column([v], t)
+        except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+            return ValueError(f"{msg}, but a document holds {v!r}: {doc}")
+    return ValueError(f"{msg}, but its values do not fit it")
 
 
 class MongoSpoolDataSource(DataSource):
@@ -394,16 +398,6 @@ def _complete_prefix_len(path: str) -> int:
             back = min(size, back * 2)
 
 
-def _read_byte_range(path: str, start: int, end: int, fields) -> list[tuple]:
-    if end <= start:
-        return []
-    with open(path, "rb") as fh:
-        fh.seek(start)
-        blob = fh.read(end - start)
-    lines = blob.decode("utf-8").splitlines()
-    return list(_rows_from_lines(lines, fields))
-
-
 class MongoSpoolStreamReader(SimpleDataSourceStreamReader):
     """Streaming tail of a spool directory. The offset maps each file to
     the number of bytes already delivered (newline-aligned), so
@@ -419,7 +413,8 @@ class MongoSpoolStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, path: str, schema: StructType) -> None:
         self.path = path
-        self.fields = [(f.name, f.dataType) for f in schema.fields]
+        self.schema = schema
+        self.arrow_schema = to_arrow_schema(schema)
 
     def initialOffset(self) -> dict:
         return {"sizes": {}}
@@ -434,14 +429,19 @@ class MongoSpoolStreamReader(SimpleDataSourceStreamReader):
         return self.readBetweenOffsets(start, end), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        # replay: exactly the byte ranges the original batch covered
+        # replay: exactly the byte ranges the original batch covered. No rows,
+        # no batch: Spark rejects data from a read whose offset did not move.
         a, b = start["sizes"], end["sizes"]
-        rows: list[tuple] = []
+        lines: list[str] = []
         for f in sorted(b):
             lo, hi = a.get(f, 0), b[f]
             if hi > lo:
-                rows.extend(_read_byte_range(f, lo, hi, self.fields))
-        return iter(rows)
+                with open(f, "rb") as fh:
+                    fh.seek(lo)
+                    # "\n" only, as the offsets; splitlines() also breaks at U+2028
+                    lines += fh.read(hi - lo).decode("utf-8").split("\n")
+        batch = _decode_lines(lines, self.schema, self.arrow_schema)
+        return iter([batch] if batch.num_rows else [])
 
     def commit(self, end: dict) -> None:
         pass  # byte-range offsets are self-contained; nothing to clean up

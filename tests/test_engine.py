@@ -191,3 +191,53 @@ def test_migrate_contract_every_sink(engine, catalog, tmp_path, kind, time_colum
     drops_null = time_column is not None or kind == "influx"
     assert tr.rows_skipped == (n_null if drops_null else 0)
     assert _sink_count(kind, sink, engine.spark, out) == tr.rows_written
+
+
+_MIGRATE_FROM_ELSEWHERE = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from node_mongo2influx_spark import Engine, TransformSpec
+from node_mongo2influx_spark.sinks import MemorySink
+from node_mongo2influx_spark.sources.catalog import SpoolCatalog
+
+eng = Engine.builder(master="local[1]")
+report = eng.migrate(SpoolCatalog(eng.spark, sys.argv[2]), TransformSpec(), MemorySink())
+[t] = report.tables
+print(json.dumps({"written": t.rows_written, "error": t.error}))
+eng.spark.stop()
+"""
+
+
+def test_workers_import_package_from_any_working_directory(tmp_path):
+    # The driver finds the package through sys.path alone, with no
+    # PYTHONPATH and a working directory outside the checkout; the spool
+    # decode runs in Python workers, which must import the package too.
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    coll = tmp_path / "dump" / "events"
+    coll.mkdir(parents=True)
+    (coll / "a.jsonl").write_text(
+        "".join(
+            json.dumps({"time": {"$date": 1_700_000_000_000 + i}, "v": i}) + "\n"
+            for i in range(5)
+        )
+    )
+    script = tmp_path / "migrate.py"
+    script.write_text(_MIGRATE_FROM_ELSEWHERE)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    repo = str(Path(__file__).resolve().parent.parent)
+    out = subprocess.run(
+        [sys.executable, str(script), repo, str(tmp_path / "dump")],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=240,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    result = json.loads(out.stdout.strip().splitlines()[-1])
+    assert result == {"written": 5, "error": None}

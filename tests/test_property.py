@@ -3,6 +3,10 @@ over random sub-schemas preserve the reference's own invariants."""
 
 from __future__ import annotations
 
+import json
+import os
+import tempfile
+
 import hypothesis.strategies as st
 from hypothesis import HealthCheck, given, settings
 
@@ -379,3 +383,61 @@ def test_pack_sequences_invariants(spark, lens, ctx, size_ordered):
         df, ctx_len=ctx, n_buckets=4, size_ordered=size_ordered
     ).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
+
+
+@st.composite
+def spool_appends(draw):
+    """A spool file's bytes (documents, blank lines, non-ASCII text written
+    as raw UTF-8, as mongoexport does) and the byte positions where a
+    producer's successive appends stop; a cut may split a line, or a
+    character."""
+    # line and paragraph separators that are not newlines, and multi-byte
+    # characters, beside whatever else hypothesis draws
+    chars = st.characters(blacklist_categories=("Cs",)) | st.sampled_from(
+        "\x85\u2028\u2029é€😀"
+    )
+    doc = st.fixed_dictionaries(
+        {"k": st.none() | st.integers(-(2**63), 2**63 - 1)},
+        optional={"s": st.none() | st.text(chars)},
+    )
+    lines = draw(st.lists(doc | st.sampled_from(["", "  "]), max_size=20))
+    data = "".join(
+        (json.dumps(d, ensure_ascii=False) if isinstance(d, dict) else d) + "\n"
+        for d in lines
+    ).encode("utf-8")
+    cuts = draw(st.lists(st.integers(0, len(data)), max_size=6))
+    return data, [*sorted(set(cuts)), len(data)]
+
+
+@given(spool=spool_appends())
+@settings(max_examples=200, deadline=None)
+def test_spool_stream_tail_matches_one_batch_decode(spool):
+    # The stream reader, reading a file as it grows, delivers the rows one
+    # batch decode of the finished file gives, and each (start, end) replay
+    # returns its original record batch.
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from node_mongo2influx_spark.sources.mongospool import (
+        MongoSpoolStreamReader,
+        arrow_decoder,
+    )
+
+    data, cuts = spool
+    schema = StructType([StructField("k", LongType()), StructField("s", StringType())])
+    with tempfile.TemporaryDirectory() as d:
+        rdr = MongoSpoolStreamReader(d, schema)
+        offset, reads, written = rdr.initialOffset(), [], 0
+        for cut in cuts:
+            with open(os.path.join(d, "a.jsonl"), "ab") as fh:
+                fh.write(data[written:cut])
+            written = cut
+            batches, end = rdr.read(offset)
+            reads.append((offset, end, list(batches)))
+            offset = end
+        for start, end, batches in reads:
+            assert list(rdr.readBetweenOffsets(start, end)) == batches
+    whole = pa.RecordBatch.from_pydict({"value": data.decode("utf-8").split("\n")})
+    expected = [b.to_pylist() for b in arrow_decoder(schema)(iter([whole]))]
+    streamed = [b.to_pylist() for *_, batches in reads for b in batches]
+    assert sum(streamed, []) == sum(expected, [])

@@ -313,20 +313,40 @@ def test_mongospool_schema_reads_past_empty_first_file(spark, tmp_path):
     ]
 
 
-@pytest.mark.parametrize("bad", ["oops", 1.5])
-def test_mongospool_late_type_mismatch_names_column(spark, tmp_path, bad):
+@pytest.mark.parametrize(
+    "bad, path",
+    [
+        pytest.param("oops", "batch", id="oops"),
+        pytest.param(1.5, "batch", id="1.5"),
+        pytest.param("oops", "stream", id="oops-stream"),
+        pytest.param(1.5, "stream", id="1.5-stream"),
+    ],
+)
+def test_mongospool_late_type_mismatch_names_column(spark, tmp_path, bad, path):
     # Documents past the schema sample whose value does not fit the
     # inferred type fail the read with the column, type and document named.
     # A fraction in a bigint column is a mismatch too, not a truncation.
+    # The batch read and the streaming tail fail alike.
+    import functools
     import json
+
+    from node_mongo2influx_spark.sources.mongospool import (
+        MongoSpoolStreamReader,
+        infer_schema,
+        spool_files,
+    )
 
     d = tmp_path / "drift"
     d.mkdir()
     docs = [{"n": i, "s": "x"} for i in range(120)] + [{"n": bad, "s": "y"}]
     (d / "a.jsonl").write_text("".join(json.dumps(doc) + "\n" for doc in docs))
-    df = SpoolCatalog(spark, str(tmp_path)).read("drift")
+    if path == "batch":
+        read = SpoolCatalog(spark, str(tmp_path)).read("drift").collect
+    else:
+        rdr = MongoSpoolStreamReader(str(d), infer_schema(spool_files(d)))
+        read = functools.partial(rdr.read, rdr.initialOffset())
     with pytest.raises(Exception) as info:
-        df.collect()
+        read()
     msg = str(info.value)
     assert "spool column 'n' was inferred as bigint" in msg
     assert repr(bad) in msg and json.dumps({"n": bad, "s": "y"}) in msg
@@ -354,20 +374,48 @@ def test_mongospool_stream_offsets_track_file_growth(tmp_path):
         fh.write(json.dumps({"k": 2}) + "\n")
         fh.write('{"k": 3')  # partial line: producer mid-append
     o0 = rdr.initialOffset()
+
+    def ks(batches):  # the reader yields Arrow record batches
+        return [k for b in batches for k in b.column("k").to_pylist()]
+
     rows1, o1 = rdr.read(o0)
-    assert [r[0] for r in rows1] == [1, 2]  # partial tail withheld
+    assert ks(rows1) == [1, 2]  # partial tail withheld
 
     with open(f, "a") as fh:
         fh.write("}\n")
         fh.write(json.dumps({"k": 4}) + "\n")
     rows2, o2 = rdr.read(o1)
-    assert [r[0] for r in rows2] == [3, 4]  # appended lines delivered
+    assert ks(rows2) == [3, 4]  # appended lines delivered
 
     # crash replay of batch 1 returns batch 1, even though the file grew
     replay = list(rdr.readBetweenOffsets(o0, o1))
-    assert [r[0] for r in replay] == [1, 2]
+    assert ks(replay) == [1, 2]
     replay2 = list(rdr.readBetweenOffsets(o1, o2))
-    assert [r[0] for r in replay2] == [3, 4]
+    assert ks(replay2) == [3, 4]
+
+
+def test_mongospool_bigint_decodes_alike_whatever_shares_its_batch():
+    # An integer above 2**53 beside an integral double has no exact
+    # inferred Arrow type; 2.0 must still read as 2, as it does beside
+    # small integers, while a fraction beside it fails naming the column.
+    import json
+
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from node_mongo2influx_spark.sources.mongospool import arrow_decoder
+
+    decode = arrow_decoder(StructType([StructField("k", LongType())]))
+
+    def read(*values):
+        lines = [json.dumps({"k": v}) for v in values]
+        out = decode(iter([pa.RecordBatch.from_pydict({"value": lines})]))
+        return [k for b in out for k in b.column("k").to_pylist()]
+
+    assert read(2**62 + 1, 2.0) == [2**62 + 1, 2]
+    assert read(1, 2.0) == [1, 2]
+    with pytest.raises(ValueError, match="spool column 'k' .* holds 1.5"):
+        read(2**62 + 1, 1.5)
 
 
 def test_mongo_catalog_wires_partitioner_without_connector(spark):
