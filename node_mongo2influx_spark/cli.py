@@ -188,6 +188,10 @@ def main(argv: list[str] | None = None) -> int:
         # `--tables` with no values (e.g. an empty shell expansion) would
         # otherwise silently migrate nothing and exit 0.
         raise SystemExit("--tables given but empty; omit it to migrate all tables")
+    try:
+        sink = _build_sink(args.sink, args.insert_limit, args.time_column)
+    except ValueError as e:  # e.g. --insert-limit 0, before Spark starts
+        raise SystemExit(f"invalid sink option: {e}") from None
 
     from node_mongo2influx_spark import Engine, EngineConfig, TransformSpec
     from node_mongo2influx_spark.sources.catalog import (
@@ -215,7 +219,6 @@ def main(argv: list[str] | None = None) -> int:
         if src_kind == "spool"
         else DirectoryCatalog(engine.spark, args.source)
     )
-    sink = _build_sink(args.sink, args.insert_limit, args.time_column)
     report = engine.migrate(catalog, spec, sink, tables=args.tables)
 
     print(

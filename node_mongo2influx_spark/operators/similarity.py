@@ -32,7 +32,14 @@ from node_mongo2influx_spark.functions.vec import (
     usable_vector_py,
     usable_vector_sql,
 )
-from node_mongo2influx_spark.sinks.parquet import _has_data_files
+from node_mongo2influx_spark.sinks.parquet import (
+    _collect_parts,
+    _has_data_files,
+    drop_keys,
+    locate_keys,
+    recover_swap,
+    swap_dir,
+)
 
 
 def _as_double(vec: Column) -> Column:
@@ -2536,32 +2543,14 @@ def _ivfpq_vec_buckets(spark, path: str) -> int:
 
 def _recover_rebuild(path: str) -> None:
     """Finish or roll back an interrupted in-place rebuild
-    (:func:`rebuild_ivfpq_index`). The swap is TWO whole-index renames
-    (live → ``__rebuild_old``, ``__rebuild_tmp`` → live), so a crash
-    can only leave: leftovers beside a live index (remove them), or no
-    live index with a COMPLETE tmp (roll forward) or with the old
-    (roll back). Called by every persisted-index entry point before it
-    touches the stores — pure pathlib, no Spark job."""
-    import shutil
-
-    p = pathlib.Path(path)
-    old = pathlib.Path(str(p) + "__rebuild_old")
-    tmp = pathlib.Path(str(p) + "__rebuild_tmp")
-    if p.exists():
-        # live index: a crash before the first rename leaves tmp, one
-        # after the second leaves old — both are garbage now
-        for d in (old, tmp):
-            if d.exists():
-                shutil.rmtree(d)
-        return
-    if tmp.exists() and _has_data_files(tmp / "model"):
-        tmp.rename(p)  # complete rebuild: roll FORWARD
-        if old.exists():
-            shutil.rmtree(old)
-    elif old.exists():
-        old.rename(p)  # incomplete rebuild: roll BACK
-        if tmp.exists():
-            shutil.rmtree(tmp)
+    (:func:`rebuild_ivfpq_index`) through the shared swap recovery: a
+    tmp index rolls FORWARD once its model store (written last) holds
+    data, otherwise the old index is restored. Called by every
+    persisted-index entry point before it touches the stores — pure
+    pathlib, no Spark job."""
+    recover_swap(
+        pathlib.Path(path), "rebuild", lambda tmp: _has_data_files(tmp / "model")
+    )
 
 
 def load_ivfpq_model(spark, path: str):
@@ -2820,9 +2809,9 @@ def delete_from_ivfpq_index(
       columns of the 16×-compressed codes, never vectors, exact under
       any quantizer (no reliance on re-deriving the frozen assignment).
     * The REWRITE is partition-pruned to the touched cells only
-      (anti-join, dynamic overwrite); lists the deletes don't touch are
-      never read for the rewrite nor rewritten. Cells left EMPTY drop
-      as directories.
+      (:func:`~node_mongo2influx_spark.sinks.parquet.drop_keys`); lists
+      the deletes don't touch are never read for the rewrite nor
+      rewritten. Cells left EMPTY drop as directories.
     * ``vectors/`` keeps stale rows by default for PURE deletes:
       candidates come from the codes store, so a fully-deleted id can
       never reach the rerank — its stale vector is dead storage, not a
@@ -2854,51 +2843,42 @@ def delete_from_ivfpq_index(
         dkeys = spark.createDataFrame(
             [(int(i),) for i in ids], "vid long"
         ).distinct()
-    codes_path = f"{path}/codes"
-    touched: list = []
-    if _has_data_files(pathlib.Path(codes_path)):
-        codes = spark.read.parquet(codes_path)
-        touched = sorted(
-            r["cell"]
-            for r in codes.select(F.col("vid").cast("long").alias("vid"), "cell")
-            .join(dkeys, "vid", "left_semi")
-            .select("cell")
-            .distinct()
-            .collect()
-        )
-        if touched:
-            _prune_rewrite(spark, codes_path, "cell", touched, dkeys)
+    codes_dir = pathlib.Path(path) / "codes"
+    touched = {}
+    if _has_data_files(codes_dir):
+        codes = _long_vid(spark.read.parquet(str(codes_dir)))
+        touched = locate_keys(codes, dkeys, ("vid",), ("cell",))
+        drop_keys(lambda _: codes, codes_dir, ("cell",), dkeys, ("vid",), touched)
     if vacuum_vectors == "located":
         vacuum_vectors = bool(touched)
-    if vacuum_vectors:
-        vec_path = f"{path}/vectors"
-        nb = _ivfpq_vec_buckets(spark, path)
-        if not _has_data_files(pathlib.Path(vec_path)):
-            pass
-        elif nb:
-            buckets = sorted(
-                r["b"]
-                for r in dkeys.select(_vec_bucket(nb).alias("b"))
-                .distinct()
-                .collect()
-            )
-            on_disk = [
-                b
-                for b in buckets
-                if (pathlib.Path(vec_path) / f"__vb={b}").exists()
-            ]
-            if on_disk:
-                _prune_rewrite(spark, vec_path, "__vb", on_disk, dkeys)
-        else:  # legacy unpartitioned layout: full-store rewrite
-            kept_v = (
-                spark.read.parquet(vec_path)
-                .withColumn("vid", F.col("vid").cast("long"))
-                .join(dkeys, "vid", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            kept_v.write.mode("overwrite").parquet(vec_path)
-            spark.catalog.refreshByPath(vec_path)
+    vec_dir = pathlib.Path(path) / "vectors"
+    if vacuum_vectors and _has_data_files(vec_dir):
+        _drop_vectors(
+            spark, path, lambda p: _long_vid(spark.read.parquet(p)), dkeys
+        )
     return len(touched)
+
+
+def _long_vid(df: DataFrame) -> DataFrame:
+    """``df`` with its ``vid`` canonicalized to LONG — the one id type
+    every index mutation anti-joins and hash-buckets over."""
+    return df.withColumn("vid", F.col("vid").cast("long"))
+
+
+def _drop_vectors(spark, path: str, df_reader, dkeys: DataFrame) -> int:
+    """Remove the ids in ``dkeys`` from the index's vectors store through
+    :func:`~node_mongo2influx_spark.sinks.parquet.drop_keys`: only the
+    id-hash buckets the ids map to are rewritten (a pure function of the
+    id, no scan to locate them); the legacy unpartitioned layout is
+    rewritten whole. Returns the number of buckets rewritten/dropped."""
+    nb = _ivfpq_vec_buckets(spark, path)
+    pcols, cand = (), {}
+    if nb:
+        pcols = ("__vb",)
+        cand = _collect_parts(dkeys.select(_vec_bucket(nb).alias("__vb")), pcols)
+    return drop_keys(
+        df_reader, pathlib.Path(path) / "vectors", pcols, dkeys, ("vid",), cand
+    )
 
 
 def compact_ivfpq_index(spark, path: str) -> dict:
@@ -2909,28 +2889,17 @@ def compact_ivfpq_index(spark, path: str) -> dict:
     open-bound, not byte-bound. One ``repartition(part_col)`` rewrite
     collapses each partition directory to a single file.
 
-    Crash-safe via the same rename-aside swap protocol as
-    ``ParquetSink.compact``: write to ``__compact_tmp``, rename the
-    live store aside, promote, drop — a crash at any point is
-    recoverable on the next run from the leftover markers (a
-    ``__compact_old`` with no live store is restored; stray tmp dirs
-    are discarded). Returns {store: file_count_after}.
+    Crash-safe through the shared
+    :func:`~node_mongo2influx_spark.sinks.parquet.swap_dir` (each store
+    swapped via ``__compact_tmp`` / ``__compact_old``; a crash between
+    the renames rolls back to the uncompacted store, which holds the
+    same rows). Returns {store: file_count_after}.
     """
-    import shutil
-
     _recover_rebuild(path)
     out = {}
     for store, part_col in (("codes", "cell"), ("vectors", "__vb")):
         target = pathlib.Path(path) / store
-        tmp = target.with_name(target.name + "__compact_tmp")
-        old = target.with_name(target.name + "__compact_old")
-        if old.exists():
-            if not target.exists():
-                old.rename(target)  # crashed between swap renames: restore
-            else:
-                shutil.rmtree(old)
-        if tmp.exists():
-            shutil.rmtree(tmp)
+        recover_swap(target, "compact")
         if not _has_data_files(target):
             continue
         df = spark.read.parquet(str(target))
@@ -2943,10 +2912,7 @@ def compact_ivfpq_index(spark, path: str) -> dict:
             )
         else:  # legacy unpartitioned vectors store
             writer = df.coalesce(1).write.mode("overwrite")
-        writer.parquet(str(tmp))
-        target.rename(old)
-        tmp.rename(target)
-        shutil.rmtree(old)
+        swap_dir(target, lambda tmp: writer.parquet(str(tmp)), "compact")
         spark.catalog.refreshByPath(str(target))
         out[store] = len(
             [p for p in target.rglob("*.parquet") if p.is_file()]
@@ -2969,8 +2935,8 @@ def vacuum_ivfpq_index(spark, path: str) -> dict:
     Cost shape at 100 TB: one thin vid-column scan of each store, an
     anti-join, then a rewrite pruned to the stale ids' id-hash BUCKETS
     only (a pure function of the id); untouched buckets are never read
-    for the rewrite nor rewritten. Crash-safe through the same
-    localCheckpoint → dynamic-overwrite ``_prune_rewrite`` tail as
+    for the rewrite nor rewritten — the same
+    :func:`~node_mongo2influx_spark.sinks.parquet.drop_keys` rewrite as
     delete, after :func:`_recover_rebuild`. Reconciliation is BY ID:
     an update flow (delete-then-reappend of a live id) must vacuum at
     delete time (``vacuum_vectors="located"``, as
@@ -2998,14 +2964,10 @@ def vacuum_ivfpq_index(spark, path: str) -> dict:
     if not _has_data_files(vec_dir):
         return out
     out["bytes_before"] = _bytes()
-    vecs = spark.read.parquet(str(vec_dir)).withColumn(
-        "vid", F.col("vid").cast("long")
-    )
+    vecs = _long_vid(spark.read.parquet(str(vec_dir)))
     codes_dir = pathlib.Path(path) / "codes"
     if _has_data_files(codes_dir):
-        live = spark.read.parquet(str(codes_dir)).select(
-            F.col("vid").cast("long").alias("vid")
-        )
+        live = _long_vid(spark.read.parquet(str(codes_dir))).select("vid")
         stale = vecs.select("vid").join(live, "vid", "left_anti").distinct()
     else:
         # every inverted list deleted: the whole vectors store is dead
@@ -3018,65 +2980,9 @@ def vacuum_ivfpq_index(spark, path: str) -> dict:
     if not n_stale:
         out["bytes_after"] = out["bytes_before"]
         return out
-    nb = _ivfpq_vec_buckets(spark, path)
-    if nb:
-        buckets = sorted(
-            r["b"]
-            for r in stale.select(_vec_bucket(nb).alias("b"))
-            .distinct()
-            .collect()
-        )
-        on_disk = [b for b in buckets if (vec_dir / f"__vb={b}").exists()]
-        if on_disk:
-            _prune_rewrite(spark, str(vec_dir), "__vb", on_disk, stale)
-        out["buckets_rewritten"] = len(on_disk)
-    else:  # legacy unpartitioned layout: full-store rewrite
-        kept_v = (
-            vecs.join(stale, "vid", "left_anti").localCheckpoint(eager=True)
-        )
-        kept_v.write.mode("overwrite").parquet(str(vec_dir))
-        spark.catalog.refreshByPath(str(vec_dir))
-        out["buckets_rewritten"] = 1
+    out["buckets_rewritten"] = _drop_vectors(spark, path, lambda _: vecs, stale)
     out["bytes_after"] = _bytes()
     return out
-
-
-def _prune_rewrite(
-    spark, store_path: str, part_col: str, touched: list, dkeys: DataFrame
-) -> None:
-    """Shared partition-pruned delete tail for the index stores: read
-    only the ``touched`` partitions, anti-join the delete keys
-    (LONG-canonical vid), dynamic-overwrite the survivors, drop
-    partitions left empty as directories. A store emptied entirely is
-    left with no data files — every reader probes ``_has_data_files``
-    and treats that as an empty (not corrupt) store."""
-    import shutil
-
-    kept = (
-        spark.read.parquet(store_path)
-        .where(F.col(part_col).isin([int(v) for v in touched]))
-        .withColumn("vid", F.col("vid").cast("long"))
-        # lineage reads the partitions the overwrite rewrites
-        .join(dkeys, "vid", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    survivors = {
-        r[part_col] for r in kept.select(part_col).distinct().collect()
-    }
-    if survivors:
-        (
-            kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(part_col)
-            .parquet(store_path)
-        )
-    for v in touched:
-        if v in survivors:
-            continue
-        d = pathlib.Path(store_path) / f"{part_col}={v}"
-        if d.exists():
-            shutil.rmtree(d)
-    spark.catalog.refreshByPath(store_path)
 
 
 def rebuild_ivfpq_index(
@@ -3099,20 +3005,17 @@ def rebuild_ivfpq_index(
     the point: the new codebooks represent the new distribution, so
     data that used to flag is in-distribution again.
 
-    Swap protocol: a COMPLETE sibling index is built at
-    ``__rebuild_tmp`` (reads only the vectors store), then TWO
-    whole-index renames (live → ``__rebuild_old``, tmp → live) and the
-    old is dropped — readers see the old or the new index, never a
-    mixed model/codes view (the hazard a per-store swap would have).
-    Every persisted-index entry point runs :func:`_recover_rebuild`
-    first, so a crash between the renames rolls forward (complete tmp)
-    or back (otherwise) on the next touch. Maintenance-window
+    A COMPLETE sibling index is built (reading only the vectors store)
+    and swapped in whole by
+    :func:`~node_mongo2influx_spark.sinks.parquet.swap_dir`
+    (``__rebuild_tmp`` / ``__rebuild_old``) — readers see the old or the
+    new index, never a mixed model/codes view (the hazard a per-store
+    swap would have). Every persisted-index entry point runs
+    :func:`_recover_rebuild` first. Maintenance-window
     operation like :func:`compact_ivfpq_index`: crash-safe, not
     concurrent-writer-safe. Raises ``EmptyTrainingInput`` on an empty
     vectors store (there is nothing to train on — delete the index
     instead). Returns the geometry used plus the row count."""
-    import shutil
-
     _recover_rebuild(path)
     cents, _, books = load_ivfpq_model(spark, path)
     if vec_buckets is None:
@@ -3135,19 +3038,16 @@ def rebuild_ivfpq_index(
         F.col("vid").alias("vec_id"), F.col("vec").alias("embedding")
     )
     n = vecs.count()
-    tmp = str(path) + "__rebuild_tmp"
-    if pathlib.Path(tmp).exists():
-        shutil.rmtree(tmp)
     # every read of the live store completes inside this call's write
     # jobs — by the time the renames run, nothing holds the old path
-    build_ivfpq_index(
-        vecs, tmp, n_cells=n_cells, m=m, n_codes=n_codes, dim=dim,
-        vec_buckets=vec_buckets,
+    swap_dir(
+        pathlib.Path(path),
+        lambda tmp: build_ivfpq_index(
+            vecs, str(tmp), n_cells=n_cells, m=m, n_codes=n_codes, dim=dim,
+            vec_buckets=vec_buckets,
+        ),
+        "rebuild",
     )
-    old = str(path) + "__rebuild_old"
-    pathlib.Path(path).rename(old)
-    pathlib.Path(tmp).rename(path)
-    shutil.rmtree(old)
     for store in ("codes", "vectors", "model"):
         spark.catalog.refreshByPath(f"{path}/{store}")
     return {

@@ -208,6 +208,9 @@ class InfluxLineProtocolSink(Sink):
         time_column: str = "time",
         dedup_tag: str | None = None,
     ) -> None:
+        if insert_limit < 1:
+            # batches() would send one POST per line for any limit < 1
+            raise ValueError(f"insert_limit must be >= 1, got {insert_limit}")
         self.transport = transport
         self.insert_limit = insert_limit
         self.time_column = time_column

@@ -41,13 +41,85 @@ def _has_data_files(store_dir: pathlib.Path) -> bool:
     """True when the store directory holds actual data files. A directory
     with only _SUCCESS / metadata (an empty prior write, or a crashed
     one) is UNREADABLE (UNABLE_TO_INFER_SCHEMA) and must count as
-    absent — shared by upsert and sweep_moved_keys so the two probes
-    cannot drift apart."""
+    absent — every store probe goes through here so none can drift
+    apart."""
     return store_dir.exists() and any(
         f.suffix == ".parquet" or f.name.startswith("part-")
         for f in store_dir.rglob("*")
         if f.is_file() and not f.name.startswith(("_", "."))
     )
+
+
+def read_store(spark, store_dir: str, empty_schema: str) -> DataFrame:
+    """The parquet store at ``store_dir``, or an empty frame of
+    ``empty_schema`` when it holds no data files (absent, or left with
+    only _SUCCESS by an empty or emptied write — see
+    :func:`_has_data_files`). Probing instead of catching read errors
+    keeps every other failure a failure: a store that exists but cannot
+    be read fails its caller instead of reading as empty."""
+    if not _has_data_files(pathlib.Path(store_dir)):
+        return spark.createDataFrame([], empty_schema)
+    return spark.read.parquet(store_dir)
+
+
+def write_batch_log(df: DataFrame, store_dir: str, batch_id: int) -> None:
+    """Write one micro-batch of an append-only log store under its own
+    ``ingest_batch=<batch_id>`` partition with DYNAMIC overwrite: a
+    replayed batch (a crash before the checkpoint commit) rewrites its
+    own partition instead of appending a duplicate, so the log is
+    replay-idempotent with no transaction coordinator."""
+    (
+        df.withColumn("ingest_batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch")
+        .parquet(store_dir)
+    )
+
+
+def _swap_paths(
+    target: pathlib.Path, suffix: str
+) -> tuple[pathlib.Path, pathlib.Path]:
+    """The (tmp, old) siblings a ``suffix`` swap of ``target`` uses, e.g.
+    ``events__compact_tmp`` / ``events__compact_old``."""
+    return (
+        target.with_name(f"{target.name}__{suffix}_tmp"),
+        target.with_name(f"{target.name}__{suffix}_old"),
+    )
+
+
+def recover_swap(target: pathlib.Path, suffix: str, complete=None) -> None:
+    """Finish or roll back an interrupted :func:`swap_dir`. The swap is
+    two renames (live → old, tmp → live), so a crash leaves either
+    leftovers beside a live ``target`` (removed) or no live directory:
+    the tmp is promoted when ``complete(tmp)`` accepts it, otherwise the
+    old one is restored. Without ``complete`` the swap only ever rolls
+    back. Pure pathlib, no Spark job."""
+    tmp, old = _swap_paths(target, suffix)
+    if not target.exists():
+        if tmp.exists() and complete is not None and complete(tmp):
+            tmp.rename(target)
+        elif old.exists():
+            old.rename(target)
+    for d in (tmp, old):
+        if d.exists():
+            shutil.rmtree(d)
+
+
+def swap_dir(target: pathlib.Path, build, suffix: str) -> None:
+    """Crash-safe in-place replacement of the directory ``target``:
+    ``build(tmp)`` writes the new contents beside it, the live directory
+    is renamed aside, the tmp promoted and the old removed. Readers see
+    the old or the new directory, and ``target`` is missing only between
+    two renames, never between a delete and a rename. Run
+    :func:`recover_swap` with the same ``suffix`` first (before reading
+    ``target``); it also repairs whatever a crash here leaves. On object
+    stores use a manifest instead."""
+    tmp, old = _swap_paths(target, suffix)
+    build(tmp)
+    target.rename(old)
+    tmp.rename(target)
+    shutil.rmtree(old)
 
 
 def _partition_pred(pcols, tuples):
@@ -119,6 +191,88 @@ def _latest(
         .where(F.col("__rk") == 1)
         .drop("__rk", "__src")
     )
+
+
+def locate_keys(
+    existing: DataFrame, dkeys: DataFrame, keys, pcols
+) -> dict[tuple[str, ...], tuple]:
+    """Column-pruned key-location scan: every ``pcols`` partition of
+    ``existing`` holding a key in ``dkeys``. NO broadcast hint on the key
+    set — a CDC delta is unbounded (an availableNow backlog batch can
+    carry millions of keys), so AQE picks the join strategy from real
+    sizes, matching upsert's own left_anti. dict.fromkeys dedups
+    key∩partition column overlap (a partition column may legally be
+    part of the key)."""
+    scan_cols = list(dict.fromkeys([*keys, *pcols]))
+    return _collect_parts(
+        existing.select(*scan_cols).join(dkeys, list(keys), "left_semi"), pcols
+    )
+
+
+def _part_dir(target: pathlib.Path, pcols, t: tuple[str, ...]) -> pathlib.Path:
+    """The directory of the ``target`` partition whose values render as
+    ``t``."""
+    for c, v in zip(pcols, t):
+        target = target / f"{c}={v}"
+    return target
+
+
+def rewrite_partitions(
+    frame: DataFrame, target: pathlib.Path, pcols, cand=()
+) -> None:
+    """Dynamic-overwrite ``frame`` into the store at ``target``; each
+    ``cand`` partition (string form) the frame holds no rows for is
+    removed as a directory — dynamic overwrite cannot express an emptied
+    partition, and writes nothing for it (retention_sweep's mechanism).
+    Without ``cand`` there is no survivor probe; without ``pcols`` the
+    whole store is overwritten. Ends by invalidating the session's
+    cached file listing for the path: DataFrames over it from before the
+    rewrite would otherwise FAILED_READ_FILE on the replaced files."""
+    survivors = set(_collect_parts(frame, pcols)) if cand else set()
+    if survivors or not cand:
+        (
+            frame.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*pcols)
+            .parquet(str(target))
+        )
+    for t in set(cand) - survivors:
+        d = _part_dir(target, pcols, t)
+        if d.exists():
+            shutil.rmtree(d)
+    frame.sparkSession.catalog.refreshByPath(str(target))
+
+
+def drop_keys(
+    df_reader, target: pathlib.Path, pcols, dkeys: DataFrame, keys,
+    cand: dict[tuple[str, ...], tuple], exclude=(),
+) -> int:
+    """Remove every key in ``dkeys`` from the store at ``target``: read
+    only the ``cand`` partitions (str-form → native-value tuples)
+    outside ``exclude`` that exist on disk, anti-join the keys, and
+    :func:`rewrite_partitions` the survivors (partitions left empty are
+    removed). Without ``pcols`` the whole store is read and rewritten.
+    Returns the number of partitions rewritten/dropped — an
+    unpartitioned store counts as one."""
+    stale = {}
+    if pcols:
+        # skip candidates already swept (or never written): keeps the
+        # replay a true no-op and the return value honest
+        stale = {
+            t: cand[t]
+            for t in sorted(set(cand) - set(exclude))
+            if _part_dir(target, pcols, t).exists()
+        }
+        if not stale:
+            return 0
+    stored = df_reader(str(target))
+    if stale:
+        stored = stored.where(_partition_pred(pcols, stale.values()))
+    kept = stored.join(dkeys, list(keys), "left_anti").localCheckpoint(
+        eager=True  # lineage reads what we rewrite
+    )
+    rewrite_partitions(kept, target, pcols, stale)
+    return len(stale) if pcols else 1
 
 
 class ParquetSink(Sink):
@@ -255,7 +409,7 @@ class ParquetSink(Sink):
             merged = merged.localCheckpoint(eager=True)
         else:
             merged = delta
-        self._rewrite(merged, series)
+        rewrite_partitions(merged, store_dir, self.partition_by)
         return len(touched)
 
     def upsert_guarded_moving(
@@ -315,20 +469,26 @@ class ParquetSink(Sink):
             return 0
         store_dir = self.path / series
         if not _has_data_files(store_dir):
-            self._rewrite(_latest(delta, keys, order_col), series)
+            rewrite_partitions(
+                _latest(delta, keys, order_col), store_dir, self.partition_by
+            )
             return len(cand)
         existing = df_reader(str(store_dir))
         _check_order_col(order_col, existing, stored=True)
         # every partition a delta key currently lives in joins the claimed
         # ones; the scan runs on the frame already read
-        cand.update(self._locate(existing, delta.select(*keys).distinct(), keys))
+        cand.update(
+            locate_keys(
+                existing, delta.select(*keys).distinct(), keys, self.partition_by
+            )
+        )
         stored = existing.where(_partition_pred(self.partition_by, cand.values()))
         # one materialization before the overwrite (read-lineage rule);
         # survivors are read off the checkpointed blocks, no recompute
         merged = _latest(
             delta, keys, order_col, stored, evolve_schema
         ).localCheckpoint(eager=True)
-        self._rewrite(merged, series, cand)
+        rewrite_partitions(merged, store_dir, self.partition_by, cand)
         return len(cand)
 
     def sweep_moved_keys(
@@ -390,37 +550,10 @@ class ParquetSink(Sink):
             prev_src = prev_source if prev_source is not None else delta
             cand = _collect_parts(_non_null(prev_src, prev_cols), prev_cols)
         else:
-            cand = self._locate(df_reader(str(store_dir)), dkeys, keys)
-        return self._drop_keys_from_partitions(
-            df_reader, dkeys, keys, series, cand, exclude=new_parts
+            cand = locate_keys(df_reader(str(store_dir)), dkeys, keys, pcols)
+        return drop_keys(
+            df_reader, store_dir, pcols, dkeys, keys, cand, exclude=new_parts
         )
-
-    def _drop_keys_from_partitions(
-        self, df_reader, dkeys: DataFrame, keys, series: str,
-        cand: dict[tuple[str, ...], tuple], exclude=(),
-    ) -> int:
-        """Shared tail of sweep_moved_keys / delete_keys: rewrite the
-        ``cand`` partitions (str-form → native-value tuples) outside
-        ``exclude`` that exist on disk, dropping every key in ``dkeys``;
-        partitions left empty are removed as directories. Returns the
-        number of partitions rewritten/dropped."""
-        # skip candidates already swept (or never written): keeps the
-        # replay a true no-op and the return value honest
-        stale = {
-            t: cand[t]
-            for t in sorted(set(cand) - set(exclude))
-            if self._part_dir(series, t).exists()
-        }
-        if not stale:
-            return 0
-        kept = (
-            df_reader(str(self.path / series))
-            .where(_partition_pred(self.partition_by, stale.values()))
-            .join(dkeys, list(keys), "left_anti")
-            .localCheckpoint(eager=True)  # lineage reads what we rewrite
-        )
-        self._rewrite(kept, series, stale)
-        return len(stale)
 
     def delete_keys(
         self,
@@ -498,59 +631,14 @@ class ParquetSink(Sink):
         if force_scan:
             missing = dkeys
         if force_scan or not located or missing.limit(1).count() > 0:
-            cand.update(self._locate(df_reader(str(store_dir)), missing, keys))
-        return self._drop_keys_from_partitions(df_reader, dkeys, keys, series, cand)
+            cand.update(
+                locate_keys(df_reader(str(store_dir)), missing, keys, pcols)
+            )
+        return drop_keys(df_reader, store_dir, pcols, dkeys, keys, cand)
 
     def _require_dynamic(self, op: str) -> None:
         if not self.dynamic_overwrite:
             raise ValueError(f"{op} requires dynamic_overwrite (and partition_by)")
-
-    def _part_dir(self, series: str, t: tuple[str, ...]) -> pathlib.Path:
-        """The directory of the partition whose values render as ``t``."""
-        d = self.path / series
-        for c, v in zip(self.partition_by, t):
-            d = d / f"{c}={v}"
-        return d
-
-    def _locate(
-        self, existing: DataFrame, dkeys: DataFrame, keys
-    ) -> dict[tuple[str, ...], tuple]:
-        """Column-pruned key-location scan: every partition of ``existing``
-        holding a key in ``dkeys``. NO broadcast hint on the key set — a
-        CDC delta is unbounded (an availableNow backlog batch can carry
-        millions of keys), so AQE picks the join strategy from real
-        sizes, matching upsert's own left_anti. dict.fromkeys dedups
-        key∩partition column overlap (a partition column may legally be
-        part of the key)."""
-        scan_cols = list(dict.fromkeys([*keys, *self.partition_by]))
-        return _collect_parts(
-            existing.select(*scan_cols).join(dkeys, list(keys), "left_semi"),
-            self.partition_by,
-        )
-
-    def _rewrite(self, frame: DataFrame, series: str, cand=()) -> None:
-        """Dynamic-overwrite ``frame`` into the series; each ``cand``
-        partition (string form) the frame holds no rows for is removed as
-        a directory — dynamic overwrite cannot express an emptied
-        partition, and writes nothing for it (retention_sweep's
-        mechanism). Without ``cand`` there is no survivor probe. Ends by
-        invalidating the session's cached file listing for the path:
-        DataFrames over it from before the rewrite would otherwise
-        FAILED_READ_FILE on the replaced files."""
-        target = str(self.path / series)
-        survivors = set(_collect_parts(frame, self.partition_by)) if cand else set()
-        if survivors or not cand:
-            (
-                frame.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self.partition_by)
-                .parquet(target)
-            )
-        for t in set(cand) - survivors:
-            d = self._part_dir(series, t)
-            if d.exists():
-                shutil.rmtree(d)
-        frame.sparkSession.catalog.refreshByPath(target)
 
     def retention_sweep(self, series: str, keep_from: str) -> list[str]:
         """Drop whole partitions older than ``keep_from`` — the InfluxDB
@@ -566,8 +654,6 @@ class ParquetSink(Sink):
         col = self.partition_by[0]
         target = self.path / series
         dropped = []
-        import shutil
-
         for d in sorted(target.glob(f"{col}=*")):
             value = d.name.split("=", 1)[1]
             if value < keep_from:
@@ -587,22 +673,13 @@ class ParquetSink(Sink):
         ``lambda p: spark.read.parquet(p)`` or the nanos-safe
         ``parquet_compat.read_parquet`` partial) so the sink stays
         session-free.
-        """
-        import shutil
 
+        Crash-safe through :func:`swap_dir` (``__compact_tmp`` /
+        ``__compact_old``); a crash between its renames rolls back to the
+        uncompacted series, which holds the same rows.
+        """
         target = self.path / series
-        tmp = target.with_name(target.name + "__compact_tmp")
-        old = target.with_name(target.name + "__compact_old")
-        # recover from a prior crashed run: a leftover __compact_old means
-        # the swap completed but cleanup didn't (drop it); a leftover
-        # __compact_tmp is an unfinished rewrite (drop and redo).
-        if old.exists():
-            if not target.exists():
-                old.rename(target)  # crashed between swap steps: restore
-            else:
-                shutil.rmtree(old)
-        if tmp.exists():
-            shutil.rmtree(tmp)
+        recover_swap(target, "compact")
         files = [p for p in target.rglob("*.parquet") if p.is_file()]
         total = sum(p.stat().st_size for p in files)
         n_out = max(1, -(-total // target_file_bytes))
@@ -610,14 +687,7 @@ class ParquetSink(Sink):
         writer = df.coalesce(int(n_out)).write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(str(tmp))
-        # swap via rename-aside: the series is only ever missing between
-        # two renames (never between a delete and a rename), and a crash
-        # at any point is recoverable from the markers above. On object
-        # stores use a manifest instead.
-        target.rename(old)
-        tmp.rename(target)
-        shutil.rmtree(old)
+        swap_dir(target, lambda tmp: writer.parquet(str(tmp)), "compact")
         return len([p for p in target.rglob("*.parquet") if p.is_file()])
 
 

@@ -21,7 +21,6 @@ dedup key for effectively-once, as in batch (sinks/base.py).
 
 from __future__ import annotations
 
-import pathlib
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from node_mongo2influx_spark.operators.transform import TransformSpec
 from node_mongo2influx_spark.sinks.base import Sink
-from node_mongo2influx_spark.sinks.parquet import _has_data_files
+from node_mongo2influx_spark.sinks.parquet import read_store, write_batch_log
 
 
 def read_stream(
@@ -64,17 +63,26 @@ def migrate_stream(
     carry ``observe`` the same way, so null-time rows are dropped without
     accounting and no per-batch counts are reported.
     """
-    out = transform.valid(source)
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         sink.write(batch_df, series)
 
+    return _start(
+        transform.valid(source), write_batch, checkpoint_dir, trigger_once
+    )
+
+
+def _start(
+    frame: DataFrame, write_batch, checkpoint_dir: str, available_now: bool = True
+) -> StreamingQuery:
+    """Start ``frame`` with ``write_batch(batch_df, batch_id)`` run on every
+    micro-batch (``foreachBatch``), checkpointed in ``checkpoint_dir``;
+    ``available_now`` drains what the source holds and stops."""
     writer = (
-        out.writeStream.foreachBatch(write_batch)
+        frame.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if trigger_once:
+    if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
@@ -267,10 +275,10 @@ def incremental_dedup_stream(
     keep the first occurrence within the batch (min id per fp), anti-join
     against the persisted fingerprint table, then
 
-    1. append survivors to ``out_dir`` partitioned by ``ingest_batch``
-       under DYNAMIC partition overwrite — a replayed micro-batch (crash
-       before checkpoint commit) rewrites its own partition instead of
-       duplicating it;
+    1. write survivors to ``out_dir`` as one batch of a log store
+       (:func:`~node_mongo2influx_spark.sinks.parquet.write_batch_log`:
+       a replayed micro-batch rewrites its own partition instead of
+       duplicating it);
     2. append survivors' fingerprints to ``fp_dir`` — duplicate fp rows
        from a replay are harmless (anti-join semantics are set-based), so
        this side needs no transactionality.
@@ -296,33 +304,17 @@ def incremental_dedup_stream(
             .where(F.col("min_id") == F.col(id_col))
             .drop("min_id")
         )
-        from pyspark.errors import AnalysisException
-
+        # no fingerprint store yet reads as empty; any other read
+        # failure fails the batch instead of silently skipping the dedup
+        seen = read_store(spark, fp_dir, "fp string").select("fp")
+        b = b.join(seen, "fp", "left_anti").cache()
         try:
-            seen = spark.read.parquet(fp_dir).select("fp")
-            b = b.join(seen, "fp", "left_anti")
-        except AnalysisException:  # first batch: no fingerprint store yet
-            pass
-        b = b.withColumn("ingest_batch", F.lit(batch_id)).cache()
-        try:
-            (
-                b.drop("fp")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(out_dir)
-            )
+            write_batch_log(b.drop("fp"), out_dir, batch_id)
             b.select("fp").write.mode("append").parquet(fp_dir)
         finally:
             b.unpersist()
 
-    return (
-        source.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, write_batch, checkpoint_dir)
 
 
 def rollup_maintenance_stream(
@@ -338,12 +330,11 @@ def rollup_maintenance_stream(
     ``rollup_incremental_refresh``'s merge algebra.
 
     Per micro-batch: aggregate the arriving events to (key, bucket,
-    count, cent-sum, cent-min, cent-max) partials and write them under
-    ``ingest_batch=<id>`` with DYNAMIC partition overwrite. A replayed
-    micro-batch (crash before checkpoint commit) rewrites its OWN
-    partition instead of double-counting — replay-idempotent with no
-    read-modify-write and no transaction coordinator, because the store
-    is a log of partials, not the merged result. Readers merge on read
+    count, cent-sum, cent-min, cent-max) partials and write them as one
+    batch of a log store
+    (:func:`~node_mongo2influx_spark.sinks.parquet.write_batch_log`) —
+    replay-idempotent with no read-modify-write, because the store is a
+    log of partials, not the merged result. Readers merge on read
     (:func:`read_rollup_store`: one groupBy-sum, exact because the
     partials are integers); periodic compaction
     (``sinks/parquet.py``) collapses the log so the merge stays
@@ -355,31 +346,18 @@ def rollup_maintenance_stream(
     cents = F.round(F.col(value_col) * 100).cast("long")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy(
-                F.col(key_col),
-                F.window(time_col, "5 minutes").start.alias("bucket"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(cents).alias("c_sum"),
-                F.min(cents).alias("c_min"),
-                F.max(cents).alias("c_max"),
-            )
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(store_dir)
+        partials = batch_df.groupBy(
+            F.col(key_col),
+            F.window(time_col, "5 minutes").start.alias("bucket"),
+        ).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(cents).alias("c_sum"),
+            F.min(cents).alias("c_min"),
+            F.max(cents).alias("c_max"),
         )
+        write_batch_log(partials, store_dir, batch_id)
 
-    return (
-        source.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, write_batch, checkpoint_dir)
 
 
 def _reduce_last_write(
@@ -633,13 +611,13 @@ def cdc_apply_stream(
                 and (guard_seq or prev_cols is None),
             )
 
-    return (
-        source.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, write_batch, checkpoint_dir)
+
+
+_DRIFT_LOG_SCHEMA = (
+    "base_rel_err double, delta_rel_err double, ratio double, "
+    "rebuild boolean, n_base long, n_delta long"
+)
 
 
 def ann_index_maintenance_stream(
@@ -691,9 +669,10 @@ def ann_index_maintenance_stream(
     into the model at build time, so the row values are a pure function
     of (model, delta): byte-identical under replay, and gradual corpus
     drift can't normalize itself away. One row (ratio, rebuild, counts)
-    lands under the batch's own ``ingest_batch`` partition — dynamic
-    overwrite, so a replayed batch rewrites its own row and the log
-    stays replay-idempotent like the index itself. Read
+    lands as one batch of a log store
+    (:func:`~node_mongo2influx_spark.sinks.parquet.write_batch_log`), so
+    a replayed batch rewrites its own row and the log stays
+    replay-idempotent like the index itself. Read
     it back with :func:`read_drift_log`; a ``rebuild=true`` row is the
     operator's signal to schedule :func:`build_ivfpq_index` — appends
     keep applying either way (availability over recall, the caller
@@ -742,40 +721,25 @@ def ann_index_maintenance_stream(
         if rep is not None:
             # logged AFTER the append: a crash in between replays the
             # whole batch (delete-then-append converges), and the row is
-            # dynamic-overwrite idempotent under its batch partition
-            spark.createDataFrame(
+            # idempotent under its batch partition
+            row = spark.createDataFrame(
                 [(
                     rep["base_rel_err"], rep["delta_rel_err"], rep["ratio"],
                     rep["rebuild"], rep["n_base"], rep["n_delta"],
-                    int(batch_id),
                 )],
-                "base_rel_err double, delta_rel_err double, ratio double, "
-                "rebuild boolean, n_base long, n_delta long, "
-                "ingest_batch long",
-            ).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("ingest_batch").parquet(drift_log_dir)
+                _DRIFT_LOG_SCHEMA,
+            )
+            write_batch_log(row, drift_log_dir, batch_id)
 
-    return (
-        source.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, write_batch, checkpoint_dir)
 
 
 def read_drift_log(spark, log_dir: str) -> DataFrame:
     """The drift log written by :func:`ann_index_maintenance_stream`
-    (``drift_log_dir``): one row per live-key batch. A data-file-less
-    store reads as EMPTY (the shared store-reader rule)."""
-    if not _has_data_files(pathlib.Path(log_dir)):
-        return spark.createDataFrame(
-            [],
-            "base_rel_err double, delta_rel_err double, ratio double, "
-            "rebuild boolean, n_base long, n_delta long, ingest_batch long",
-        )
-    return spark.read.parquet(log_dir)
+    (``drift_log_dir``): one row per live-key batch, read through
+    :func:`~node_mongo2influx_spark.sinks.parquet.read_store` (a
+    data-file-less log reads as EMPTY)."""
+    return read_store(spark, log_dir, _DRIFT_LOG_SCHEMA + ", ingest_batch int")
 
 
 def drift_forecast(
@@ -869,17 +833,18 @@ def read_rollup_store(
     :func:`rollup_maintenance_stream`: one groupBy collapses all
     per-batch partials into the current rollup. Exact-integer partials
     make the merge bit-identical to a single-pass aggregate over the raw
-    events, however the batches sliced them. A data-file-less store
-    reads as EMPTY (``key_type`` pins the key column's type on that
-    path — parquet footers can't supply it when there are none)."""
-    if not _has_data_files(pathlib.Path(store_dir)):
-        return spark.createDataFrame(
-            [],
-            f"{key_col} {key_type}, bucket timestamp, n long, "
-            "c_sum long, c_min long, c_max long",
-        )
-    p = spark.read.parquet(store_dir)
-    return p.groupBy(key_col, "bucket").agg(
+    events, however the batches sliced them. The log is read through
+    :func:`~node_mongo2influx_spark.sinks.parquet.read_store`, so a
+    data-file-less store reads as EMPTY (``key_type`` pins the key
+    column's type on that path — parquet footers can't supply it when
+    there are none)."""
+    log = read_store(
+        spark,
+        store_dir,
+        f"{key_col} {key_type}, bucket timestamp, n long, "
+        "c_sum long, c_min long, c_max long",
+    )
+    return log.groupBy(key_col, "bucket").agg(
         F.sum("n").alias("n"),
         F.sum("c_sum").alias("c_sum"),
         F.min("c_min").alias("c_min"),
@@ -911,24 +876,14 @@ def distinct_maintenance_stream(
     from node_mongo2influx_spark.functions.hll import hll_registers
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        regs = (
             hll_registers(batch_df, [key_col], value_col)
             .withColumnRenamed("__bucket", "bucket")
             .withColumnRenamed("__m", "register")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(store_dir)
         )
+        write_batch_log(regs, store_dir, batch_id)
 
-    return (
-        source.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, write_batch, checkpoint_dir)
 
 
 def read_distinct_store(
@@ -939,22 +894,18 @@ def read_distinct_store(
     log: max-merge the per-batch registers, then estimate — identical
     output contract to ``hll_count_distinct`` over the full raw data.
 
-    A register-less store (first batch carried only NULL values, or a
-    compaction left no data files) reads as EMPTY — the CLAUDE.md r6
-    store-reader rule: a _SUCCESS-only directory is UNREADABLE
-    (UNABLE_TO_INFER_SCHEMA) and must not wedge later reads. On that
-    path ``key_type`` pins the key column's type (no footers to infer
-    from) so the empty frame's schema matches a populated store's."""
+    The log is read through
+    :func:`~node_mongo2influx_spark.sinks.parquet.read_store`: a
+    register-less store (first batch carried only NULL values, or a
+    compaction left no data files) reads as EMPTY. On that path
+    ``key_type`` pins the key column's type (no footers to infer from)
+    so the empty frame's schema matches a populated store's."""
     from node_mongo2influx_spark.functions.hll import hll_estimate
 
-    if not _has_data_files(pathlib.Path(store_dir)):
-        return spark.createDataFrame(
-            [],
-            f"{key_col} {key_type}, used_buckets long, zero_buckets long, "
-            "sum_inv_scaled long, hll_estimate double",
-        )
     regs = (
-        spark.read.parquet(store_dir)
+        read_store(
+            spark, store_dir, f"{key_col} {key_type}, bucket long, register int"
+        )
         .groupBy(key_col, "bucket")
         .agg(F.max("register").alias("__m"))
     )
@@ -979,47 +930,39 @@ def integrity_maintenance_stream(
     from a full post-hoc rescan. Same IVM design as
     :func:`rollup_maintenance_stream`: integer partials sum
     associatively, each micro-batch writes O(its own distinct ids) rows
-    under ``ingest_batch=<id>`` with dynamic partition overwrite (a
-    replayed batch rewrites its OWN partition — replay-idempotent, no
-    read-modify-write), merge-on-read is one groupBy-sum, and the
+    as one batch of a log store
+    (:func:`~node_mongo2influx_spark.sinks.parquet.write_batch_log` —
+    replay-idempotent, no read-modify-write), merge-on-read is one
+    groupBy-sum, and the
     merged census is bit-identical to the batch query over all data.
     """
     from node_mongo2influx_spark.operators import integrity
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            integrity.per_id_counts(batch_df, id_col)
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(store_dir)
+        write_batch_log(
+            integrity.per_id_counts(batch_df, id_col), store_dir, batch_id
         )
 
-    return (
-        source.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, write_batch, checkpoint_dir)
 
 
 def read_integrity_store(spark, store_dir: str) -> DataFrame:
     """Merge-on-read over :func:`integrity_maintenance_stream`'s partial
     log: sum the per-batch per-id counts, then the SAME census aggregate
     as the batch query — one row (``table_name``-free), or EMPTY for a
-    store with no data files (the r6 store-reader rule)."""
+    store with no data files
+    (:func:`~node_mongo2influx_spark.sinks.parquet.read_store`)."""
     from node_mongo2influx_spark.operators import integrity
 
-    if not _has_data_files(pathlib.Path(store_dir)):
-        return spark.createDataFrame([], integrity.CENSUS_FIELDS)
     per_id = (
-        spark.read.parquet(store_dir)
+        read_store(spark, store_dir, "id long, c long")
         .groupBy("id")
         .agg(F.sum("c").alias("c"))
+        .withColumn("__store", F.lit(0))
     )
-    return integrity.id_census(per_id, [])
+    # grouped by one constant, an empty log has no group and so no
+    # census row (a global aggregate would mint an all-NULL one)
+    return integrity.id_census(per_id, ["__store"]).drop("__store")
 
 
 def ohlc_stream(

@@ -34,6 +34,21 @@ def test_cli_bad_sink_spec():
         main(["--source", "/tmp", "--sink", "bogus:x"])
 
 
+def test_cli_insert_limit_below_one_exits_with_message(tmp_path):
+    # rejected with a one-line message before any Spark work, not a
+    # traceback and not one POST per line
+    import pytest
+
+    with pytest.raises(SystemExit) as exc:
+        main(
+            ["--source", str(tmp_path), "--sink", f"influx-spool:{tmp_path}/lp",
+             "--insert-limit", "0"]
+        )
+    assert exc.value.code == (
+        "invalid sink option: insert_limit must be >= 1, got 0"
+    )
+
+
 def test_cli_compact(spark, sf_dir, tmp_path, capsys):
     # seed a fragmented series, then compact it via the CLI
     base = spark.read.parquet(f"{sf_dir}/region.parquet")

@@ -7,10 +7,16 @@ directories (PartitionFilters), not the whole series.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from node_mongo2influx_spark import TransformSpec
 from node_mongo2influx_spark.sinks import ParquetSink
+from node_mongo2influx_spark.sinks.parquet import (
+    _has_data_files,
+    recover_swap,
+    swap_dir,
+)
 from node_mongo2influx_spark.sources.catalog import DirectoryCatalog
 
 
@@ -201,6 +207,62 @@ def test_compact_recovers_from_crashed_prior_run(engine, sf_dir, tmp_path):
     sink.compact(lambda p: spark.read.parquet(p), "events")
     assert not old.exists()
     assert spark.read.parquet(str(target)).count() == n
+
+
+def _write_store(d, text):
+    d.mkdir()
+    (d / "part-0.parquet").write_text(text)
+
+
+def _store_text(d):
+    return {p.name: p.read_text() for p in d.iterdir()}
+
+
+@pytest.mark.parametrize(
+    "state, complete, expect",
+    [
+        # crash while the tmp is being written: the live store stays
+        ("tmp_partly_written", True, "live"),
+        # crash between the renames: a complete tmp rolls forward when
+        # the caller's check accepts it, back otherwise
+        ("live_renamed_aside", True, "new"),
+        ("live_renamed_aside", False, "live"),
+        ("live_renamed_aside_tmp_partial", True, "live"),
+        # crash before the old store was removed
+        ("tmp_promoted_old_kept", True, "new"),
+        ("leftovers_beside_live", True, "live"),
+    ],
+)
+def test_swap_recovers_every_crash_window(tmp_path, state, complete, expect):
+    # Spark-free: the tmp holds different content from the live store,
+    # so rolling forward and rolling back are told apart
+    target = tmp_path / "store"
+    tmp = tmp_path / "store__compact_tmp"
+    old = tmp_path / "store__compact_old"
+    if state == "tmp_partly_written":
+        _write_store(target, "live")
+        (tmp / "_temporary").mkdir(parents=True)
+    elif state == "live_renamed_aside":
+        _write_store(old, "live")
+        _write_store(tmp, "new")
+    elif state == "live_renamed_aside_tmp_partial":
+        _write_store(old, "live")
+        (tmp / "_temporary").mkdir(parents=True)
+    elif state == "tmp_promoted_old_kept":
+        _write_store(target, "new")
+        _write_store(old, "live")
+    else:
+        _write_store(target, "live")
+        _write_store(tmp, "new")
+        _write_store(old, "stale")
+
+    recover_swap(target, "compact", _has_data_files if complete else None)
+    assert _store_text(target) == {"part-0.parquet": expect}
+    assert not tmp.exists() and not old.exists()
+    # the recovered store swaps cleanly again
+    swap_dir(target, lambda d: _write_store(d, "next"), "compact")
+    assert _store_text(target) == {"part-0.parquet": "next"}
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["store"]
 
 
 def test_z_order_write_prunes_both_dimensions(spark, sf_dir, tmp_path):

@@ -6,6 +6,8 @@ from __future__ import annotations
 import datetime
 import pathlib
 
+import pytest
+
 from node_mongo2influx_spark import TransformSpec
 from node_mongo2influx_spark.sinks import InfluxLineProtocolSink, NoopSink
 from node_mongo2influx_spark.sinks.influx import SpoolTransport, batches, render_lines
@@ -201,3 +203,11 @@ def test_influx_rows_in_equals_written_plus_skipped(engine, tmp_path):
         for ln in f.read_text().splitlines()
     ]
     assert len(lines) == tr.rows_written
+
+
+@pytest.mark.parametrize("limit", [0, -5])
+def test_insert_limit_below_one_is_rejected(limit, tmp_path):
+    # batches() yields one-line batches for any limit < 1, so such a sink
+    # would quietly send one POST per line
+    with pytest.raises(ValueError, match=f"insert_limit must be >= 1, got {limit}"):
+        InfluxLineProtocolSink(SpoolTransport(str(tmp_path)), insert_limit=limit)

@@ -405,6 +405,32 @@ def test_incremental_dedup_stream_cross_batch(spark, sf_dir, tmp_path):
     assert out2.select("text").distinct().count() == 150
 
 
+def test_incremental_dedup_stream_fails_on_unreadable_fingerprint_store(
+    spark, tmp_path
+):
+    # A fingerprint store that exists but is not one (no `fp` column)
+    # must fail the query and name the column; reading it as "no
+    # fingerprints yet" would silently stop deduplicating.
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "one"), (2, "two")], "doc_id long, text string"
+    ).coalesce(1).write.parquet(src)
+    fp_dir = str(tmp_path / "fps")
+    spark.createDataFrame([(1,)], "x long").write.parquet(fp_dir)
+    out_dir = tmp_path / "corpus"
+    q = sp.incremental_dedup_stream(
+        sp.read_stream(spark, src, spark.read.parquet(src).schema),
+        str(out_dir),
+        fp_dir,
+        str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException, match="`fp`"):
+        q.awaitTermination(120)
+    assert not out_dir.exists()
+
+
 def test_ohlc_stream_matches_batch(spark, events_stream_dir, tmp_path):
     # The streamed OHLC bars must equal the batch aggregate row-for-row:
     # open/close come from lexicographic struct min/max, which is arrival-
