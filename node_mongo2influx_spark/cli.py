@@ -220,6 +220,8 @@ def main(argv: list[str] | None = None) -> int:
         else DirectoryCatalog(engine.spark, args.source)
     )
     report = engine.migrate(catalog, spec, sink, tables=args.tables)
+    if not report.tables:
+        raise SystemExit(f"no tables to migrate in source: {args.source}")
 
     print(
         json.dumps(

@@ -261,8 +261,8 @@ def hll_overlap_from_registers(regs: DataFrame, key_col: str) -> DataFrame:
     the registers ALONE — no access to the underlying values.
 
     ``regs`` is (key_col, __bucket, __m) — :func:`hll_registers` output,
-    or a max-merged register store (streaming/pipeline.read_distinct_store
-    feeds this after its merge step). The union's harmonic sum comes from
+    or a max-merged register store (a groupBy-max over per-batch
+    register partials). The union's harmonic sum comes from
     inclusion-exclusion on the EXACT INTEGER per-key sums: shared buckets
     contribute the max-register term via a bucket equi-join of
     sketch-sized tables, one-sided buckets keep their own terms — so the

@@ -5,14 +5,12 @@ The reference migrates collections independently (index.js:99-108 loops
 migrated corpus can silently carry duplicate or NULL primary ids and
 cross-collection orphans. These operators are the post-migration audit —
 and the shared spelling behind the batch queries
-(``plans/llm_ops.id_integrity_qa`` / ``referential_integrity_qa``) and
-the streaming monitor (``streaming/pipeline.integrity_maintenance_stream``).
+(``plans/llm_ops.id_integrity_qa`` / ``referential_integrity_qa``).
 
 The algebra is deliberately MERGEABLE: the census consumes per-id COUNT
 partials, and integer counts sum associatively, so the same
 :func:`id_census` runs over a one-pass batch aggregate or over a
-merge-on-read of per-micro-batch partial logs with bit-identical output
-(the rollup-store IVM design, streaming/pipeline.py).
+merge-on-read of per-batch partial logs with bit-identical output.
 """
 
 from __future__ import annotations

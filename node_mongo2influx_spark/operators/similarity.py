@@ -2620,10 +2620,10 @@ def cosine_pairs_ivf_index(
     skew statistics harvested from the codes partition layout
     (:func:`ivfpq_cell_populations`). Zero training, zero probe scan —
     the 100 TB posture for deduplicating a corpus that already maintains
-    a searchable index (:func:`ann_index_maintenance_stream
-    <node_mongo2influx_spark.streaming.pipeline.ann_index_maintenance_stream>`
-    keeps all three stores in lockstep, so the harvested populations are
-    current as of the last applied batch). Same output contract as
+    a searchable index (:func:`append_to_ivfpq_index` and
+    :func:`delete_from_ivfpq_index` keep all three stores in lockstep, so
+    the harvested populations are current as of the last applied change).
+    Same output contract as
     :func:`cosine_pairs_ivf`: (vec_a, vec_b, cosine), exact scores,
     every edge true.
     """
@@ -2798,8 +2798,8 @@ def delete_from_ivfpq_index(
     the FAISS ``remove_ids()`` face completing the index lifecycle
     (build / append / query / delete); the retraction companion to
     :func:`append_to_ivfpq_index` and the index-side consumer of a CDC
-    delete feed (``cdc_apply_stream(op_col=...)`` retracts the store
-    row, this retracts the ANN entry).
+    delete feed (``ParquetSink.delete_keys`` retracts the store row, this
+    retracts the ANN entry).
 
     ``ids`` is a DataFrame whose FIRST column is the id, or any iterable
     of ids. Cost shape:
@@ -2823,8 +2823,7 @@ def delete_from_ivfpq_index(
       lockstep (no codes ⇒ no vectors; saves the no-op bucket rewrite
       on pure-insert batches). Vacuuming is MANDATORY for update flows
       (delete-then-reappend of a live id): a stale row sharing a live
-      vid WOULD reach the rerank join —
-      :func:`ann_index_maintenance_stream` vacuums with ``"located"``.
+      vid WOULD reach the rerank join — vacuum with ``"located"``.
 
     Ids must be integral (the codes kernels emit ``vid long``; all id
     handling canonicalizes through a LONG cast — xxhash64 bucketing is
@@ -2883,8 +2882,8 @@ def _drop_vectors(spark, path: str, df_reader, dkeys: DataFrame) -> int:
 
 def compact_ivfpq_index(spark, path: str) -> dict:
     """Small-file compaction for the persisted index stores —
-    :func:`ann_index_maintenance_stream` appends one file per touched
-    cell/bucket per micro-batch, so a long-running feed accumulates
+    :func:`append_to_ivfpq_index` writes one file per touched
+    cell/bucket per call, so a long-running feed accumulates
     per-partition file counts that make the probed-cells scan
     open-bound, not byte-bound. One ``repartition(part_col)`` rewrite
     collapses each partition directory to a single file.
@@ -2939,8 +2938,7 @@ def vacuum_ivfpq_index(spark, path: str) -> dict:
     :func:`~node_mongo2influx_spark.sinks.parquet.drop_keys` rewrite as
     delete, after :func:`_recover_rebuild`. Reconciliation is BY ID:
     an update flow (delete-then-reappend of a live id) must vacuum at
-    delete time (``vacuum_vectors="located"``, as
-    ``ann_index_maintenance_stream`` does) — two rows sharing a live
+    delete time (``vacuum_vectors="located"``) — two rows sharing a live
     vid are indistinguishable here. Idempotent: a second run reclaims
     nothing. Returns {stale_rows, buckets_rewritten, bytes_before,
     bytes_after}.
@@ -3176,11 +3174,10 @@ def ivfpq_drift_probe(
     n_delta}``; ``rebuild`` is True when ratio > ``rebuild_factor``.
     Empty delta (or no baseline and an empty vectors store) never
     recommends a rebuild — it reports ``ratio=None``. Maintenance
-    cadence: run on each append batch (or let
-    :func:`ann_index_maintenance_stream
-    <node_mongo2influx_spark.streaming.pipeline.ann_index_maintenance_stream>`
-    log it per batch via ``drift_log_dir``); on ``rebuild`` re-train
-    via :func:`build_ivfpq_index`."""
+    cadence: run on each append batch (one row per batch is the series
+    :func:`~node_mongo2influx_spark.streaming.pipeline.drift_forecast`
+    extrapolates); on ``rebuild`` re-train via
+    :func:`build_ivfpq_index`."""
     cents, anchors, books = load_ivfpq_model(spark, path)
 
     brow = (

@@ -342,8 +342,8 @@ def _overlap_hll_oracle() -> str:
     "across engines (FULL oracle), with the exact shared-hash counts "
     "joined in-row as the accuracy witness. Per source pair the input "
     "is ≤ 2·256 small ints at ANY corpus size; sketches can be "
-    "maintained incrementally (distinct_maintenance_stream) and "
-    "compared without touching data.",
+    "maintained incrementally (per-batch register partials merged by "
+    "max) and compared without touching data.",
 )
 def source_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from node_mongo2influx_spark.functions.hll import (
@@ -2419,7 +2419,7 @@ def _drift_forecast_oracle() -> str:
     "events fixture (one batch per day, exact-integer basis points with "
     "a quadratic trend plus a data-derived jitter) so the full pipeline "
     "is oracle-checked; streaming/pipeline.drift_forecast is the same "
-    "code over the real read_drift_log output (pytest-gated, including "
+    "code over any per-batch drift log (pytest-gated, including "
     "the flag-day pin: the last pre-alarm ETA lands within 1 batch of "
     "the actual crossing). Exact-integer regression (the "
     "cusum_drift_chunked rule): slope numerator/denominator and the "

@@ -505,8 +505,7 @@ def gapfill_minutely(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline. The oracle rebuilds the identical sessions with the "
     "gap-and-running-sum formulation and reproduces session_window's "
     "end-at-last-event-plus-gap convention. Complements sessionize_events "
-    "(the manual formulation) and session_window_stream (the streaming "
-    "twin).",
+    "(the manual formulation).",
 )
 def batch_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_events_timed(spark, sf_dir)

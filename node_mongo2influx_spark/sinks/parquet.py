@@ -50,33 +50,6 @@ def _has_data_files(store_dir: pathlib.Path) -> bool:
     )
 
 
-def read_store(spark, store_dir: str, empty_schema: str) -> DataFrame:
-    """The parquet store at ``store_dir``, or an empty frame of
-    ``empty_schema`` when it holds no data files (absent, or left with
-    only _SUCCESS by an empty or emptied write — see
-    :func:`_has_data_files`). Probing instead of catching read errors
-    keeps every other failure a failure: a store that exists but cannot
-    be read fails its caller instead of reading as empty."""
-    if not _has_data_files(pathlib.Path(store_dir)):
-        return spark.createDataFrame([], empty_schema)
-    return spark.read.parquet(store_dir)
-
-
-def write_batch_log(df: DataFrame, store_dir: str, batch_id: int) -> None:
-    """Write one micro-batch of an append-only log store under its own
-    ``ingest_batch=<batch_id>`` partition with DYNAMIC overwrite: a
-    replayed batch (a crash before the checkpoint commit) rewrites its
-    own partition instead of appending a duplicate, so the log is
-    replay-idempotent with no transaction coordinator."""
-    (
-        df.withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(store_dir)
-    )
-
-
 def _swap_paths(
     target: pathlib.Path, suffix: str
 ) -> tuple[pathlib.Path, pathlib.Path]:
@@ -338,8 +311,8 @@ class ParquetSink(Sink):
         the cost is O(touched partitions), not O(table). The delta must
         carry its partition columns; a key that MOVES partitions leaves
         the old row in the old partition — run :meth:`sweep_moved_keys`
-        after the upsert when keys can migrate (``cdc_apply_stream``
-        wires both). Returns the number of touched partitions.
+        after the upsert when keys can migrate. Returns the number of
+        touched partitions.
 
         ``order_col`` makes the merge OUT-OF-ORDER TOLERANT: the column
         (a monotonic version, e.g. ``__seq``) is persisted with the
@@ -353,9 +326,7 @@ class ParquetSink(Sink):
         partition value to be STABLE (a stale row landing in a
         DIFFERENT partition than the stored one cannot see it) — for
         feeds whose keys MIGRATE while arriving out of order, use
-        :meth:`upsert_guarded_moving` (the global per-key guard;
-        ``cdc_apply_stream(guard_seq=True, sweep_moved_keys=True)``
-        routes there).
+        :meth:`upsert_guarded_moving` (the global per-key guard).
 
         ``evolve_schema=True`` lets the delta ADD columns (the continuous
         face of migrating a schemaless Mongo collection that grew a
@@ -365,9 +336,8 @@ class ParquetSink(Sink):
         are rewritten with the widened schema — an evolved store is
         mixed-schema on disk and MUST be read with
         ``spark.read.option("mergeSchema", "true")`` (pass such a reader
-        as ``df_reader`` too; ``cdc_apply_stream(evolve_schema=True)``
-        does both). Without the flag a schema mismatch fails loudly
-        (unionByName), never silently drops a column.
+        as ``df_reader`` too). Without the flag a schema mismatch fails
+        loudly (unionByName), never silently drops a column.
 
         This is the continuous-load companion to the reference's
         truncate-then-load (index.js:328): the reference rewrites the
@@ -505,8 +475,8 @@ class ParquetSink(Sink):
         lands, but a key whose PARTITION VALUE changed (a record moved
         from day A to day B) leaves its stale copy in the old partition
         if the delta didn't also touch it. This sweep removes those
-        stale copies; run it after upsert (``cdc_apply_stream`` wires
-        both). Returns the number of stale partitions rewritten/dropped.
+        stale copies; run it after upsert. Returns the number of stale
+        partitions rewritten/dropped.
 
         Two cost tiers for FINDING the stale partitions:
 
@@ -521,11 +491,11 @@ class ParquetSink(Sink):
 
         ``prev_source`` (defaults to ``delta``) is the frame the
         before-images are read from. It matters when the delta was
-        REDUCED to last-write-wins per key first (cdc_apply_stream): a
-        key that migrates TWICE in one batch (A→B then B→C) keeps only
-        the final event's before-image (B) after reduction, stranding
-        the stale copy in A — so the stream passes the UN-reduced batch
-        here. Extra candidate partitions cost at most a no-op rewrite.
+        REDUCED to last-write-wins per key first: a key that migrates
+        TWICE in one batch (A→B then B→C) keeps only the final event's
+        before-image (B) after reduction, stranding the stale copy in A
+        — so pass the UN-reduced batch here. Extra candidate partitions
+        cost at most a no-op rewrite.
 
         Idempotent: a replayed sweep finds no surviving copies (or
         rewrites identical rows) and changes nothing. Partitions left
@@ -586,12 +556,11 @@ class ParquetSink(Sink):
         (restricted to the deleted keys); pass the UN-reduced batch when
         the deletes were last-write-wins reduced first — a key that
         migrated partitions and was deleted in the SAME batch names its
-        old partition only on its earlier events (cdc_apply_stream
-        does). ``force_scan=True`` unconditionally adds the
-        key-location scan: required for full correctness when keys can
-        migrate ACROSS batches and the feed carries no before-images
-        (the same cost tier sweep_moved_keys pays in that
-        configuration).
+        old partition only on its earlier events. ``force_scan=True``
+        unconditionally adds the key-location scan: required for full
+        correctness when keys can migrate ACROSS batches and the feed
+        carries no before-images (the same cost tier sweep_moved_keys
+        pays in that configuration).
 
         Unlike the sweep there is NO exclusion set: the key must vanish
         from every named partition. Idempotent (a replayed delete finds

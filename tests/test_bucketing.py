@@ -98,10 +98,10 @@ def test_unbucketed_join_does_exchange(spark, sf_dir):
 
 def test_bucketed_fingerprint_store_one_sided_exchange(spark, sf_dir):
     # The incremental-dedup fingerprint store (operators/dedup.py
-    # incremental_exact, streaming/pipeline.py incremental_dedup_stream)
-    # persisted BUCKETED by fp: each arriving delta batch anti-joins the
-    # store with an Exchange on the (small) delta side ONLY — the
-    # 100 TB-history side is never reshuffled per increment.
+    # incremental_exact) persisted BUCKETED by fp: each arriving delta
+    # batch anti-joins the store with an Exchange on the (small) delta
+    # side ONLY — the 100 TB-history side is never reshuffled per
+    # increment.
     docs = load(spark, sf_dir, "documents")
     fps = docs.select(F.md5("text").alias("fp")).distinct()
     (

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from node_mongo2influx_spark.cli import main
 
 
@@ -47,6 +49,16 @@ def test_cli_insert_limit_below_one_exits_with_message(tmp_path):
     assert exc.value.code == (
         "invalid sink option: insert_limit must be >= 1, got 0"
     )
+
+
+@pytest.mark.parametrize("spool", [False, True])
+def test_cli_empty_source_exits_with_message(spark, tmp_path, capsys, spool):
+    # a source with no tables is a failed migration, not an empty report
+    source = f"spool:{tmp_path}" if spool else str(tmp_path)
+    with pytest.raises(SystemExit) as exc:
+        main(["--source", source, "--sink", f"parquet:{tmp_path}/out"])
+    assert exc.value.code == f"no tables to migrate in source: {source}"
+    assert capsys.readouterr().out == ""
 
 
 def test_cli_compact(spark, sf_dir, tmp_path, capsys):
