@@ -165,6 +165,10 @@ def main(argv: list[str] | None = None) -> int:
         kind, _, rest = (args.sink or "").partition(":")
         if kind != "parquet" or not rest:
             raise SystemExit("--compact requires --sink parquet:<dir>")
+        if args.target_file_mb < 1:
+            raise SystemExit(
+                f"--target-file-mb must be >= 1, got {args.target_file_mb}"
+            )
         engine = Engine.builder(master=args.master)
         sink = ParquetSink(rest)
         n = sink.compact(
@@ -188,6 +192,8 @@ def main(argv: list[str] | None = None) -> int:
         # `--tables` with no values (e.g. an empty shell expansion) would
         # otherwise silently migrate nothing and exit 0.
         raise SystemExit("--tables given but empty; omit it to migrate all tables")
+    if args.limit < 1:
+        raise SystemExit(f"--limit must be >= 1, got {args.limit}")
     try:
         sink = _build_sink(args.sink, args.insert_limit, args.time_column)
     except ValueError as e:  # e.g. --insert-limit 0, before Spark starts

@@ -159,6 +159,11 @@ class Engine:
         partition parallelism replaces the reference's serial page/batch
         loops (index.js:194, :227).
         """
+        if self.config.table_concurrency < 1:
+            raise ValueError(
+                "table_concurrency must be >= 1, got "
+                f"{self.config.table_concurrency}"
+            )
         if tables is not None:
             names = tables
         else:
@@ -169,9 +174,8 @@ class Engine:
             names = [n for n in catalog.table_names() if not is_system_table(n)]
         report = MigrationReport()
         t0 = time.monotonic()
-        max_workers = max(1, self.config.table_concurrency)
         done = 0
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        with ThreadPoolExecutor(max_workers=self.config.table_concurrency) as pool:
             futures = {
                 pool.submit(self._migrate_table, catalog, name, transform, sink): name
                 for name in names

@@ -20,8 +20,6 @@ arithmetic so results are engine-comparable.
 
 from __future__ import annotations
 
-import pathlib
-
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -31,14 +29,6 @@ from node_mongo2influx_spark.functions.vec import (
     usable_mask_np,
     usable_vector_py,
     usable_vector_sql,
-)
-from node_mongo2influx_spark.sinks.parquet import (
-    _collect_parts,
-    _has_data_files,
-    drop_keys,
-    locate_keys,
-    recover_swap,
-    swap_dir,
 )
 
 
@@ -174,11 +164,9 @@ class EmptyTrainingInput(ValueError):
     """The quantizer/codebook trainers collected an EMPTY sample.
 
     At 100 TB an empty corpus mid-pipeline is routine (a filter that
-    matched nothing, an empty CDC delta), so the PUBLIC search operators
+    matched nothing, an empty delta), so the PUBLIC search operators
     catch this and degrade to an empty result frame instead of killing
-    the job. An explicit index BUILD (:func:`build_ivfpq_index`) lets it
-    propagate — training an index over nothing is a caller error, the
-    same contract as FAISS ``train()``.
+    the job.
     """
 
 
@@ -190,9 +178,9 @@ class QueryBatchTooLarge(ValueError):
     driver. Raw PQ (:func:`knn_cosine_pq`) has no coarse cell structure
     to cogroup on, so there is no distributed twin AT THAT TIER — the
     message names :func:`knn_cosine_ivfpq_batch`, whose IVF level
-    exists precisely to give the distributed path its key. Tiers that
-    DO have the structure (:func:`knn_cosine_ivfpq`,
-    :func:`query_ivfpq_index`) auto-delegate instead of raising.
+    exists precisely to give the distributed path its key. The tier
+    that DOES have the structure (:func:`knn_cosine_ivfpq`)
+    auto-delegates instead of raising.
     """
 
 
@@ -474,36 +462,6 @@ def _score_pairs(
         " (acc, v) -> acc + v) / (na * nb) AS cos_raw",
     ).where(F.col("cos_raw") >= threshold).selectExpr(
         "vec_a", "vec_b", f"round(cos_raw, {round_to}) AS cosine"
-    )
-
-
-def _planes_expr(n_planes: int, dim: int, seed: int) -> Column:
-    """Literal array<array<double>> of unit random hyperplanes (fixed seed →
-    deterministic across runs and engines)."""
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    planes /= np.linalg.norm(planes, axis=1, keepdims=True)
-    rows = ", ".join(
-        "array(" + ", ".join(repr(float(v)) for v in row) + ")" for row in planes
-    )
-    return F.expr(f"array({rows})")
-
-
-def srp_bucket(vec: Column, planes: Column) -> Column:
-    """Signed-random-projection bucket id: bit j = sign(vec · plane_j)."""
-    signs = F.transform(
-        planes, lambda p: F.when(_dot(vec, p) > 0, F.lit(1)).otherwise(F.lit(0))
-    )
-    return F.aggregate(
-        F.zip_with(
-            signs,
-            F.sequence(F.lit(0), F.size(planes) - 1),
-            # shiftleft needs a literal shift; 2^i via pow is exact for
-            # the small plane counts used here.
-            lambda s, i: s * F.pow(F.lit(2.0), i.cast("double")).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
     )
 
 
@@ -1286,7 +1244,6 @@ def cosine_pairs_ivf(
     pair_backend: str = "fused",
     cell_cap: int | None = 4096,
     skew_sample_mod: int = 64,
-    cell_counts: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Approximate cosine near-dup pairs via IVF cells — the data-adaptive
     alternative to :func:`cosine_pairs_lsh` (same contract, same exact
@@ -1314,17 +1271,7 @@ def cosine_pairs_ivf(
       spreads over ~(pop/cell_cap)² tasks with replication paid ONLY by
       that cell's rows. ``cell_cap=None`` disables the probe (one fewer
       job — for corpora known balanced, e.g. freshly trained k-means at
-      bench scale). ``cell_counts`` (requires ``centroids``) supplies
-      per-cell populations from an EXTERNAL source — e.g. harvested from
-      a persisted index's codes partition layout
-      (:func:`ivfpq_cell_populations`) — and skips the probe entirely:
-      the 100 TB posture when an index over the same corpus and
-      quantizer already exists (the probe reads id+vec of the whole
-      corpus at 1× I/O; the harvest reads parquet footers). Hard
-      (top-1) counts under-count the soft n_assign-replicated
-      populations, so they are scaled by ``n_assign`` before the cap
-      comparison — a heuristic correction, exact in the balanced case
-      and conservative (over-splitting is harmless) elsewhere.
+      bench scale).
     * ``"blocked"``: the id-only (cell, block_a, block_b) salted
       self-join + :func:`_score_pairs` feature rejoin. Every cell
       unconditionally spreads over n_blocks² tasks at an n_blocks×
@@ -1333,10 +1280,6 @@ def cosine_pairs_ivf(
     """
     df = _usable(df, vec_col)
     d = _vec_dim(df, vec_col, dim)
-    if cell_counts is not None and centroids is None:
-        # counts are populations UNDER a specific quantizer — against a
-        # freshly trained one they would split arbitrary cells
-        raise ValueError("cell_counts requires centroids from the same source")
     train_sample, train_truncated = None, True
     if centroids is None:
         try:
@@ -1386,9 +1329,6 @@ def cosine_pairs_ivf(
         oversized = None
         if cell_cap:
             # Skew-statistics ladder, cheapest sufficient evidence wins:
-            # 0. caller-supplied cell_counts (e.g. harvested from a
-            #    persisted index's partition layout): zero jobs, zero
-            #    data-column I/O — hard counts scaled by n_assign;
             # 1. training sample untruncated ⇒ it IS the corpus: exact
             #    soft-assignment populations in the driver, ZERO extra jobs;
             # 2. id-only LIMIT(cap+1) probe: a corpus with ≤ cell_cap rows
@@ -1398,13 +1338,7 @@ def cosine_pairs_ivf(
             #    matmul rows): resolution is cap/sample_mod expected hits
             #    per cap-sized cell INDEPENDENT of corpus size — the only
             #    estimator that stays reliable at 100 TB.
-            if cell_counts is not None:
-                oversized = _oversized_from_counts(
-                    np.asarray(cell_counts, dtype=np.int64),
-                    cell_cap,
-                    sample_mod=n_assign_eff,
-                )
-            elif train_sample is not None and not train_truncated:
+            if train_sample is not None and not train_truncated:
                 pops = np.zeros(len(cents), dtype=np.int64)
                 top = _top_cells(train_sample, cents, n_assign_eff, tl_index)
                 np.add.at(pops, top.ravel(), 1)
@@ -1970,9 +1904,8 @@ def _ivfpq_candidates(
     short: int,
 ) -> DataFrame:
     """ADC scan over an encoded (vid, cell, codes, nrm) table →
-    per-query shortlist candidates. Shared by the build-and-query path
-    (knn_cosine_ivfpq) and the persisted-index path
-    (knn_cosine_ivfpq_query) — the scan reads ONLY codes, never
+    per-query shortlist candidates for the driver-LUT face of
+    :func:`knn_cosine_ivfpq` — the scan reads ONLY codes, never
     vectors."""
     from pyspark.sql import Window
 
@@ -2146,9 +2079,8 @@ def _ivfpq_batch_candidates(
     cogroups with the cell-encoded codes, one applyInPandas per cell
     builds ADC LUTs for just the queries probing that cell (through the
     shared :func:`_adc_block_scores` core), a per-query rank window
-    trims to the global shortlist. Shared by the build-and-query batch
-    path (knn_cosine_ivfpq_batch) and the persisted-index large-batch
-    face (knn_cosine_ivfpq_query)."""
+    trims to the global shortlist: the candidate step of
+    :func:`knn_cosine_ivfpq_batch`."""
     from pyspark.sql import Window
 
     # (query_id, cell, qvec): each query row repeated for its n_probe
@@ -2426,791 +2358,3 @@ def pca_project(
             F.expr(f"round({fold}, {round_to})").alias(f"pc{c + 1}")
         )
     return df.select(*cols)
-
-
-# ---------------------------------------------------------------------------
-# IVFPQ index persistence: build once, query many (round 4)
-# ---------------------------------------------------------------------------
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    m: int = 16,
-    n_codes: int = 16,
-    dim: int = 64,
-    vec_buckets: int = 64,
-) -> None:
-    """Train an IVFPQ index over ``corpus`` and persist it under ``path``
-    — the build-once/query-many layout the all-in-one
-    :func:`knn_cosine_ivfpq` (which retrains per call) exists to
-    prototype.
-
-    Layout:
-
-    * ``codes/``   — (vid, codes, nrm) parquet PARTITIONED BY cell: the
-      IVF inverted lists as a disk layout. A query probing n_probe of
-      n_cells cells reads only those directories (Spark partition
-      pruning) — at 100 TB the ADC scan touches n_probe/n_cells of the
-      16×-compressed codes, nothing else.
-    * ``vectors/`` — (vid, vec) parquet PARTITIONED BY ``__vb`` (an
-      id-hash bucket, ``vec_buckets`` dirs), touched ONLY by the
-      shortlist rerank (id-equijoin with predicate pushdown). The
-      bucketing exists for MUTATION, not reads: a delete/update vacuums
-      stale rows by rewriting only the delta's buckets — a pure
-      function of the id, no scan to locate them.
-    * ``model/``   — centroids, residual anchors, PQ codebooks as
-      (kind, i, j, vals) rows — model-sized, read with one collect at
-      query time. Carries ``vec_buckets`` so every later mutation uses
-      the same bucketing, and ``drift_baseline`` — the build corpus's
-      relative reconstruction error over a bounded hash-sample, frozen
-      with the model so :func:`ivfpq_drift_probe` always judges deltas
-      against the TRAINING distribution (a current-store sample would
-      drift along with gradual corpus drift and stop flagging it).
-    """
-    if vec_buckets < 1:
-        # pmod(hash, 0) is NULL → rows land in __HIVE_DEFAULT_PARTITION__
-        # with the model recording a "legacy" layout: a mixed, unreadable
-        # store. Refuse up front.
-        raise ValueError(f"vec_buckets must be >= 1, got {vec_buckets}")
-    corpus = _usable(corpus, vec_col)
-    spark = corpus.sparkSession
-    cents = kmeans_centroids(
-        corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells, dim=dim
-    )
-    books, anchors = _pq_codebooks_residual(
-        corpus, cents, id_col, vec_col, m=m, n_codes=n_codes, dim=dim
-    )
-    codes = ivfpq_encode(
-        corpus, cents, anchors, books, id_col=id_col, vec_col=vec_col
-    )
-    codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
-    (
-        # vid cast LONG to match the codes kernels' schema: xxhash64 is
-        # TYPE-sensitive, so the mutation bucket must be computed over
-        # one canonical id type or a later vacuum hashes into the wrong
-        # bucket and the stale row survives
-        corpus.select(
-            F.col(id_col).cast("long").alias("vid"),
-            _as_double(F.col(vec_col)).alias("vec"),
-        )
-        .withColumn("__vb", _vec_bucket(vec_buckets))
-        .write.mode("overwrite")
-        .partitionBy("__vb")
-        .parquet(f"{path}/vectors")
-    )
-    base_rel, n_base = _ivfpq_baseline_rel_err(
-        corpus, cents, anchors, books, id_col, vec_col
-    )
-    rows = []
-    for i, v in enumerate(cents):
-        rows.append(("centroid", i, 0, [float(x) for x in v]))
-    for i, v in enumerate(anchors):
-        rows.append(("anchor", i, 0, [float(x) for x in v]))
-    for j in range(books.shape[0]):
-        for c in range(books.shape[1]):
-            rows.append(("codebook", j, c, [float(x) for x in books[j][c]]))
-    rows.append(("vec_buckets", int(vec_buckets), 0, []))
-    if base_rel is not None:
-        rows.append(("drift_baseline", n_base, 0, [float(base_rel)]))
-    spark.createDataFrame(
-        rows, "kind string, i int, j int, vals array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/model")
-
-
-def _vec_bucket(n_buckets: int) -> Column:
-    """Vectors-store mutation bucket: a pure function of the id, so a
-    delete/update knows its touched buckets WITHOUT any scan. Hashes the
-    LONG-cast vid — xxhash64 is type-sensitive (int 5 and long 5 hash
-    differently), so every caller must bucket over one canonical type."""
-    return F.pmod(
-        F.xxhash64(F.lit("ivfpq-vec-bucket"), F.col("vid").cast("long")),
-        F.lit(n_buckets),
-    ).cast("int")
-
-
-def _ivfpq_vec_buckets(spark, path: str) -> int:
-    """The index's vectors-store bucket count (0 = legacy unpartitioned
-    layout, mutations fall back to full-store rewrites)."""
-    rows = (
-        spark.read.parquet(f"{path}/model")
-        .where(F.col("kind") == "vec_buckets")
-        .collect()
-    )
-    return int(rows[0]["i"]) if rows else 0
-
-
-def _recover_rebuild(path: str) -> None:
-    """Finish or roll back an interrupted in-place rebuild
-    (:func:`rebuild_ivfpq_index`) through the shared swap recovery: a
-    tmp index rolls FORWARD once its model store (written last) holds
-    data, otherwise the old index is restored. Called by every
-    persisted-index entry point before it touches the stores — pure
-    pathlib, no Spark job."""
-    recover_swap(
-        pathlib.Path(path), "rebuild", lambda tmp: _has_data_files(tmp / "model")
-    )
-
-
-def load_ivfpq_model(spark, path: str):
-    """(centroids, anchors, codebooks) back from ``path``/model — one
-    model-sized collect, no vector data touched. Completes any
-    interrupted in-place rebuild first (:func:`_recover_rebuild`)."""
-    _recover_rebuild(path)
-    rows = spark.read.parquet(f"{path}/model").collect()
-    cents = {r["i"]: r["vals"] for r in rows if r["kind"] == "centroid"}
-    anchors = {r["i"]: r["vals"] for r in rows if r["kind"] == "anchor"}
-    cb = [(r["i"], r["j"], r["vals"]) for r in rows if r["kind"] == "codebook"]
-    n_cells = len(cents)
-    m = max(j for j, _, _ in cb) + 1
-    n_codes = max(c for _, c, _ in cb) + 1
-    dsub = len(cb[0][2])
-    books = np.zeros((m, n_codes, dsub))
-    for j, c, vals in cb:
-        books[j][c] = vals
-    return (
-        np.array([cents[i] for i in range(n_cells)]),
-        np.array([anchors[i] for i in range(n_cells)]),
-        books,
-    )
-
-
-def ivfpq_cell_populations(spark, path: str) -> np.ndarray:
-    """Exact per-cell population of a persisted index, harvested from the
-    codes store's partition layout: the groupBy touches ONLY the ``cell``
-    partition column, so Spark answers it from directory names plus
-    parquet footer row counts — no data-column I/O at any corpus size.
-    This is the scale-path skew evidence for dedup over an indexed
-    corpus (see ``cosine_pairs_ivf(cell_counts=)``): the sampled probe
-    reads id+vec of the whole corpus; this reads metadata. Cells with no
-    inverted list (or a fully-retired store) report 0.
-    """
-    _recover_rebuild(path)
-    n_cells = (
-        spark.read.parquet(f"{path}/model")
-        .where(F.col("kind") == "centroid")
-        .count()
-    )
-    counts = np.zeros(n_cells, dtype=np.int64)
-    if not _has_data_files(pathlib.Path(f"{path}/codes")):
-        return counts
-    rows = (
-        spark.read.parquet(f"{path}/codes")
-        .groupBy("cell")
-        .count()
-        .collect()
-    )
-    for r in rows:
-        counts[int(r["cell"])] += int(r["count"])
-    return counts
-
-
-def cosine_pairs_ivf_index(
-    spark,
-    path: str,
-    threshold: float = 0.4,
-    n_assign: int = 2,
-    round_to: int = 4,
-    cell_cap: int | None = 4096,
-    pair_backend: str = "fused",
-) -> DataFrame:
-    """Near-dup candidate pairs driven off a PERSISTED IVFPQ index:
-    exact vectors from the vectors store, quantizer from the model,
-    skew statistics harvested from the codes partition layout
-    (:func:`ivfpq_cell_populations`). Zero training, zero probe scan —
-    the 100 TB posture for deduplicating a corpus that already maintains
-    a searchable index (:func:`append_to_ivfpq_index` and
-    :func:`delete_from_ivfpq_index` keep all three stores in lockstep, so
-    the harvested populations are current as of the last applied change).
-    Same output contract as
-    :func:`cosine_pairs_ivf`: (vec_a, vec_b, cosine), exact scores,
-    every edge true.
-    """
-    _recover_rebuild(path)
-    if not _has_data_files(pathlib.Path(f"{path}/vectors")):
-        return spark.createDataFrame(
-            [], "vec_a long, vec_b long, cosine double"
-        )
-    cents, _, _ = load_ivfpq_model(spark, path)
-    counts = ivfpq_cell_populations(spark, path)
-    vecs = spark.read.parquet(f"{path}/vectors").select("vid", "vec")
-    return cosine_pairs_ivf(
-        vecs,
-        id_col="vid",
-        vec_col="vec",
-        threshold=threshold,
-        n_assign=n_assign,
-        round_to=round_to,
-        dim=int(cents.shape[1]),
-        centroids=cents,
-        cell_cap=cell_cap,
-        cell_counts=counts,
-        pair_backend=pair_backend,
-    )
-
-
-def knn_cosine_ivfpq_query(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 8,
-    shortlist: int | None = None,
-    round_to: int = 4,
-) -> DataFrame:
-    """Query a persisted IVFPQ index WITHOUT retraining: load the
-    model (one small collect), prune the codes scan to the union of
-    the queries' probed cells (partition pruning against the
-    cell-partitioned layout), ADC-score, exact-rerank the shortlist
-    against the vectors table.
-
-    Batches past ``_DRIVER_LUT_MAX_QUERIES`` take the fully distributed
-    face: probed cells computed on the executors, the DISTINCT cell set
-    (bounded by n_cells — model-class) still prunes the codes read,
-    candidates via the shared cogroup generator, hash-joined rerank."""
-    queries = _usable(queries, vec_col)
-    cents, anchors, books = load_ivfpq_model(spark, path)
-    if not _has_data_files(pathlib.Path(f"{path}/codes")):
-        # a fully-retired index (every list deleted) is EMPTY, not
-        # corrupt: the dir holds no data files and would otherwise fail
-        # schema inference
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"
-        )
-    short = shortlist if shortlist is not None else 4 * k
-    n_probe = min(n_probe, len(cents))
-
-    # the gate reuses the pruning collect (limit caps it at gate+1 rows,
-    # so it never pulls a huge batch to the driver), costing the small
-    # path no extra job
-    qrows = (
-        queries.select(_as_double(F.col(vec_col)).alias("qv"))
-        .limit(_DRIVER_LUT_MAX_QUERIES + 1)
-        .collect()
-    )
-    if len(qrows) > _DRIVER_LUT_MAX_QUERIES:
-        # the cells-only probe pass is deliberately recomputed inside
-        # _ivfpq_batch_candidates (a map-only scan) rather than caching
-        # the n_probe-replicated probe table for reuse
-        probed_cells = [
-            int(r["cell"])
-            for r in _cells_table(
-                queries, cents, id_col, vec_col, n_probe, False, None
-            )
-            .select("cell")
-            .distinct()
-            .collect()
-        ]
-        codes = spark.read.parquet(f"{path}/codes").where(
-            F.col("cell").isin(probed_cells)
-        )
-        cand = _ivfpq_batch_candidates(
-            codes, queries, cents, anchors, books,
-            id_col=id_col, vec_col=vec_col, n_probe=n_probe, short=short,
-        )
-        vectors = spark.read.parquet(f"{path}/vectors").select(
-            F.col("vid").alias(id_col), F.col("vec").alias(vec_col)
-        )
-        return _score_candidates_topk(
-            cand, vectors, queries, id_col, vec_col, k, round_to,
-            broadcast_queries=False,
-        )
-
-    # Kernel-entry contract assertion (VERDICT r10 #6) — see knn_cosine_pq.
-    qmat = np.asarray(
-        [r["qv"] for r in qrows if usable_vector_py(r["qv"])], dtype=np.float64
-    )
-    if not len(qmat):
-        # every query vector NULL (or no queries): empty result, not an
-        # AxisError from np.linalg.norm over a (0,)-shaped array
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double"
-        )
-    qnorm = np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    probed = _top_cells(qmat / qnorm, cents, n_probe, None)
-    all_cells = sorted({int(c) for row in probed for c in row})
-
-    codes = spark.read.parquet(f"{path}/codes").where(
-        F.col("cell").isin(all_cells)
-    )
-    cand = _ivfpq_candidates(
-        codes, queries, cents, anchors, books,
-        id_col=id_col, vec_col=vec_col, n_probe=n_probe, short=short,
-    )
-    vectors = spark.read.parquet(f"{path}/vectors").select(
-        F.col("vid").alias(id_col), F.col("vec").alias(vec_col)
-    )
-    return _score_candidates_topk(
-        cand, vectors, queries, id_col, vec_col, k, round_to
-    )
-
-
-def append_to_ivfpq_index(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Add a batch of new vectors to a persisted IVFPQ index WITHOUT
-    retraining: encode the delta with the STORED model (the quantizer is
-    frozen — the FAISS add() semantics) and append to the cell-
-    partitioned codes and the vectors store. Cost is O(|delta|); the
-    existing inverted lists are never rewritten (dynamic partition
-    append touches only the delta's cells' directories).
-
-    Quantization drift is the known trade: if the data distribution
-    moves far from the training sample, rebuild — recall vs a
-    fresh-trained index is the test gate (tests/test_similarity.py).
-    """
-    delta = _usable(delta, vec_col)
-    spark = delta.sparkSession
-    cents, anchors, books = load_ivfpq_model(spark, path)
-    codes = ivfpq_encode(
-        delta, cents, anchors, books, id_col=id_col, vec_col=vec_col
-    )
-    codes.write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
-    vec_out = delta.select(
-        F.col(id_col).cast("long").alias("vid"),
-        _as_double(F.col(vec_col)).alias("vec"),
-    )
-    nb = _ivfpq_vec_buckets(spark, path)
-    if nb:
-        (
-            vec_out.withColumn("__vb", _vec_bucket(nb))
-            .write.mode("append")
-            .partitionBy("__vb")
-            .parquet(f"{path}/vectors")
-        )
-    else:  # legacy unpartitioned layout
-        vec_out.write.mode("append").parquet(f"{path}/vectors")
-
-
-def delete_from_ivfpq_index(
-    spark,
-    path: str,
-    ids,
-    vacuum_vectors: bool | str = False,
-) -> int:
-    """Remove vectors from a persisted IVFPQ index WITHOUT retraining —
-    the FAISS ``remove_ids()`` face completing the index lifecycle
-    (build / append / query / delete); the retraction companion to
-    :func:`append_to_ivfpq_index` and the index-side consumer of a CDC
-    delete feed (``ParquetSink.delete_keys`` retracts the store row, this
-    retracts the ANN entry).
-
-    ``ids`` is a DataFrame whose FIRST column is the id, or any iterable
-    of ids. Cost shape:
-
-    * LOCATING the touched inverted lists is a column-pruned (vid, cell)
-      scan of the codes store semi-joined to the delete set — two thin
-      columns of the 16×-compressed codes, never vectors, exact under
-      any quantizer (no reliance on re-deriving the frozen assignment).
-    * The REWRITE is partition-pruned to the touched cells only
-      (:func:`~node_mongo2influx_spark.sinks.parquet.drop_keys`); lists
-      the deletes don't touch are never read for the rewrite nor
-      rewritten. Cells left EMPTY drop as directories.
-    * ``vectors/`` keeps stale rows by default for PURE deletes:
-      candidates come from the codes store, so a fully-deleted id can
-      never reach the rerank — its stale vector is dead storage, not a
-      correctness hazard. ``vacuum_vectors=True`` reclaims it by
-      rewriting only the delete set's id-hash BUCKETS (a pure function
-      of the id — no scan to locate them; O(touched buckets)).
-      ``"located"`` vacuums only when the delete actually located codes
-      — the right setting for flows that keep codes and vectors in
-      lockstep (no codes ⇒ no vectors; saves the no-op bucket rewrite
-      on pure-insert batches). Vacuuming is MANDATORY for update flows
-      (delete-then-reappend of a live id): a stale row sharing a live
-      vid WOULD reach the rerank join — vacuum with ``"located"``.
-
-    Ids must be integral (the codes kernels emit ``vid long``; all id
-    handling canonicalizes through a LONG cast — xxhash64 bucketing is
-    type-sensitive). Idempotent: a replayed delete locates nothing and
-    returns 0; a fully-emptied store is recognized by its absence of
-    data files and reads as empty rather than wedging.
-    Returns the number of cell partitions rewritten/dropped.
-    """
-    from pyspark.sql import DataFrame as _DF
-
-    if isinstance(ids, _DF):
-        dkeys = ids.select(
-            F.col(ids.columns[0]).cast("long").alias("vid")
-        ).distinct()
-    else:
-        dkeys = spark.createDataFrame(
-            [(int(i),) for i in ids], "vid long"
-        ).distinct()
-    codes_dir = pathlib.Path(path) / "codes"
-    touched = {}
-    if _has_data_files(codes_dir):
-        codes = _long_vid(spark.read.parquet(str(codes_dir)))
-        touched = locate_keys(codes, dkeys, ("vid",), ("cell",))
-        drop_keys(lambda _: codes, codes_dir, ("cell",), dkeys, ("vid",), touched)
-    if vacuum_vectors == "located":
-        vacuum_vectors = bool(touched)
-    vec_dir = pathlib.Path(path) / "vectors"
-    if vacuum_vectors and _has_data_files(vec_dir):
-        _drop_vectors(
-            spark, path, lambda p: _long_vid(spark.read.parquet(p)), dkeys
-        )
-    return len(touched)
-
-
-def _long_vid(df: DataFrame) -> DataFrame:
-    """``df`` with its ``vid`` canonicalized to LONG — the one id type
-    every index mutation anti-joins and hash-buckets over."""
-    return df.withColumn("vid", F.col("vid").cast("long"))
-
-
-def _drop_vectors(spark, path: str, df_reader, dkeys: DataFrame) -> int:
-    """Remove the ids in ``dkeys`` from the index's vectors store through
-    :func:`~node_mongo2influx_spark.sinks.parquet.drop_keys`: only the
-    id-hash buckets the ids map to are rewritten (a pure function of the
-    id, no scan to locate them); the legacy unpartitioned layout is
-    rewritten whole. Returns the number of buckets rewritten/dropped."""
-    nb = _ivfpq_vec_buckets(spark, path)
-    pcols, cand = (), {}
-    if nb:
-        pcols = ("__vb",)
-        cand = _collect_parts(dkeys.select(_vec_bucket(nb).alias("__vb")), pcols)
-    return drop_keys(
-        df_reader, pathlib.Path(path) / "vectors", pcols, dkeys, ("vid",), cand
-    )
-
-
-def compact_ivfpq_index(spark, path: str) -> dict:
-    """Small-file compaction for the persisted index stores —
-    :func:`append_to_ivfpq_index` writes one file per touched
-    cell/bucket per call, so a long-running feed accumulates
-    per-partition file counts that make the probed-cells scan
-    open-bound, not byte-bound. One ``repartition(part_col)`` rewrite
-    collapses each partition directory to a single file.
-
-    Crash-safe through the shared
-    :func:`~node_mongo2influx_spark.sinks.parquet.swap_dir` (each store
-    swapped via ``__compact_tmp`` / ``__compact_old``; a crash between
-    the renames rolls back to the uncompacted store, which holds the
-    same rows). Returns {store: file_count_after}.
-    """
-    _recover_rebuild(path)
-    out = {}
-    for store, part_col in (("codes", "cell"), ("vectors", "__vb")):
-        target = pathlib.Path(path) / store
-        recover_swap(target, "compact")
-        if not _has_data_files(target):
-            continue
-        df = spark.read.parquet(str(target))
-        if part_col in df.columns:
-            # one task per partition value → exactly one file per dir
-            writer = (
-                df.repartition(F.col(part_col))
-                .write.mode("overwrite")
-                .partitionBy(part_col)
-            )
-        else:  # legacy unpartitioned vectors store
-            writer = df.coalesce(1).write.mode("overwrite")
-        swap_dir(target, lambda tmp: writer.parquet(str(tmp)), "compact")
-        spark.catalog.refreshByPath(str(target))
-        out[store] = len(
-            [p for p in target.rglob("*.parquet") if p.is_file()]
-        )
-    return out
-
-
-def vacuum_ivfpq_index(spark, path: str) -> dict:
-    """Reclaim DEAD vector storage: remove every ``vectors/`` row whose
-    id no longer exists in the codes store (the live-membership source
-    of truth — candidates always come from codes, so such rows are
-    unreachable dead storage, never a correctness hazard).
-
-    This is the standalone face for stores that accumulated stale rows
-    from ``delete_from_ivfpq_index(..., vacuum_vectors=False)`` calls
-    (the default for pure deletes — cheap then, reclaimed here);
-    :func:`compact_ivfpq_index` collapses small FILES but keeps every
-    row, so it is not a vacuum (VERDICT r8 #8).
-
-    Cost shape at 100 TB: one thin vid-column scan of each store, an
-    anti-join, then a rewrite pruned to the stale ids' id-hash BUCKETS
-    only (a pure function of the id); untouched buckets are never read
-    for the rewrite nor rewritten — the same
-    :func:`~node_mongo2influx_spark.sinks.parquet.drop_keys` rewrite as
-    delete, after :func:`_recover_rebuild`. Reconciliation is BY ID:
-    an update flow (delete-then-reappend of a live id) must vacuum at
-    delete time (``vacuum_vectors="located"``) — two rows sharing a live
-    vid are indistinguishable here. Idempotent: a second run reclaims
-    nothing. Returns {stale_rows, buckets_rewritten, bytes_before,
-    bytes_after}.
-    """
-    _recover_rebuild(path)
-    vec_dir = pathlib.Path(path) / "vectors"
-
-    def _bytes() -> int:
-        return sum(
-            p.stat().st_size
-            for p in vec_dir.rglob("*.parquet")
-            if p.is_file()
-        )
-
-    out = {
-        "stale_rows": 0,
-        "buckets_rewritten": 0,
-        "bytes_before": 0,
-        "bytes_after": 0,
-    }
-    if not _has_data_files(vec_dir):
-        return out
-    out["bytes_before"] = _bytes()
-    vecs = _long_vid(spark.read.parquet(str(vec_dir)))
-    codes_dir = pathlib.Path(path) / "codes"
-    if _has_data_files(codes_dir):
-        live = _long_vid(spark.read.parquet(str(codes_dir))).select("vid")
-        stale = vecs.select("vid").join(live, "vid", "left_anti").distinct()
-    else:
-        # every inverted list deleted: the whole vectors store is dead
-        stale = vecs.select("vid").distinct()
-    # stale is consumed 3x below (count, bucket list, anti-join in the
-    # rewrite) — pin it or the scan+anti-join recomputes per consumer
-    stale = stale.localCheckpoint(eager=True)
-    n_stale = stale.count()
-    out["stale_rows"] = n_stale
-    if not n_stale:
-        out["bytes_after"] = out["bytes_before"]
-        return out
-    out["buckets_rewritten"] = _drop_vectors(spark, path, lambda _: vecs, stale)
-    out["bytes_after"] = _bytes()
-    return out
-
-
-def rebuild_ivfpq_index(
-    spark,
-    path: str,
-    n_cells: int | None = None,
-    m: int | None = None,
-    n_codes: int | None = None,
-    vec_buckets: int | None = None,
-) -> dict:
-    """Retrain the quantizer from the index's CURRENT vectors store and
-    swap the whole index in place — the action
-    :func:`ivfpq_drift_probe`'s ``rebuild=True`` recommends (frozen
-    codebooks can't represent a drifted distribution; appends stay
-    cheap precisely because nobody retrains them).
-
-    Geometry defaults to the live model's (same n_cells / m / n_codes /
-    vec_buckets). The ``drift_baseline`` is recomputed over the
-    post-drift corpus — the yardstick moves WITH the retrain, which is
-    the point: the new codebooks represent the new distribution, so
-    data that used to flag is in-distribution again.
-
-    A COMPLETE sibling index is built (reading only the vectors store)
-    and swapped in whole by
-    :func:`~node_mongo2influx_spark.sinks.parquet.swap_dir`
-    (``__rebuild_tmp`` / ``__rebuild_old``) — readers see the old or the
-    new index, never a mixed model/codes view (the hazard a per-store
-    swap would have). Every persisted-index entry point runs
-    :func:`_recover_rebuild` first. Maintenance-window
-    operation like :func:`compact_ivfpq_index`: crash-safe, not
-    concurrent-writer-safe. Raises ``EmptyTrainingInput`` on an empty
-    vectors store (there is nothing to train on — delete the index
-    instead). Returns the geometry used plus the row count."""
-    _recover_rebuild(path)
-    cents, _, books = load_ivfpq_model(spark, path)
-    if vec_buckets is None:
-        vb_row = (
-            spark.read.parquet(f"{path}/model")
-            .where(F.col("kind") == "vec_buckets")
-            .first()
-        )
-        vec_buckets = int(vb_row["i"]) if vb_row is not None else 64
-    n_cells = n_cells or len(cents)
-    m = m or int(books.shape[0])
-    n_codes = n_codes or int(books.shape[1])
-    dim = int(cents.shape[1])
-    if not _has_data_files(pathlib.Path(f"{path}/vectors")):
-        raise EmptyTrainingInput(
-            "rebuild_ivfpq_index: the vectors store is empty — nothing "
-            "to retrain on (delete the index instead)"
-        )
-    vecs = spark.read.parquet(f"{path}/vectors").select(
-        F.col("vid").alias("vec_id"), F.col("vec").alias("embedding")
-    )
-    n = vecs.count()
-    # every read of the live store completes inside this call's write
-    # jobs — by the time the renames run, nothing holds the old path
-    swap_dir(
-        pathlib.Path(path),
-        lambda tmp: build_ivfpq_index(
-            vecs, str(tmp), n_cells=n_cells, m=m, n_codes=n_codes, dim=dim,
-            vec_buckets=vec_buckets,
-        ),
-        "rebuild",
-    )
-    for store in ("codes", "vectors", "model"):
-        spark.catalog.refreshByPath(f"{path}/{store}")
-    return {
-        "rows": int(n),
-        "n_cells": int(n_cells),
-        "m": int(m),
-        "n_codes": int(n_codes),
-        "vec_buckets": int(vec_buckets),
-    }
-
-
-def _ivfpq_relative_recon_error(
-    df: DataFrame,
-    cents: np.ndarray,
-    anchors: np.ndarray,
-    books: np.ndarray,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Per-row IVFPQ reconstruction error under a FROZEN model: assign →
-    residual-encode → decode, emit (err = ‖resid − decode‖², energy =
-    ‖x‖²). Sum(err)/Sum(energy) is the scale-free relative error the
-    drift probe compares across populations. Map-only Arrow kernel."""
-    cts, anc, bk = cents, anchors, books
-
-    def kernel(batches):
-        import pandas as pd
-
-        m, _, dsub = bk.shape
-        for pdf in batches:
-            pdf = _nn(pdf)
-            mat = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-            if not len(mat):
-                continue
-            norms = np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
-            cell = ((mat / norms) @ cts.T).argmax(axis=1)
-            resid = mat - anc[cell]
-            err = np.zeros(len(mat))
-            for j in range(m):
-                x = resid[:, j * dsub : (j + 1) * dsub]
-                code = (x @ bk[j].T - 0.5 * (bk[j] ** 2).sum(1)).argmax(1)
-                err += ((x - bk[j][code]) ** 2).sum(1)
-            yield pd.DataFrame({"err": err, "energy": (mat**2).sum(1)})
-
-    base = _spread_kernel_input(
-        df.selectExpr(
-            f"`{id_col}` AS vid",
-            f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS vec",
-        ),
-        min_bytes=_LIGHT_KERNEL_MIN_SPREAD_BYTES,
-    )
-    return base.mapInPandas(kernel, schema="err double, energy double")
-
-
-def _ivfpq_rel_err_of(
-    df: DataFrame,
-    cents: np.ndarray,
-    anchors: np.ndarray,
-    books: np.ndarray,
-    id_col: str,
-    vec_col: str,
-) -> tuple[float | None, int]:
-    """(Sum err / Sum energy, row count) over a frame — the scalar face
-    of :func:`_ivfpq_relative_recon_error`."""
-    row = (
-        _ivfpq_relative_recon_error(df, cents, anchors, books, id_col, vec_col)
-        .agg(
-            F.sum("err").alias("e"),
-            F.sum("energy").alias("g"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .first()
-    )
-    if not row["n"] or not row["g"]:
-        return None, int(row["n"] or 0)
-    return float(row["e"]) / float(row["g"]), int(row["n"])
-
-
-def _ivfpq_baseline_rel_err(
-    df: DataFrame,
-    cents: np.ndarray,
-    anchors: np.ndarray,
-    books: np.ndarray,
-    id_col: str,
-    vec_col: str,
-    sample_rows: int = 4096,
-) -> tuple[float | None, int]:
-    """Relative reconstruction error of a deterministic hash-sample of
-    ``df`` under the (just-trained) model — computed at BUILD time and
-    frozen into the model store as the drift yardstick."""
-    sample = df.select(id_col, vec_col).orderBy(
-        F.xxhash64(F.col(id_col).cast("string"), F.lit("drift-base"))
-    ).limit(sample_rows)
-    return _ivfpq_rel_err_of(sample, cents, anchors, books, id_col, vec_col)
-
-
-def ivfpq_drift_probe(
-    spark,
-    path: str,
-    delta: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_rows: int = 4096,
-    rebuild_factor: float = 2.0,
-) -> dict:
-    """Decide whether a delta has DRIFTED past what the index's frozen
-    quantizer can represent — the measurable trigger for the documented
-    rebuild rule (an out-of-distribution vector under frozen PQ
-    codebooks is ADC-unrankable: reconstruction error inverts its rank,
-    so recall decays silently while every query still 'succeeds').
-
-    Compares the delta's relative reconstruction error (‖residual −
-    decode‖²/‖x‖², frozen model) against the index's ``drift_baseline``
-    — the same metric over a hash-sample of the BUILD corpus, frozen
-    into the model store at train time. Judging against the training
-    distribution (not a current-store sample) is what keeps GRADUAL
-    drift visible: a rolling baseline would drift along with the corpus
-    and stop flagging, while the codebooks stay frozen at build time
-    regardless. Pre-baseline indexes fall back to a current-store
-    sample (``sample_rows``-bounded). The delta pass is one map-only
-    Arrow kernel + a 1-row aggregate.
-
-    Returns ``{base_rel_err, delta_rel_err, ratio, rebuild, n_base,
-    n_delta}``; ``rebuild`` is True when ratio > ``rebuild_factor``.
-    Empty delta (or no baseline and an empty vectors store) never
-    recommends a rebuild — it reports ``ratio=None``. Maintenance
-    cadence: run on each append batch (one row per batch is the series
-    :func:`~node_mongo2influx_spark.streaming.pipeline.drift_forecast`
-    extrapolates); on ``rebuild`` re-train via
-    :func:`build_ivfpq_index`."""
-    cents, anchors, books = load_ivfpq_model(spark, path)
-
-    brow = (
-        spark.read.parquet(f"{path}/model")
-        .where(F.col("kind") == "drift_baseline")
-        .collect()
-    )
-    if brow:
-        base_rel, n_base = float(brow[0]["vals"][0]), int(brow[0]["i"])
-    elif _has_data_files(pathlib.Path(f"{path}/vectors")):
-        # pre-r7 index without a stored baseline: current-store sample
-        sample = spark.read.parquet(f"{path}/vectors").select(
-            F.col("vid").alias(id_col), F.col("vec").alias(vec_col)
-        )
-        base_rel, n_base = _ivfpq_baseline_rel_err(
-            sample, cents, anchors, books, id_col, vec_col, sample_rows
-        )
-    else:
-        base_rel, n_base = None, 0
-    delta_rel, n_delta = _ivfpq_rel_err_of(
-        delta, cents, anchors, books, id_col, vec_col
-    )
-
-    ratio = (
-        delta_rel / base_rel
-        if (base_rel is not None and base_rel > 0 and delta_rel is not None)
-        else None
-    )
-    return {
-        "base_rel_err": base_rel,
-        "delta_rel_err": delta_rel,
-        "ratio": ratio,
-        "rebuild": bool(ratio is not None and ratio > rebuild_factor),
-        "n_base": n_base,
-        "n_delta": n_delta,
-    }

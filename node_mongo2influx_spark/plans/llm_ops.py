@@ -2414,8 +2414,8 @@ def _drift_forecast_oracle() -> str:
     "(round 8, VERDICT r7 #6): per ingest batch, the trailing-7 "
     "least-squares slope of the quantizer-drift ratio and the "
     "extrapolated batches-to-threshold at the current slope — the query "
-    "that turns ivfpq_drift_probe's reactive 2x flag into a scheduled "
-    "rebuild. The log here is SYNTHESIZED deterministically from the "
+    "that turns a reactive 2x drift flag into a scheduled rebuild. The "
+    "log here is SYNTHESIZED deterministically from the "
     "events fixture (one batch per day, exact-integer basis points with "
     "a quadratic trend plus a data-derived jitter) so the full pipeline "
     "is oracle-checked; streaming/pipeline.drift_forecast is the same "

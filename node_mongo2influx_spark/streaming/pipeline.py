@@ -79,13 +79,13 @@ def drift_forecast(
     batch_col: str = "ingest_batch",
     ratio_col: str = "ratio",
 ) -> DataFrame:
-    """Turn a per-batch drift series (one ``ratio`` of
-    :func:`~node_mongo2influx_spark.operators.similarity.ivfpq_drift_probe`
-    per ``ingest_batch``) into a FORECAST (round 8, VERDICT r7 #6): per
+    """Turn a per-batch drift series (one ``ratio`` per ``ingest_batch``,
+    e.g. a quantizer's reconstruction error on the batch over its error
+    at training time) into a FORECAST (round 8, VERDICT r7 #6): per
     batch, the trailing-window least-squares slope of the drift ratio and
-    the extrapolated batches-to-threshold at the current slope — so index
-    maintenance can schedule :func:`rebuild_ivfpq_index` BEFORE the 2x
-    flag fires instead of reacting to it.
+    the extrapolated batches-to-threshold at the current slope — so a
+    retrain can be scheduled BEFORE the 2x flag fires instead of
+    reacting to it.
 
     Exact-integer discipline (the cusum_drift_chunked rule): the ratio
     quantizes to basis points (BIGINT), the regression reduces to exact
@@ -99,7 +99,7 @@ def drift_forecast(
     * ``eta_batches`` — ceil((threshold - current) / slope) when the
       slope is positive and the threshold not yet crossed; NULL when
       drift is flat/improving or already crossed,
-    * ``alarm`` — the threshold crossing itself (the probe's 2x flag).
+    * ``alarm`` — the threshold crossing itself (the 2x flag).
 
     The window orders the WHOLE log in one partition — the log is
     model-sized by construction (ONE row per ingest batch), never

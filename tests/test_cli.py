@@ -51,6 +51,33 @@ def test_cli_insert_limit_below_one_exits_with_message(tmp_path):
     )
 
 
+@pytest.mark.parametrize(
+    "option, value",
+    [("--target-file-mb", "0"), ("--target-file-mb", "-5"),
+     ("--limit", "0"), ("--limit", "-3")],
+)
+def test_cli_size_below_one_exits_before_spark(
+    tmp_path, monkeypatch, option, value
+):
+    # rejected with a one-line message before Spark starts: not a
+    # ZeroDivisionError from compact, and not a silent clamp to 1
+    from node_mongo2influx_spark import Engine
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(Engine, "builder", no_spark)
+    sink = ["--sink", f"parquet:{tmp_path}/out"]
+    mode = (
+        ["--compact", "events"]
+        if option == "--target-file-mb"
+        else ["--source", str(tmp_path)]
+    )
+    with pytest.raises(SystemExit) as exc:
+        main([*sink, *mode, option, value])
+    assert exc.value.code == f"{option} must be >= 1, got {value}"
+
+
 @pytest.mark.parametrize("spool", [False, True])
 def test_cli_empty_source_exits_with_message(spark, tmp_path, capsys, spool):
     # a source with no tables is a failed migration, not an empty report

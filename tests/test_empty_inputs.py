@@ -280,16 +280,3 @@ def test_cosine_pairs_ivf_empty_corpus_degrades(empty_vecs):
     )
     assert out.columns == ["vec_a", "vec_b", "cosine"]
     assert out.count() == 0
-
-
-def test_build_ivfpq_index_empty_corpus_raises(empty_vecs, tmp_path):
-    import pytest as _pytest
-
-    from node_mongo2influx_spark.operators import similarity
-
-    with _pytest.raises(similarity.EmptyTrainingInput):
-        similarity.build_ivfpq_index(
-            empty_vecs, str(tmp_path / "idx"),
-            id_col="vec_id", vec_col="embedding",
-            n_cells=2, m=4, n_codes=4, dim=8,
-        )

@@ -149,6 +149,18 @@ def test_config_merge_explicit_falsy_wins(engine):
         engine.config.merged(nonexistent_key=1)
 
 
+@pytest.mark.parametrize("n", [0, -3])
+def test_migrate_rejects_table_concurrency_below_one(engine, catalog, n):
+    # an explicit value below one is an error naming the field, not a
+    # silent clamp to one worker
+    from node_mongo2influx_spark import Engine
+    from node_mongo2influx_spark.config import EngineConfig
+
+    eng = Engine(engine.spark, EngineConfig(table_concurrency=n))
+    with pytest.raises(ValueError, match=f"table_concurrency must be >= 1, got {n}"):
+        eng.migrate(catalog, TransformSpec(), MemorySink(), tables=["events"])
+
+
 def _sink_count(kind: str, sink, spark, out) -> int:
     if kind == "memory":
         return len(sink.series["events"])

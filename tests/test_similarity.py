@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql.functions import col as F_col
 
 from node_mongo2influx_spark.operators import similarity
 from node_mongo2influx_spark.plans.tables import load
@@ -106,17 +105,6 @@ def test_cosine_pairs_lsh_recall(emb):
     assert approx <= exact  # candidates are scored exactly: no false accepts
     if exact:
         assert len(approx & exact) / len(exact) >= 0.5, (len(approx), len(exact))
-
-
-def test_srp_bucket_range(emb):
-    from pyspark.sql import functions as F
-
-    planes = similarity._planes_expr(8, 64, seed=42)
-    vec = similarity._as_double(F.col("embedding"))
-    out = emb.select(similarity.srp_bucket(vec, planes).alias("b")).agg(
-        F.min("b"), F.max("b")
-    ).first()
-    assert 0 <= out[0] and out[1] < 256
 
 
 def test_cosine_pairs_ivf_recall(emb):
@@ -532,201 +520,6 @@ def test_pca_project_matches_numpy(spark, sf_dir):
     assert abs(cos) > 0.999, cos
 
 
-def test_ivfpq_index_build_query_roundtrip(spark, emb, tmp_path):
-    # build once, query many: persisted index answers without retraining,
-    # the codes scan prunes to the probed cells' partitions, and recall
-    # vs exact matches the in-memory IVFPQ tier's gate.
-    path = str(tmp_path / "ivfpq_index")
-    similarity.build_ivfpq_index(
-        emb, path, n_cells=16, m=16, n_codes=16, dim=64
-    )
-    queries = emb.where("vec_id < 5")
-
-    sc = spark.sparkContext
-    sc.setJobGroup("ivfpq-query", "query must not retrain")
-    got = similarity.knn_cosine_ivfpq_query(
-        spark, path, queries, k=10, n_probe=8, shortlist=80
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    rows = got.collect()
-    jobs = sc.statusTracker().getJobIdsForGroup("ivfpq-query")
-    sc.setJobGroup("", "")
-    # Under AQE every shuffle stage materializes as its own job, so the
-    # query plan alone runs ~8-11 (model load, 2 query collects, ADC,
-    # window, rerank joins, final collect). A kmeans+codebook RETRAIN
-    # adds ~15 more on top — the regression this bound catches.
-    assert len(jobs) <= 12, f"query path ran {len(jobs)} jobs — retraining?"
-    # partition pruning reached the codes scan
-    assert "PartitionFilters" in plan and "cell" in plan, plan
-
-    exact = similarity.knn_cosine(emb, queries, k=10).collect()
-    es, gs = {}, {}
-    for r in exact:
-        es.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in rows:
-        gs.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recalls = [len(es[q] & gs.get(q, set())) / 10 for q in es]
-    assert sum(recalls) / len(recalls) >= 0.7, recalls
-
-
-def test_ivfpq_query_large_batch_gate_matches_driver_path(
-    spark, emb, tmp_path, monkeypatch
-):
-    # Past _DRIVER_LUT_MAX_QUERIES the persisted-index query path must
-    # take the fully distributed face (executor-side probing, DISTINCT
-    # probed cells still pruning the codes read, cogroup candidates,
-    # hash-joined rerank) and return the SAME rows as the driver-LUT
-    # face: both cut candidates through the shared vid-tie-break ADC
-    # core, and the exact rerank is the same Spark expression.
-    path = str(tmp_path / "ivfpq_gate")
-    similarity.build_ivfpq_index(
-        emb, path, n_cells=16, m=16, n_codes=16, dim=64
-    )
-    queries = emb.where("vec_id < 6")
-    kw = dict(k=5, n_probe=4, shortlist=40)
-    small = similarity.knn_cosine_ivfpq_query(
-        spark, path, queries, **kw
-    ).collect()
-    monkeypatch.setattr(similarity, "_DRIVER_LUT_MAX_QUERIES", 4)
-    big_df = similarity.knn_cosine_ivfpq_query(spark, path, queries, **kw)
-    plan = big_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan, plan
-    big = big_df.collect()
-    key = lambda r: (r["query_id"], r["neighbor_id"])  # noqa: E731
-    assert sorted(big, key=key) == sorted(small, key=key)
-
-
-def test_ivfpq_index_incremental_append(spark, emb, tmp_path):
-    # FAISS add() semantics: build on half the corpus, append the other
-    # half with the FROZEN quantizer — queries over the full index reach
-    # the same recall gate as a full build (no retrain, O(delta) cost).
-    path = str(tmp_path / "ivfpq_incr")
-    base = emb.where("vec_id % 2 = 0")
-    delta = emb.where("vec_id % 2 = 1")
-    similarity.build_ivfpq_index(base, path, n_cells=16, m=16, n_codes=16, dim=64)
-    similarity.append_to_ivfpq_index(delta, path)
-
-    queries = emb.where("vec_id < 5")
-    got = similarity.knn_cosine_ivfpq_query(
-        spark, path, queries, k=10, n_probe=8, shortlist=80
-    ).collect()
-    # every corpus row is findable: the appended half shows up in results
-    ids = {r["neighbor_id"] for r in got}
-    assert any(i % 2 == 1 for i in ids), "appended delta never surfaced"
-    exact = similarity.knn_cosine(emb, queries, k=10).collect()
-    es, gs = {}, {}
-    for r in exact:
-        es.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in got:
-        gs.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recalls = [len(es[q] & gs.get(q, set())) / 10 for q in es]
-    assert sum(recalls) / len(recalls) >= 0.7, recalls
-
-
-def test_ivfpq_drift_probe_flags_distribution_shift(spark, emb, tmp_path):
-    # The measurable trigger for the rebuild rule: an OOD delta under
-    # frozen codebooks is ADC-unrankable, so the probe must flag it
-    # BEFORE appends silently decay recall — while an in-distribution
-    # delta (the held-out half of the same corpus) must not cry wolf.
-    path = str(tmp_path / "ivfpq_drift")
-    similarity.build_ivfpq_index(
-        emb.where("vec_id % 2 = 0"), path, n_cells=16, m=16, n_codes=16,
-        dim=64,
-    )
-    ind = emb.where("vec_id % 2 = 1")
-    rep = similarity.ivfpq_drift_probe(spark, path, ind)
-    assert rep["n_base"] > 0 and rep["n_delta"] > 0
-    assert rep["ratio"] is not None and not rep["rebuild"], rep
-    # distribution shift: every component reflected around 10 — far
-    # outside anything the anchors/codebooks saw
-    ood = ind.selectExpr(
-        "vec_id",
-        "transform(embedding, x -> 1e1 - cast(x as double)) AS embedding",
-    )
-    rep2 = similarity.ivfpq_drift_probe(spark, path, ood)
-    assert rep2["rebuild"] and rep2["ratio"] > rep["ratio"], (rep, rep2)
-    # empty delta reports ratio=None and never recommends a rebuild
-    rep3 = similarity.ivfpq_drift_probe(spark, path, ind.where("vec_id < 0"))
-    assert rep3["ratio"] is None and not rep3["rebuild"], rep3
-
-
-def test_ivfpq_rebuild_resets_drift_and_preserves_geometry(
-    spark, emb, tmp_path
-):
-    # The action rebuild=True recommends: retrain from the current
-    # vectors store, in place. After the swap the formerly-drifted
-    # population is in-distribution (the baseline moves WITH the
-    # retrain), geometry is preserved by default, and the index stays
-    # queryable with both populations findable.
-    path = str(tmp_path / "idx_rebuild")
-    similarity.build_ivfpq_index(
-        emb.where("vec_id % 2 = 0"), path, n_cells=16, m=16, n_codes=16,
-        dim=64,
-    )
-    drifted = emb.where("vec_id % 2 = 1").selectExpr(
-        "vec_id + 1000000 AS vec_id",
-        "transform(embedding, x -> 1e1 - cast(x as double)) AS embedding",
-    )
-    similarity.append_to_ivfpq_index(drifted, path)
-    rep = similarity.ivfpq_drift_probe(spark, path, drifted)
-    assert rep["rebuild"], rep
-
-    info = similarity.rebuild_ivfpq_index(spark, path)
-    assert info["n_cells"] == 16 and info["m"] == 16 and info["n_codes"] == 16
-    rep2 = similarity.ivfpq_drift_probe(spark, path, drifted)
-    assert not rep2["rebuild"], (rep, rep2)
-    # queryable; a drifted query's neighbors come from the drifted
-    # population (ADC ranks it properly under the retrained codebooks)
-    q = drifted.where("vec_id = 1000001")
-    got = similarity.knn_cosine_ivfpq_query(
-        spark, path, q, k=5, n_probe=8
-    ).collect()
-    assert got and all(r["neighbor_id"] >= 1000000 for r in got), got
-    # no swap leftovers
-    import os
-
-    assert not os.path.exists(path + "__rebuild_tmp")
-    assert not os.path.exists(path + "__rebuild_old")
-
-
-def test_ivfpq_rebuild_crash_windows_recover(spark, emb, tmp_path):
-    # Simulate both crash points around the two-rename swap: with a
-    # COMPLETE tmp the next reader rolls forward; with an incomplete
-    # tmp it rolls back to the old index. Either way the index loads.
-    import os
-    import shutil
-
-    path = str(tmp_path / "idx_crash")
-    similarity.build_ivfpq_index(
-        emb.where("vec_id < 200"), path, n_cells=8, m=8, n_codes=8, dim=64
-    )
-    # crash AFTER the first rename, tmp complete -> roll forward
-    similarity.build_ivfpq_index(
-        emb.where("vec_id < 200"), path + "__rebuild_tmp",
-        n_cells=8, m=8, n_codes=8, dim=64,
-    )
-    os.rename(path, path + "__rebuild_old")
-    cents, _, _ = similarity.load_ivfpq_model(spark, path)
-    assert len(cents) == 8
-    assert os.path.exists(path)
-    assert not os.path.exists(path + "__rebuild_old")
-    assert not os.path.exists(path + "__rebuild_tmp")
-    # crash AFTER the first rename, tmp INCOMPLETE (no model data)
-    # -> roll back
-    os.makedirs(path + "__rebuild_tmp/model")
-    os.rename(path, path + "__rebuild_old")
-    cents, _, _ = similarity.load_ivfpq_model(spark, path)
-    assert len(cents) == 8
-    assert not os.path.exists(path + "__rebuild_tmp")
-    # leftovers beside a LIVE index are garbage and get cleared
-    os.makedirs(path + "__rebuild_tmp")
-    shutil.copytree(path, path + "__rebuild_old")
-    similarity._recover_rebuild(path)
-    assert os.path.exists(path)
-    assert not os.path.exists(path + "__rebuild_tmp")
-    assert not os.path.exists(path + "__rebuild_old")
-
-
 def test_pq_paths_handle_all_null_query_sets(spark):
     # Every query vector NULL (or an empty query frame) must yield an
     # EMPTY result, not an AxisError from np.linalg.norm over a
@@ -1107,321 +900,3 @@ def test_skew_harvest_from_train_sample(spark):
     assert compose_jobs == base_jobs, (compose_jobs, base_jobs)
     split = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in split_df.collect()}
     assert split == unsplit and split
-
-
-def test_ivfpq_index_delete(spark, emb, tmp_path):
-    # FAISS remove_ids() semantics: deleted ids vanish from query
-    # results, untouched inverted lists are never rewritten (file
-    # mtimes byte-stable), replay is a no-op, and vacuum reclaims the
-    # vectors store.
-    import os
-    import glob
-
-    path = str(tmp_path / "ivfpq_del")
-    similarity.build_ivfpq_index(
-        emb, path, n_cells=16, m=16, n_codes=16, dim=64
-    )
-    queries = emb.where("vec_id < 3")
-    before = similarity.knn_cosine_ivfpq_query(
-        spark, path, queries, k=10, n_probe=8, shortlist=80
-    ).collect()
-    victims = sorted({r["neighbor_id"] for r in before})[:3]
-    assert victims
-
-    codes = spark.read.parquet(path + "/codes")
-    victim_cells = {
-        r["cell"]
-        for r in codes.where(F_col("vid").isin(victims)).select("cell")
-        .distinct().collect()
-    }
-    untouched = [
-        d for d in glob.glob(path + "/codes/cell=*")
-        if int(d.rsplit("=", 1)[1]) not in victim_cells
-    ]
-    mtimes = {
-        f: os.path.getmtime(f)
-        for d in untouched
-        for f in glob.glob(d + "/*.parquet")
-    }
-
-    n = similarity.delete_from_ivfpq_index(spark, path, victims)
-    assert n == len(victim_cells) and n > 0
-    # untouched lists not rewritten
-    assert mtimes == {
-        f: os.path.getmtime(f)
-        for d in untouched
-        for f in glob.glob(d + "/*.parquet")
-    }
-    # the ids are gone from the codes store and from query results
-    left = spark.read.parquet(path + "/codes").where(
-        F_col("vid").isin(victims)
-    ).count()
-    assert left == 0
-    after = similarity.knn_cosine_ivfpq_query(
-        spark, path, queries, k=10, n_probe=8, shortlist=80
-    ).collect()
-    assert not ({r["neighbor_id"] for r in after} & set(victims))
-    assert after  # still answers
-    # replay: locates nothing
-    assert similarity.delete_from_ivfpq_index(spark, path, victims) == 0
-    # vacuum drops the stale vector rows
-    similarity.delete_from_ivfpq_index(
-        spark, path, victims, vacuum_vectors=True
-    )
-    assert (
-        spark.read.parquet(path + "/vectors")
-        .where(F_col("vid").isin(victims))
-        .count()
-        == 0
-    )
-
-
-def test_ivfpq_index_standalone_vacuum(spark, emb, tmp_path):
-    # VERDICT r8 #8: stale vector rows from unvacuumed deletes are dead
-    # storage until reclaimed — the standalone face reconciles vectors
-    # against the codes store, rewrites ONLY the stale ids' buckets,
-    # and measurably shrinks the store. Idempotent; queries unaffected.
-    import glob
-    import os
-
-    path = str(tmp_path / "ivfpq_vac")
-    similarity.build_ivfpq_index(
-        emb, path, n_cells=16, m=16, n_codes=16, dim=64, vec_buckets=16
-    )
-    victims = [r["vec_id"] for r in emb.select("vec_id").collect()][:100]
-    similarity.delete_from_ivfpq_index(
-        spark, path, victims, vacuum_vectors=False
-    )
-    vecs = spark.read.parquet(path + "/vectors")
-    assert vecs.where(F_col("vid").isin(victims)).count() == len(victims)
-
-    nb = similarity._ivfpq_vec_buckets(spark, path)
-    stale_buckets = {
-        r["b"]
-        for r in spark.createDataFrame(
-            [(int(v),) for v in victims], "vid long"
-        ).select(similarity._vec_bucket(nb).alias("b")).distinct().collect()
-    }
-    untouched = [
-        d for d in glob.glob(path + "/vectors/__vb=*")
-        if int(d.rsplit("=", 1)[1]) not in stale_buckets
-    ]
-    mtimes = {
-        f: os.path.getmtime(f)
-        for d in untouched
-        for f in glob.glob(d + "/*.parquet")
-    }
-
-    info = similarity.vacuum_ivfpq_index(spark, path)
-    assert info["stale_rows"] == len(victims)
-    assert 0 < info["buckets_rewritten"] <= len(stale_buckets)
-    assert info["bytes_after"] < info["bytes_before"]
-    # storage actually gone, untouched buckets byte-stable
-    vecs = spark.read.parquet(path + "/vectors")
-    assert vecs.where(F_col("vid").isin(victims)).count() == 0
-    assert mtimes == {
-        f: os.path.getmtime(f)
-        for d in untouched
-        for f in glob.glob(d + "/*.parquet")
-    }
-    # idempotent
-    info2 = similarity.vacuum_ivfpq_index(spark, path)
-    assert info2["stale_rows"] == 0
-    assert info2["bytes_after"] == info["bytes_after"]
-    # index still answers, never returning vacuumed ids
-    out = similarity.knn_cosine_ivfpq_query(
-        spark, path, emb.where("vec_id >= 490"), k=5, n_probe=8
-    ).collect()
-    assert out and not ({r["neighbor_id"] for r in out} & set(victims))
-    # full retirement: with every inverted list deleted, the ENTIRE
-    # vectors store is dead — vacuum reclaims it all and leaves an
-    # empty (not corrupt) store
-    rest = [r["vec_id"] for r in emb.select("vec_id").collect()][100:]
-    similarity.delete_from_ivfpq_index(
-        spark, path, rest, vacuum_vectors=False
-    )
-    info3 = similarity.vacuum_ivfpq_index(spark, path)
-    assert info3["stale_rows"] == len(rest)
-    import pathlib
-
-    assert not similarity._has_data_files(pathlib.Path(path) / "vectors")
-    assert similarity.vacuum_ivfpq_index(spark, path)["stale_rows"] == 0
-
-
-def test_ivfpq_index_full_retirement_and_int_ids(spark, tmp_path):
-    # (a) int-typed corpus ids: the vacuum's id-hash bucket must hit the
-    # right directory (xxhash64 is type-sensitive — everything
-    # canonicalizes through a LONG cast). (b) deleting EVERY id leaves a
-    # readable-empty store (no data files), not an unreadable wedge;
-    # queries return empty and a later append revives the index.
-    ids = list(range(40))
-    corpus = spark.createDataFrame(
-        [(i, [float((i * 3 + j) % 5) for j in range(8)]) for i in ids],
-        "vec_id int, embedding array<double>",   # INT ids on purpose
-    )
-    path = str(tmp_path / "ivfpq_retire")
-    similarity.build_ivfpq_index(
-        corpus, path, n_cells=4, m=4, n_codes=4, dim=8, vec_buckets=8
-    )
-    # int-id vacuum: stale vector rows actually vanish
-    n = similarity.delete_from_ivfpq_index(
-        spark, path, ids[:5], vacuum_vectors=True
-    )
-    assert n > 0
-    assert (
-        spark.read.parquet(path + "/vectors")
-        .where(F_col("vid").isin(ids[:5]))
-        .count()
-        == 0
-    )
-    # full retirement: delete everything, store stays usable
-    similarity.delete_from_ivfpq_index(spark, path, ids, vacuum_vectors=True)
-    from node_mongo2influx_spark.sinks.parquet import _has_data_files
-    import pathlib as _pl
-
-    assert not _has_data_files(_pl.Path(path + "/codes"))
-    q = spark.createDataFrame(
-        [(1, [1.0] * 8)], "vec_id long, embedding array<double>"
-    )
-    assert (
-        similarity.knn_cosine_ivfpq_query(spark, path, q, k=3).collect() == []
-    )
-    # replayed delete on the empty store: no-op, no crash
-    assert similarity.delete_from_ivfpq_index(spark, path, ids) == 0
-    # revival: append re-creates lists next to the leftover _SUCCESS
-    similarity.append_to_ivfpq_index(
-        corpus.where("vec_id < 10"), path
-    )
-    got = similarity.knn_cosine_ivfpq_query(
-        spark, path, q, k=3, n_probe=4
-    ).collect()
-    assert got and all(r["neighbor_id"] < 10 for r in got)
-
-
-def test_ivfpq_index_compaction(spark, tmp_path):
-    # Incremental appends leave one file per touched cell per batch;
-    # compaction collapses every partition dir to ONE file, preserves
-    # the rows byte-for-byte, keeps queries working, and recovers from
-    # a crashed prior run (leftover __compact_old with no live store).
-    import glob
-    import os
-    import shutil
-
-    corpus = spark.createDataFrame(
-        [(i, [float((i * 3 + j) % 5) for j in range(8)]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "ivfpq_compact")
-    similarity.build_ivfpq_index(
-        corpus, path, n_cells=4, m=4, n_codes=4, dim=8, vec_buckets=8
-    )
-    for lo in (100, 140, 180):  # three delta appends
-        delta = spark.createDataFrame(
-            [(i, [float((i * 3 + j) % 5) for j in range(8)])
-             for i in range(lo, lo + 20)],
-            "vec_id long, embedding array<double>",
-        )
-        similarity.append_to_ivfpq_index(delta, path)
-
-    def files_per_dir(store):
-        return {
-            d: len(glob.glob(d + "/*.parquet"))
-            for d in glob.glob(path + f"/{store}/*=*")
-        }
-
-    assert any(n > 1 for n in files_per_dir("codes").values())
-    before = sorted(
-        (r["vid"], r["cell"], bytes(r["codes"]))
-        for r in spark.read.parquet(path + "/codes").collect()
-    )
-    out = similarity.compact_ivfpq_index(spark, path)
-    assert set(out) == {"codes", "vectors"}
-    assert all(n == 1 for n in files_per_dir("codes").values())
-    assert all(n == 1 for n in files_per_dir("vectors").values())
-    after = sorted(
-        (r["vid"], r["cell"], bytes(r["codes"]))
-        for r in spark.read.parquet(path + "/codes").collect()
-    )
-    assert after == before
-    q = spark.createDataFrame(
-        [(1, [1.0] * 8)], "vec_id long, embedding array<double>"
-    )
-    assert similarity.knn_cosine_ivfpq_query(spark, path, q, k=3).collect()
-    # crash recovery: simulate a crash between the two swap renames
-    os.rename(path + "/codes", path + "/codes__compact_old")
-    out2 = similarity.compact_ivfpq_index(spark, path)
-    assert out2["codes"] >= 1
-    assert sorted(
-        (r["vid"], r["cell"], bytes(r["codes"]))
-        for r in spark.read.parquet(path + "/codes").collect()
-    ) == before
-
-
-def test_index_harvested_skew_pairs(spark, tmp_path, monkeypatch):
-    # Populations harvested from the codes partition layout agree with a
-    # hard top-1 assignment under the index's own quantizer, and the
-    # index-driven pair path (a) never runs the corpus probe scan,
-    # (b) splits the heavy cell from the harvested counts alone, and
-    # (c) produces the SAME exact-scored edge set as the raw-corpus path
-    # under the same centroids with splitting off.
-    heavy = [
-        (i, [1.0 + 0.001 * (i % 7), 0.5, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0])
-        for i in range(48)
-    ]
-    spread = [
-        (100 + i, [float((i * 3 + j + 1) % 5) for j in range(8)])
-        for i in range(32)
-    ]
-    corpus = spark.createDataFrame(
-        heavy + spread, "vec_id long, embedding array<double>"
-    )
-    path = str(tmp_path / "ivfpq_harvest")
-    similarity.build_ivfpq_index(
-        corpus, path, n_cells=4, m=4, n_codes=4, dim=8, vec_buckets=4
-    )
-
-    pops = similarity.ivfpq_cell_populations(spark, path)
-    assert pops.sum() == 80 and len(pops) == 4
-    cents, _, _ = similarity.load_ivfpq_model(spark, path)
-    mat = np.array([r[1] for r in heavy + spread], dtype=np.float64)
-    unit = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    hard = similarity._top_cells(unit, cents, 1, None).ravel()
-    expect = np.bincount(hard, minlength=4)
-    assert list(pops) == list(expect)
-    assert pops.max() >= 48  # the heavy cluster shares one cell
-
-    # the probe scan must never run on the harvest path
-    def boom(*a, **k):
-        raise AssertionError("corpus probe ran on the harvest path")
-
-    monkeypatch.setattr(similarity, "_estimate_oversized_cells", boom)
-    got = sorted(
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_pairs_ivf_index(
-            spark, path, threshold=0.9, cell_cap=8
-        ).collect()
-    )
-    # cell_cap=8 vs a >=48-member cell: the harvested counts MUST split it
-    oversized = similarity._oversized_from_counts(pops, 8, sample_mod=2)
-    assert oversized and max(oversized.values()) >= 6
-    ref = sorted(
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_pairs_ivf(
-            corpus, threshold=0.9, dim=8, centroids=cents, cell_cap=None
-        ).collect()
-    )
-    assert got == ref and len(got) > 100
-
-    # counts against a freshly trained quantizer are refused
-    with pytest.raises(ValueError, match="centroids"):
-        similarity.cosine_pairs_ivf(
-            corpus, threshold=0.9, dim=8, cell_counts=pops
-        )
-
-    # a fully retired index yields an empty edge set, not a wedged read
-    similarity.delete_from_ivfpq_index(
-        spark, path, list(range(48)) + list(range(100, 132)),
-        vacuum_vectors=True,
-    )
-    assert similarity.cosine_pairs_ivf_index(spark, path).count() == 0
-    assert similarity.ivfpq_cell_populations(spark, path).sum() == 0

@@ -54,7 +54,6 @@ def main() -> None:
         text,
     )
     from node_mongo2influx_spark.plans.llm_ops import _BPE_FIXED_MERGES
-    from node_mongo2influx_spark.sinks import ParquetSink
     from node_mongo2influx_spark.sources.parquet_compat import read_parquet
 
     eng = Engine.builder(
@@ -219,114 +218,6 @@ def main() -> None:
         finally:
             text._BM25_QUERY_BROADCAST_MAX_BYTES = saved
 
-    # CDC upsert probe: a FIXED day-partitioned store built once (outside
-    # timing); fn(k) upserts a delta touching k days. Claimed cost is
-    # O(delta partitions), never O(table) — wall should track k and stay
-    # far under a full-store rewrite. Returns None (the upsert writes
-    # itself); repeated upserts replace the same keys so runs are
-    # comparable without restoring the store.
-    cdc_dir = tempfile.mkdtemp(prefix="scale_probe_cdc_")
-    cdc_sink = ParquetSink(cdc_dir, partition_by=("day",), dynamic_overwrite=True)
-    cdc_base = (
-        read_parquet(spark, f"{SF_DIR}/events.parquet")
-        .select("event_id", "value", F.date_format("ts", "yyyy-MM-dd").alias("day"))
-    )
-    cdc_sink.write(cdc_base, "t")
-    cdc_days = sorted(
-        r["day"] for r in cdc_base.select("day").distinct().collect()
-    )
-
-    def cdc_upsert_delta(k: int):
-        days = cdc_days[:k]
-        delta = (
-            cdc_base.where(F.col("day").isin(days))
-            .withColumn("value", F.col("value") + 1.0)
-        )
-        cdc_sink.upsert(lambda p: spark.read.parquet(p), delta, "t", keys=("event_id",))
-        return None
-
-    # r7: the version-GUARDED merge (order_col) replaces the anti-join +
-    # union with a per-key rank window over the touched partitions —
-    # same O(touched) class; this probe quantifies the constant.
-    cdcv_dir = tempfile.mkdtemp(prefix="scale_probe_cdcv_")
-    cdcv_sink = ParquetSink(
-        cdcv_dir, partition_by=("day",), dynamic_overwrite=True
-    )
-    cdcv_base = cdc_base.withColumn("__seq", F.lit(1))
-    cdcv_sink.write(cdcv_base, "t")
-
-    def cdc_upsert_delta_guarded(k: int):
-        days = cdc_days[:k]
-        delta = (
-            cdcv_base.where(F.col("day").isin(days))
-            .withColumn("value", F.col("value") + 1.0)
-            .withColumn("__seq", F.lit(2))
-        )
-        cdcv_sink.upsert(
-            lambda p: spark.read.parquet(p), delta, "t",
-            keys=("event_id",), order_col="__seq",
-        )
-        return None
-
-    # r8 (VERDICT r7 #4): the guarded MOVING merge — adds the column-
-    # pruned key-location scan on top of the guarded rewrite. The scan
-    # is O(table) in rows but reads only (key, partition) columns;
-    # rewrite stays O(touched). Keys stay in place here (the probe
-    # measures the cost SHAPE vs k, not the migration itself — moved
-    # keys only change WHICH partitions rewrite).
-    cdcm_dir = tempfile.mkdtemp(prefix="scale_probe_cdcm_")
-    cdcm_sink = ParquetSink(
-        cdcm_dir, partition_by=("day",), dynamic_overwrite=True
-    )
-    if not ONLY or "cdc_upsert_guarded_moving" in ONLY:
-        cdcm_sink.write(cdcv_base, "t")
-
-    def cdc_upsert_guarded_moving(k: int):
-        days = cdc_days[:k]
-        delta = (
-            cdcv_base.where(F.col("day").isin(days))
-            .withColumn("value", F.col("value") + 1.0)
-            .withColumn("__seq", F.lit(2))
-        )
-        cdcm_sink.upsert_guarded_moving(
-            lambda p: spark.read.parquet(p), delta, "t",
-            keys=("event_id",), order_col="__seq",
-        )
-        return None
-
-    # Persisted-index batch-query probe (round 7): the DISTRIBUTED face
-    # of knn_cosine_ivfpq_query (executor probing, distinct-cell-pruned
-    # codes read, shared cogroup candidates, hash rerank) at k× QUERY
-    # count over a FIXED 8×-corpus index. The index is built here, at
-    # setup, so the timed region is query-only; the row-count gate is
-    # forced to 0 inside the probe so every factor runs the SAME code
-    # path (it would otherwise route small factors through the
-    # driver-LUT face and compare different implementations).
-    _ivfpq_store: dict = {}
-    if not ONLY or "ivfpq_query_batch_persisted" in ONLY:
-        _ivfpq_store["path"] = (
-            tempfile.mkdtemp(prefix="scale_probe_ivfpq_") + "/idx"
-        )
-        similarity.build_ivfpq_index(
-            uniquified_embeddings(8), _ivfpq_store["path"],
-            n_cells=64, m=16, n_codes=16, dim=64,
-        )
-
-    def ivfpq_query_batch_persisted(k: int):
-        # save/restore: probes share one process — leaving the gate at 0
-        # would silently force every LATER probe's knn_cosine_ivfpq*
-        # traversal onto the batch path and contaminate comparisons
-        # (ADVICE r7)
-        saved = similarity._DRIVER_LUT_MAX_QUERIES
-        similarity._DRIVER_LUT_MAX_QUERIES = 0
-        try:
-            return similarity.knn_cosine_ivfpq_query(
-                spark, _ivfpq_store["path"], uniquified_embeddings(k),
-                k=10, n_probe=8,
-            )
-        finally:
-            similarity._DRIVER_LUT_MAX_QUERIES = saved
-
     # Bloom incremental-dedup probe (round 7, VERDICT r6 #1): build the
     # persisted filter from a k-scaled BASE corpus, classify the k-scaled
     # delta, and measure the false-positive rate. Geometry is data-sized
@@ -364,30 +255,6 @@ def main() -> None:
         assert hit["fp_rate"] < 0.025, (
             f"Bloom FP rate {hit['fp_rate']} at k={k} exceeds 10x the "
             "design point — geometry not tracking the corpus"
-        )
-        return None
-
-    # vacuum probe (round 10, VERDICT r9 #6): the claim is O(stale
-    # buckets), not O(store) — so delete a FIXED 64-id slice whatever k
-    # is and time ONLY the vacuum (the k-scaled build/delete setup would
-    # otherwise dominate the harness wall; the printed per-k vacuum
-    # seconds are the evidence and must stay ~flat while the store grows
-    # k-fold). Reclaimed bytes are printed as the effect check.
-    def ivfpq_vacuum_fixed_stale(k: int):
-        path = tempfile.mkdtemp(prefix="scale_probe_vac_") + "/idx"
-        emb = uniquified_embeddings(k)
-        similarity.build_ivfpq_index(
-            emb, path, n_cells=64, m=16, n_codes=16, dim=64
-        )
-        stale = emb.select("vec_id").orderBy("vec_id").limit(64)
-        similarity.delete_from_ivfpq_index(spark, path, stale)
-        t0 = time.monotonic()
-        rep = similarity.vacuum_ivfpq_index(spark, path)
-        dt = time.monotonic() - t0
-        print(
-            f"#   ivfpq_vacuum_fixed_stale k={k}: vacuum={dt:.3f}s "
-            f"report={rep}",
-            file=sys.stderr,
         )
         return None
 
@@ -460,9 +327,6 @@ def main() -> None:
         "modality_agreement_sampled": modality_agreement_sampled,
         "bm25_multi_qcount": bm25_multi_queries,
         "bm25_multi_qstream": bm25_multi_qstream,
-        "cdc_upsert_delta": cdc_upsert_delta,
-        "cdc_upsert_delta_guarded": cdc_upsert_delta_guarded,
-        "cdc_upsert_guarded_moving": cdc_upsert_guarded_moving,
         # round-5 library additions: BPE trains over the word-frequency
         # aggregate (the only corpus pass — driver merge-loop time is
         # corpus-size independent); the C4 cleaner is a map-only rewrite.
@@ -623,8 +487,6 @@ def main() -> None:
         # ~linear-ish; the naive full-rescan reference is quadratic-class
         # (measured 18× wall at 4×).
         "bpe_merge_loop_vocab": lambda k: _bpe_vocab_probe(k),
-        "ivfpq_query_batch_persisted": ivfpq_query_batch_persisted,
-        "ivfpq_vacuum_fixed_stale": ivfpq_vacuum_fixed_stale,
         # round-11 (VERDICT r10 #7): the vector-validity guard itself as
         # a contrast pair — the guarded embeddings scan vs the same scan
         # with only a null filter. The guard is ONE single-traversal
