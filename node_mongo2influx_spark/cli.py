@@ -192,6 +192,9 @@ def main(argv: list[str] | None = None) -> int:
         # `--tables` with no values (e.g. an empty shell expansion) would
         # otherwise silently migrate nothing and exit 0.
         raise SystemExit("--tables given but empty; omit it to migrate all tables")
+    repeated = sorted({t for t in args.tables or () if args.tables.count(t) > 1})
+    if repeated:  # Engine.migrate rejects these too, but after Spark starts
+        raise SystemExit(f"--tables repeats {repeated}")
     if args.limit < 1:
         raise SystemExit(f"--limit must be >= 1, got {args.limit}")
     try:

@@ -3,9 +3,9 @@
 This is the Spark-first re-expression of the reference's pipeline
 (/root/reference/index.js:340-370 `migrate` → :290-317 `migrateCollections`
 → :177-278 `migrateCollection`): enumerate all source tables, skip system
-tables, optionally truncate each destination series, run
-read → transform → time-filter → write per table with bounded cross-table
-parallelism, and account rows/skips/throughput.
+tables, run read → transform → time-filter per table, optionally truncate
+its destination series, write it, with bounded cross-table parallelism,
+and account rows/skips/throughput.
 
 What collapses away under Spark (SURVEY.md §3-4): skip/limit pagination
 (input splits), serial page/batch loops (partition-parallel tasks), manual
@@ -172,6 +172,12 @@ class Engine:
             from node_mongo2influx_spark.sources.catalog import is_system_table
 
             names = [n for n in catalog.table_names() if not is_system_table(n)]
+        repeated = sorted({n for n in names if names.count(n) > 1})
+        if repeated:
+            # Two tables under one name would both land in one series (an
+            # append sink gets every row twice), e.g. events.csv and
+            # events.parquet in one directory.
+            raise ValueError(f"table names repeat: {repeated}")
         report = MigrationReport()
         t0 = time.monotonic()
         done = 0
@@ -214,10 +220,11 @@ class Engine:
     ) -> TableReport:
         t0 = time.monotonic()
         logger.info("table %s: starting", name)
+        out, obs = transform.apply(catalog.read(name))
+        # Truncate only once the table has been read and planned: a table
+        # that fails before its write must leave its series as it was.
         if self.config.empty_series:
             sink.truncate(name)
-        df = catalog.read(name)
-        out, obs = transform.apply(df)
         written = sink.write(out, name)
         rep = TableReport(table=name, seconds=time.monotonic() - t0)
         stats = obs.get

@@ -56,17 +56,12 @@ def ascii_lower_py(s: str) -> str:
     return s.translate(_PY_TABLE)
 
 
-def ascii_upper(col: Column | str) -> Column:
-    """Spark Column: ASCII-only uppercase (non-ASCII passes through).
+def ascii_upper_sql(expr: str) -> str:
+    """Spark-SQL text: ASCII-only uppercase (non-ASCII passes through).
     Engine upper() diverges cross-engine on ß/ı (r8); the label sweep
     (r11) caught the URL-synthesis queries upper()-ing an arbitrary
-    source column — same contract, opposite direction."""
-    return F.translate(F.col(col) if isinstance(col, str) else col,
-                       _LOWER, _UPPER)
-
-
-def ascii_upper_sql(expr: str) -> str:
-    """Spark-SQL text twin of :func:`ascii_upper`."""
+    source column — the :func:`ascii_lower` contract, opposite
+    direction."""
     return f"translate({expr}, '{_LOWER}', '{_UPPER}')"
 
 

@@ -97,27 +97,12 @@ def cutoff32(fraction: float) -> int:
 # bit-for-bit DuckDB-checkable.
 # ---------------------------------------------------------------------------
 
-def word_hashes_spark_sql(words_expr: str) -> str:
-    """Spark-SQL: FNV-1a of each word of an array<string> — computed ONCE
-    per document; every seed's minhash then derives from this array (the
+def word_hashes_duckdb_sql(words_expr: str) -> str:
+    """DuckDB: FNV-1a of each word of a list of strings — computed ONCE
+    per document; every seed's minhash then derives from this list (the
     chars are the expensive part, the seed only perturbs the fold).
     Per-word folds are length-capped like :func:`fnv1a32_spark_sql` (a
     megabyte 'word' is otherwise O(len²) inside one lambda)."""
-    n = f"least(length(wd), {FNV_MAX_CHARS})"
-    return (
-        f"transform({words_expr}, wd -> "
-        f"aggregate(transform(slice(sequence(1, greatest({n}, 1)), "
-        f"1, {n}), "
-        f"p -> cast(ascii(substring(wd, p, 1)) as bigint)), "
-        f"cast({FNV_BASIS} as bigint), "
-        f"(a, x) -> ((a ^ x) * {FNV_PRIME}) & 4294967295, "
-        f"a -> IF(length(wd) > {FNV_MAX_CHARS}, "
-        f"((a ^ length(wd)) * {FNV_PRIME}) & 4294967295, a)))"
-    )
-
-
-def word_hashes_duckdb_sql(words_expr: str) -> str:
-    """DuckDB twin of :func:`word_hashes_spark_sql`."""
     h = (
         f"list_reduce(list_prepend(CAST({FNV_BASIS} AS BIGINT), "
         f"list_transform(generate_series(1, least(length(wd), "
@@ -144,8 +129,8 @@ def _shingle_fold(items: list, seed: int) -> str:
 
 def minhash_words_spark_sql(wh_expr: str, seed: int, k: int = 3) -> str:
     """Spark-SQL: min over k-word shingles of the seeded shingle hash,
-    given ``wh_expr`` — the per-word hash array from
-    :func:`word_hashes_spark_sql` (0-based bracket indexing)."""
+    given ``wh_expr`` — a per-word FNV-1a hash array (0-based bracket
+    indexing)."""
     fold = _shingle_fold([f"{wh_expr}[i + {j}]" for j in range(k)], seed)
     return (
         f"array_min(transform(sequence(0, size({wh_expr}) - {k}), "
@@ -186,24 +171,12 @@ def _mul32(expr: str, c: int, div: str) -> str:
     )
 
 
-def fmix32_spark_steps(names: list[str]) -> list[str]:
-    """Five Spark-SQL expressions; ``names[0]`` is the input column, each
-    later expression references the previous step's alias ``names[i]``
-    (chain them through SEPARATE projections/aliases — each step uses its
-    input 2-3×, and only an aliased non-cheap input survives
-    CollapseProject un-duplicated)."""
-    i0, i1, i2, i3, i4 = names[:5]
-    return [
-        f"({i0} ^ ({i0} div 65536))",
-        _mul32(i1, FMIX32_C1, "div"),
-        f"({i2} ^ ({i2} div 8192))",
-        _mul32(i3, FMIX32_C2, "div"),
-        f"({i4} ^ ({i4} div 65536))",
-    ]
-
-
 def fmix32_duckdb_steps(names: list[str]) -> list[str]:
-    """DuckDB twin of :func:`fmix32_spark_steps` (xor(), ``//``)."""
+    """DuckDB: fmix32 as five expressions; ``names[0]`` is the input
+    column, each later expression references the previous step's alias
+    ``names[i]`` (chain them through separate projections/aliases — each
+    step uses its input 2-3×). Same arithmetic as
+    :func:`fmix32_spark_inline`."""
     i0, i1, i2, i3, i4 = names[:5]
     return [
         f"xor({i0}, {i0} // 65536)",

@@ -23,24 +23,6 @@ def row_salt(buckets: int) -> Column:
     return F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(buckets))
 
 
-def salted_count(
-    df: DataFrame,
-    keys: Sequence[str],
-    buckets: int = 32,
-    count_col: str = "n",
-) -> DataFrame:
-    """Two-phase skew-safe count: partial count per (key, salt), then final
-    sum per key. Two small shuffles instead of one skewed one; the partial
-    output is |keys|×buckets rows, so the second shuffle is tiny.
-    """
-    partial = (
-        df.withColumn("__salt", row_salt(buckets))
-        .groupBy(*keys, "__salt")
-        .agg(F.count(F.lit(1)).alias("__partial"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__partial").alias(count_col))
-
-
 def salted_stats(
     df: DataFrame,
     keys: Sequence[str],
@@ -48,9 +30,9 @@ def salted_stats(
     buckets: int = 32,
 ) -> DataFrame:
     """Two-phase skew-safe (count, sum) in ONE pass: partial per (key,
-    salt), final per key — both statistics share the same two small
-    shuffles instead of running :func:`salted_count` and :func:`salted_sum`
-    separately. Output columns: ``n``, ``total``."""
+    salt), then final per key. Two small shuffles instead of one skewed
+    one; the partial output is |keys|×buckets rows, so the second shuffle
+    is tiny. Output columns: ``n``, ``total``."""
     partial = (
         df.withColumn("__salt", row_salt(buckets))
         .groupBy(*keys, "__salt")
@@ -62,22 +44,6 @@ def salted_stats(
     return partial.groupBy(*keys).agg(
         F.sum("__n").alias("n"), F.sum("__s").alias("total")
     )
-
-
-def salted_sum(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    buckets: int = 32,
-    sum_col: str = "total",
-) -> DataFrame:
-    """Two-phase skew-safe sum (same shape as :func:`salted_count`)."""
-    partial = (
-        df.withColumn("__salt", row_salt(buckets))
-        .groupBy(*keys, "__salt")
-        .agg(F.sum(value_col).alias("__partial"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__partial").alias(sum_col))
 
 
 def ensure_min_partitions(df, target: int, min_bytes: int = 0):

@@ -9,8 +9,8 @@ operators — ANSI DIVIDE_BY_ZERO on zero norms, NULL-element folds that
 Spark propagates but DuckDB's list_sum skips, float(None) crashes in
 Arrow kernels, and int64-saturating floor() on 1e38-component sums.
 
-Two tiers, each ONE predicate spelled identically for Spark Columns,
-Spark SQL text, and DuckDB oracle SQL:
+Two tiers, each ONE predicate spelled identically for Spark SQL text
+and DuckDB oracle SQL:
 
 **usable** — the input contract of every cosine-family operator
 (knn/*, cosine_pairs*, semantic_dedup, centroids, trainers):
@@ -90,7 +90,6 @@ USABLE_ABS_MIN = 1e-160
 #: finite through d = 10⁷.
 USABLE_ABS_MAX = 1e150
 
-_INF = float("inf")
 _NAN = float("nan")
 
 
@@ -140,58 +139,25 @@ _MAXABS_DUCKDB = (
 )
 
 
-def usable_vector(col: Column) -> Column:
-    """Spark Column: the **usable** predicate (see module docstring)."""
-    return col.isNotNull() & _maxabs_fold(
-        col,
-        lambda m: (m >= F.lit(USABLE_ABS_MIN)) & (m <= F.lit(USABLE_ABS_MAX)),
-    )
-
-
 def usable_vector_sql(expr: str) -> str:
-    """Spark-SQL text twin of :func:`usable_vector` — the hot-path
-    spelling (one ``F.expr``, no lambda Columns; see module docstring)."""
+    """Spark-SQL text: the **usable** predicate (see module docstring)
+    — the hot-path spelling (one ``F.expr``, no lambda Columns)."""
     fold = _MAXABS_SQL.format(e=expr, finish="m >= 1e-160 AND m <= 1e150")
     return f"({expr} IS NOT NULL AND {fold})"
 
 
 def usable_vector_duckdb_sql(expr: str) -> str:
-    """DuckDB oracle twin of :func:`usable_vector` — the same max-abs
+    """DuckDB oracle twin of :func:`usable_vector_sql` — the same max-abs
     fold, the same two range comparisons (NaN ranks greatest in DuckDB
     comparisons too, so NaN/Inf fail the upper bound identically)."""
     fold = _MAXABS_DUCKDB.format(e=expr)
     return f"({expr} IS NOT NULL AND {fold} BETWEEN 1e-160 AND 1e150)"
 
 
-def double_vector_duckdb_sql(expr: str) -> str:
-    """NULL-safe DOUBLE[] cast for oracle vector CTEs: a NULL element
-    becomes NaN instead of remaining NULL. Found by the r11
-    embed_double sweep: when the source column is already DOUBLE[] the
-    cast is an identity, and DuckDB then evaluates a downstream
-    ``list_dot_product`` EAGERLY in the scan projection — ahead of the
-    usable-predicate filter — and raises ``list_inner_product: left
-    argument can not contain NULL values`` on rows the WHERE would have
-    excluded. NaN makes eager evaluation safe; the rows carrying it are
-    excluded by :func:`usable_vector_duckdb_sql` regardless, so results
-    are unchanged. (Float32 sources never hit this because the real
-    cast forms a plan barrier.)"""
-    return (
-        f"list_transform(CAST({expr} AS DOUBLE[]),"
-        f" x -> coalesce(x, 'NaN'::DOUBLE))"
-    )
-
-
-def bounded_vector(col: Column, bound: float = STAT_ABS_MAX) -> Column:
-    """Spark Column: the **bounded** predicate (statistics domain) —
+def bounded_vector_sql(expr: str, bound: float = STAT_ABS_MAX) -> str:
+    """Spark-SQL text: the **bounded** predicate (statistics domain) —
     the same single fold with the statistics ceiling as the upper range
     bound (NaN/Inf fail it; m <= bound implies m <= USABLE_ABS_MAX)."""
-    return col.isNotNull() & _maxabs_fold(
-        col, lambda m: (m >= F.lit(USABLE_ABS_MIN)) & (m <= F.lit(bound))
-    )
-
-
-def bounded_vector_sql(expr: str, bound: float = STAT_ABS_MAX) -> str:
-    """Spark-SQL text twin of :func:`bounded_vector`."""
     fold = _MAXABS_SQL.format(
         e=expr, finish=f"m >= 1e-160 AND m <= {bound!r}D"
     )
@@ -199,7 +165,7 @@ def bounded_vector_sql(expr: str, bound: float = STAT_ABS_MAX) -> str:
 
 
 def bounded_vector_duckdb_sql(expr: str, bound: float = STAT_ABS_MAX) -> str:
-    """DuckDB oracle twin of :func:`bounded_vector`."""
+    """DuckDB oracle twin of :func:`bounded_vector_sql`."""
     fold = _MAXABS_DUCKDB.format(e=expr)
     return f"({expr} IS NOT NULL AND {fold} BETWEEN 1e-160 AND {bound!r})"
 
@@ -240,7 +206,7 @@ def vector_class_duckdb_sql(expr: str) -> str:
 
 
 def usable_mask_np(mat):
-    """Vectorized numpy twin of :func:`usable_vector` for Arrow kernels:
+    """Vectorized numpy twin of :func:`usable_vector_sql` for Arrow kernels:
     ``mat`` is an (n, d) float64 matrix (pandas ``None`` elements arrive
     as NaN under dtype=float64), returns a boolean row mask. Load-bearing
     in the SRP bucket kernel (r11): the bucket-table branches drop their
@@ -261,7 +227,7 @@ def usable_mask_np(mat):
 
 
 def usable_vector_py(v) -> bool:
-    """Python/Arrow-kernel twin of :func:`usable_vector` (row values as
+    """Python/Arrow-kernel twin of :func:`usable_vector_sql` (row values as
     collected: None, or a list of float/None)."""
     import math
 

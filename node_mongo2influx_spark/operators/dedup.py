@@ -32,7 +32,6 @@ __all__ = [
     "minhash_signatures",
     "minhash_lsh_pairs",
     "simhash",
-    "word_shingles",
 ]
 
 #: Mersenne prime 2^31-1: the modulus for the (a*h+b) mod p permutation
@@ -75,15 +74,6 @@ def _with_words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(
         F.col(id_col), F.split(ascii_lower(F.col(text_col)), " ").alias("__words")
     )
-
-
-def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct n-gram word shingles of lower-cased ``text_col`` as an array.
-
-    Convenience form for small inputs/tests; hot paths go through
-    :func:`_with_words` + :func:`shingles_from_words` to avoid re-splitting.
-    """
-    return shingles_from_words(f"split(translate({text_col}, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ')", n)
 
 
 def exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -1024,22 +1014,6 @@ def cdc_chunks(
 #: Golden-ratio odd constant stepping the k hash functions apart.
 BLOOM_SEED = 0x9E3779B1
 
-#: Projected fill fraction above which a filter is considered saturated.
-#: fill = 1 - exp(-k*n/m); at the default geometry (16 bits/key, k=4)
-#: fill ~= 0.22 and FP = fill^k ~= 0.25%. At fill 0.5 the FP rate is
-#: already 6.25% and rising steeply — past that the filter silently
-#: degrades toward "everything is a duplicate", which at 100 TB is data
-#: LOSS, not slowness. Appends that would cross this refuse by default.
-BLOOM_MAX_FILL = 0.5
-
-
-class BloomSaturatedError(ValueError):
-    """An append/replay would push the persisted filter past
-    :data:`BLOOM_MAX_FILL` — the geometry was sized for a smaller base
-    corpus. Rebuild with :func:`bloom_build` (which re-derives ``m`` from
-    the CURRENT key count) instead of growing a filter whose false-
-    positive rate is no longer bounded."""
-
 
 def bloom_geometry(
     n_keys: int, bits_per_key: int = 16, k: int = 4, floor: int = 2048
@@ -1133,59 +1107,14 @@ def bloom_build(
     count over the distinct-fp frame — the only data-sized action, and
     it returns a scalar), the position set lands at ``path/positions``
     and the geometry (m, k, seed, n_keys) rides along in
-    ``path/geometry.json`` so every later append/classify replays
-    against the SAME m. The distinct hash set itself also persists at
-    ``path/fps`` (one int per key — smaller than the position set), so
-    ``n_keys`` is always DERIVABLE FROM DATA: appends recount the
-    distinct union instead of accumulating a counter, which makes
-    replayed/retried batches idempotent (ADVICE r7). Returns the
-    geometry dict."""
+    ``path/geometry.json`` so every later classify replays against the
+    SAME m. Returns the geometry dict."""
     hs = _bloom_hashes(df, fp_col)
     hs = hs.localCheckpoint(eager=False)  # counted AND expanded below
     geom = bloom_geometry(hs.count(), bits_per_key=bits_per_key, k=k, floor=floor)
     _bloom_positions_from_hashes(hs, geom).write.mode("overwrite").parquet(
         f"{path}/positions"
     )
-    hs.write.mode("overwrite").parquet(f"{path}/fps")
-    _bloom_write_geom(path, geom)
-    return geom
-
-
-def bloom_append(
-    df: DataFrame, fp_col: str, path: str, max_fill: float = BLOOM_MAX_FILL
-) -> dict:
-    """Union a new batch's positions into the persisted filter — the
-    streaming-ingest face (position sets merge by set union, so appends
-    commute). Replay-IDEMPOTENT: ``n_keys`` is recounted from the
-    persisted distinct hash set unioned with the batch, never
-    accumulated, so a retried/replayed identical batch leaves the count
-    (and the saturation decision) unchanged, and a crash between the
-    two store appends self-heals on retry because every store merges by
-    set union at read (ADVICE r7). Refuses with
-    :class:`BloomSaturatedError` when the PROJECTED fill after the
-    append exceeds ``max_fill``: the persisted geometry was sized for a
-    smaller corpus and its FP bound no longer holds — rebuild instead
-    (the error says so, with the numbers)."""
-    geom = bloom_read_geometry(path)
-    spark = df.sparkSession
-    hs = _bloom_hashes(df, fp_col)
-    hs = hs.localCheckpoint(eager=False)
-    n_total = (
-        spark.read.parquet(f"{path}/fps").union(hs).distinct().count()
-    )
-    fill = bloom_fill(geom, n_total)
-    if fill > max_fill:
-        need = bloom_geometry(n_total, geom["bits_per_key"], geom["k"])
-        raise BloomSaturatedError(
-            f"append would put {n_total} keys in an m={geom['m']} filter "
-            f"(projected fill {fill:.2f} > {max_fill}); geometry was sized "
-            f"for {geom['n_keys']} keys — rebuild with m>={need['m']}"
-        )
-    _bloom_positions_from_hashes(hs, geom).write.mode("append").parquet(
-        f"{path}/positions"
-    )
-    hs.write.mode("append").parquet(f"{path}/fps")
-    geom = {**geom, "n_keys": n_total}
     _bloom_write_geom(path, geom)
     return geom
 

@@ -3,16 +3,16 @@ metadata, with Arrow-batched decode/feature plumbing.
 
 Design: image/audio/video payloads are ``BinaryType`` columns travelling
 next to typed metadata (mime, byte size, checksum). Spark never interprets
-the bytes; decode/resize/frame-sample run as ``mapInPandas`` stages so the
+the bytes; decode/feature/frame-sample run as ``mapInPandas`` stages so the
 bytes cross into Python once per Arrow batch, not per row.
 
 Codec posture (round 5): PNG and WAV-PCM16 decode REALLY happens, with
 the stdlib only — PNG is zlib inflate + the 5-filter unfilter pass
 (:func:`decode_png`), WAV is a RIFF chunk walk (:func:`decode_wav_pcm16`)
-— so ``mode="real"`` produces true pixel/sample features and thumbnails
-for those formats. Formats that genuinely need a codec library
+— so ``mode="real"`` produces true pixel/sample features for those
+formats. Formats that genuinely need a codec library
 (JPEG's DCT entropy decoding, video) remain honestly stubbed PER ROW:
-``feature/thumb = None`` with the sniffed type in ``decoder``, never a
+``feature = None`` with the sniffed type in ``decoder``, never a
 task failure. ``mode="fake"`` keeps the deterministic sha-expansion
 pseudo-decode — the oracle-checkable tier the registry queries use.
 """
@@ -63,8 +63,8 @@ def payload_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def _sha_expand(payload: bytes, need: int) -> bytes:
     """First ``need`` bytes of sha256(payload || counter) counter-mode
-    expansion — the shared deterministic pseudo-decode behind the fake
-    feature and thumbnail kernels (and replayed byte-for-byte by the
+    expansion — the deterministic pseudo-decode behind the fake
+    feature kernel (and replayed byte-for-byte by the
     multimodal_features DuckDB oracle)."""
     out = b""
     counter = 0
@@ -128,80 +128,6 @@ def extract_features(
             )
 
     return df.mapInPandas(kernel, schema=FEATURE_SCHEMA)
-
-
-#: Output schema of the resize stage: fixed-size grayscale thumbnail as
-#: an opaque byte string (width*height bytes, row-major).
-RESIZE_SCHEMA = (
-    "doc_id long, width int, height int, thumb binary, decoder string"
-)
-
-
-def _fake_thumb(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic pseudo-thumbnail (sha256 expansion of the payload) —
-    stands in for decode→resize so the Spark-side contract is testable."""
-    return _sha_expand(payload, width * height)
-
-
-def resize_images(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    width: int = 8,
-    height: int = 8,
-    mode: str = "fake",
-) -> DataFrame:
-    """Arrow-batched image resize to a fixed ``width x height`` grayscale
-    thumbnail — the decode+downsample stage of an image training
-    pipeline, as ``mapInPandas`` so payload bytes cross into Python once
-    per Arrow batch.
-
-    ``mode="real"`` REALLY decodes PNG payloads (stdlib zlib + unfilter,
-    :func:`decode_png`), converts to grayscale luminance, and
-    nearest-neighbor resamples to the fixed size; non-PNG payloads yield
-    ``thumb=None`` with ``decoder="unsupported"`` (JPEG needs a codec —
-    the honest remaining boundary, now per-row instead of per-mode).
-    ``mode="fake"`` keeps the deterministic pseudo-thumbnail.
-
-    At 100 TB: map-only (zero shuffle), output is width*height bytes per
-    image regardless of input size — the scan reads (id, payload), the
-    projection after this stage carries only thumbnails.
-    """
-    if mode not in ("fake", "real"):
-        raise ValueError("mode must be 'fake' or 'real'")
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            thumbs, decoders = [], []
-            for p in pdf["payload"]:
-                if p is None:
-                    thumbs.append(None)
-                    decoders.append("null")
-                elif mode == "fake":
-                    thumbs.append(_fake_thumb(bytes(p), width, height))
-                    decoders.append("stub-fake")
-                else:
-                    try:
-                        thumbs.append(_real_thumb(bytes(p), width, height))
-                        decoders.append("stdlib-png")
-                    except Exception:
-                        # not a PNG, unsupported variant, OR corrupt
-                        # bytes behind a valid signature (zlib.error,
-                        # struct.error, ...): mark the row, keep the job.
-                        thumbs.append(None)
-                        decoders.append("unsupported")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                    "thumb": thumbs,
-                    "decoder": decoders,
-                }
-            )
-
-    return df.mapInPandas(kernel, schema=RESIZE_SCHEMA)
 
 
 def sample_frames(
@@ -658,15 +584,3 @@ def _real_feature(payload: bytes, dim: int):
     sniff = "jpeg" if payload[:2] == b"\xff\xd8" else "unknown"
     return None, f"unsupported:{sniff}"
 
-
-def _real_thumb(payload: bytes, width: int, height: int):
-    """Real decode -> grayscale -> nearest-neighbor resample to
-    width x height bytes. PNG only (the decodable image format)."""
-    import numpy as np
-
-    h, w, ch, px = decode_png(payload)  # raises for non-PNG
-    arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
-    lum = arr[:, :, : 3 if ch >= 3 else 1].mean(axis=2)
-    ys = np.round(np.linspace(0, h - 1, height)).astype(int)
-    xs = np.round(np.linspace(0, w - 1, width)).astype(int)
-    return lum[ys][:, xs].astype(np.uint8).tobytes()

@@ -2298,63 +2298,3 @@ def semantic_dedup(
         "left_anti",
     )
 
-
-def pca_project(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dims: int = 16,
-    n_components: int = 2,
-    round_to: int = 6,
-) -> DataFrame:
-    """Distributed PCA: project each vector onto the corpus's top
-    ``n_components`` principal directions (of the first ``dims``
-    components, uncentered — the Gram-matrix PCA).
-
-    Scale split: the DATA-sized work is two scans — one map-side-combined
-    aggregate reducing the corpus to the dims×dims Gram matrix (the only
-    thing collected: d² doubles, model-sized), and one projection pass
-    with the eigenvectors inlined as literals. The eigendecomposition
-    itself is O(d³) on the driver — numpy on a 16×16 matrix, the same
-    driver-holds-model-state budget as the k-means centroids. Signs are
-    canonicalized (largest-|component| positive) so results don't flip
-    between runs.
-    """
-    df = _bounded(df, vec_col)
-    pairs = F.expr(
-        f"""
-        flatten(transform(sequence(0, {dims - 1}), i ->
-            transform(sequence(i, {dims - 1}), j ->
-                struct(i, j,
-                       CAST(element_at({vec_col}, i + 1) AS DOUBLE)
-                       * CAST(element_at({vec_col}, j + 1) AS DOUBLE) AS p))))
-        """
-    )
-    tri = (
-        df.select(F.explode(pairs).alias("e"))
-        .groupBy(F.col("e.i").alias("i"), F.col("e.j").alias("j"))
-        .agg(F.sum("e.p").alias("s"))
-        .collect()
-    )
-    G = np.zeros((dims, dims))
-    for r in tri:
-        G[r["i"], r["j"]] = r["s"]
-        G[r["j"], r["i"]] = r["s"]
-    vals, vecs = np.linalg.eigh(G)
-    order = np.argsort(-vals)[:n_components]
-    comps = vecs[:, order].T  # (n_components, dims)
-    for c in range(len(comps)):
-        if comps[c][np.argmax(np.abs(comps[c]))] < 0:
-            comps[c] = -comps[c]
-    cols = [F.col(id_col)]
-    for c in range(len(comps)):
-        lit = "array(" + ", ".join(f"{v!r}D" for v in comps[c]) + ")"
-        fold = (
-            f"aggregate(zip_with(slice({vec_col}, 1, {dims}), {lit}, "
-            "(x, s) -> CAST(x AS DOUBLE) * s), "
-            "CAST(0.0 AS DOUBLE), (a, v) -> a + v)"
-        )
-        cols.append(
-            F.expr(f"round({fold}, {round_to})").alias(f"pc{c + 1}")
-        )
-    return df.select(*cols)

@@ -3200,7 +3200,7 @@ def bpe_merge_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: scheme / www. / host case / trailing slash / query-string variants all
 #: keyed off doc_id so the canonicalizer has real work to do, and the
 #: path collides on doc_id % 97 so canonical dedup finds real duplicates.
-# The uppercased-URL slice folds through functions/fold.ascii_upper —
+# The uppercased-URL slice folds through functions/fold.ascii_upper_sql —
 # engine upper() on an ARBITRARY source column diverges cross-engine on
 # ß/ı (the r8 case-fold contract; caught by the r11 label sweep, which
 # makes `source` hostile). ASCII-only case is also the real URL
@@ -5169,9 +5169,8 @@ def _pca_project_oracle() -> str:
     "reassociation-proof, so the distributed sum hash-matches DuckDB''s "
     "sequential fold exactly. The corpus is touched twice: the Gram "
     "aggregate and one projection scan with the frozen direction inlined "
-    "as a literal. The numpy-eigh multi-component face stays available "
-    "as operators/similarity.pca_project (accuracy-gated in pytest); "
-    "this registry face is the scale path AND fully oracle-checked.",
+    "as a literal. pytest checks that its projection aligns with an "
+    "independent numpy PCA's first component.",
 )
 def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math

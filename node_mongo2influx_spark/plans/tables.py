@@ -23,18 +23,12 @@ def stable_round(col, digits: int = 4):
     DuckDB's round() disagree on exact .5-at-last-digit boundaries — which
     averages of 2-decimal currency values hit SYSTEMATICALLY (sum/8 ends in
     .00005). This formulation is plain IEEE double arithmetic, identical in
-    both engines; pair it with stable_round_sql in the oracle.
+    both engines; spell the oracle side as ``floor(x * 10^d + 0.5) / 10^d``.
     """
     from pyspark.sql import functions as F
 
     scale = float(10**digits)
     return F.floor(col * scale + F.lit(0.5)) / scale
-
-
-def stable_round_sql(expr: str, digits: int = 4) -> str:
-    """DuckDB-side twin of :func:`stable_round` (same doubles, same result)."""
-    scale = float(10**digits)
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}"
 
 
 #: DuckDB-side twin of :func:`load_events_measured` — drop this in place

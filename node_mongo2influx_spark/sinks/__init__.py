@@ -1,7 +1,6 @@
 """Sink adapters: memory (tests), parquet (bench), InfluxDB line protocol."""
 
 from node_mongo2influx_spark.sinks.base import Sink
-from node_mongo2influx_spark.sinks.bucketed import BucketedTableSink
 from node_mongo2influx_spark.sinks.memory import MemorySink
 from node_mongo2influx_spark.sinks.parquet import ParquetSink
 from node_mongo2influx_spark.sinks.influx import InfluxLineProtocolSink
@@ -9,7 +8,6 @@ from node_mongo2influx_spark.sinks.noop import NoopSink
 
 __all__ = [
     "Sink",
-    "BucketedTableSink",
     "MemorySink",
     "ParquetSink",
     "InfluxLineProtocolSink",

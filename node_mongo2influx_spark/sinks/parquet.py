@@ -76,43 +76,18 @@ def swap_dir(target: pathlib.Path, build, suffix: str) -> None:
 
 
 class ParquetSink(Sink):
-    def __init__(
-        self,
-        path: str,
-        partition_by: tuple[str, ...] = (),
-        dynamic_overwrite: bool = False,
-    ) -> None:
-        """``dynamic_overwrite=True`` turns a partitioned sink into an
-        incremental loader: each write REPLACES exactly the partitions
-        present in the batch and leaves every other partition untouched
-        (``spark.sql.sources.partitionOverwriteMode=dynamic``). This is the
-        idempotent daily-reload shape at 100 TB — re-running a day's load
-        rewrites that day's partitions instead of appending duplicates or
-        truncating the table.
-
-        CONSTRAINT: every write must be PARTITION-COMPLETE — if a
-        partition's rows are split across two writes (e.g. streaming
-        micro-batches that slice a day), the second write replaces the
-        first instead of accumulating. Align batches to partitions (one
-        source file per day, or repartition upstream) before pointing a
-        stream at this mode; see
-        tests/test_streaming.py::test_stream_foreachbatch_dynamic_overwrite_idempotent."""
+    def __init__(self, path: str) -> None:
         self.path = pathlib.Path(path)
-        self.partition_by = partition_by
-        self.dynamic_overwrite = dynamic_overwrite
-        if dynamic_overwrite and not partition_by:
-            raise ValueError("dynamic_overwrite requires partition_by")
         self._truncated: set[str] = set()
 
     def write(self, df: DataFrame, series: str) -> int:
-        overwrite = self.dynamic_overwrite or series in self._truncated
-        writer = df.write.mode("overwrite" if overwrite else "append")
-        if self.dynamic_overwrite:
-            writer = writer.option("partitionOverwriteMode", "dynamic")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(str(self.path / series))
+        # A pending truncate is used up by this write even if it fails, so
+        # a later append run cannot inherit it and replace the series.
+        overwrite = series in self._truncated
         self._truncated.discard(series)
+        df.write.mode("overwrite" if overwrite else "append").parquet(
+            str(self.path / series)
+        )
         return -1
 
     def truncate(self, series: str) -> None:
@@ -124,8 +99,8 @@ class ParquetSink(Sink):
     def compact(self, df_reader, series: str, target_file_bytes: int = 128 << 20) -> int:
         """Small-file compaction: rewrite a series into files of
         ~``target_file_bytes`` (read current size from disk, coalesce to
-        ceil(size/target) output tasks). Streaming/incremental appends
-        accumulate per-batch-per-partition files; at 100 TB the scan-open
+        ceil(size/target) output tasks). Repeated appends and streaming
+        micro-batches accumulate small files; at 100 TB the scan-open
         cost of millions of tiny files dominates, so compaction is a
         first-class maintenance op. Returns the new file count.
 
@@ -149,7 +124,5 @@ class ParquetSink(Sink):
         n_out = max(1, -(-total // target_file_bytes))
         df = df_reader(str(target))
         writer = df.coalesce(int(n_out)).write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
         swap_dir(target, lambda tmp: writer.parquet(str(tmp)), "compact")
         return len([p for p in target.rglob("*.parquet") if p.is_file()])

@@ -17,28 +17,12 @@ dedup key for effectively-once, as in batch (sinks/base.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from node_mongo2influx_spark.operators.transform import TransformSpec
 from node_mongo2influx_spark.sinks.base import Sink
-
-
-def read_stream(
-    spark: SparkSession,
-    path: str,
-    schema,
-    fmt: str = "parquet",
-    max_files_per_trigger: int = 10,
-) -> DataFrame:
-    """File-based streaming source over a directory of ``fmt`` files."""
-    return (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path)
-    )
 
 
 def migrate_stream(

@@ -53,36 +53,6 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_bucketed_table_sink_migrate_then_shuffle_free_join(engine, sf_dir):
-    from node_mongo2influx_spark import TransformSpec
-    from node_mongo2influx_spark.sinks import BucketedTableSink
-    from node_mongo2influx_spark.sources.catalog import DirectoryCatalog
-
-    spark = engine.spark
-    catalog = DirectoryCatalog(spark, sf_dir)
-    sink = BucketedTableSink(bucket_by="user_id", n_buckets=8, table_prefix="bs_")
-    report = engine.migrate(
-        catalog, TransformSpec(rename={"ts": "time"}), sink, tables=["events"]
-    )
-    assert not report.failed and report.rows_written == 1000
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        t = spark.table("bs_events").select("user_id", "event_id")
-        t2 = spark.table("bs_events").select(
-            "user_id", F.col("value").alias("v2")
-        )
-        # actual self-JOIN on the bucket key: zero Exchange
-        join_plan = _plan(t.join(t2, "user_id"))
-        assert "SortMergeJoin" in join_plan and "Exchange" not in join_plan, join_plan
-        # and bucket-key aggregation is also shuffle-free
-        agg_plan = _plan(spark.table("bs_events").groupBy("user_id").count())
-        assert "Exchange" not in agg_plan, agg_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bs_events")
-
-
 def test_unbucketed_join_does_exchange(spark, sf_dir):
     # control: same join without bucketing shuffles both sides
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -78,6 +78,20 @@ def test_cli_size_below_one_exits_before_spark(
     assert exc.value.code == f"{option} must be >= 1, got {value}"
 
 
+def test_cli_repeated_tables_exit_before_spark(tmp_path, monkeypatch):
+    # a repeated --tables value would migrate that table twice
+    from node_mongo2influx_spark import Engine
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(Engine, "builder", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        main(["--source", str(tmp_path), "--sink", f"parquet:{tmp_path}/out",
+              "--tables", "events", "users", "events"])
+    assert exc.value.code == "--tables repeats ['events']"
+
+
 @pytest.mark.parametrize("spool", [False, True])
 def test_cli_empty_source_exits_with_message(spark, tmp_path, capsys, spool):
     # a source with no tables is a failed migration, not an empty report

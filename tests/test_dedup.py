@@ -31,7 +31,9 @@ def test_exact_dedup_groups(docs):
 
 def test_shingles_short_doc_empty(spark):
     df = spark.createDataFrame([(1, "only two")], "doc_id long, text string")
-    out = df.select(dedup.word_shingles("text", 3).alias("sh")).first()
+    out = df.select(
+        dedup.shingles_from_words("split(text, ' ')", 3).alias("sh")
+    ).first()
     assert out["sh"] == []
 
 
@@ -319,55 +321,6 @@ def test_bloom_no_false_negatives_and_bounded_fp(spark, bloom_base, tmp_path):
         r["bloom_hit"] for r in dedup.bloom_classify(probes, "fp", path).collect()
     ) / 2_000
     assert fp_rate < 0.02  # design FP ~0.25% at fill ~0.22
-
-
-def test_bloom_append_merges_and_updates_geometry(spark, bloom_base, tmp_path):
-    path = str(tmp_path / "bloom")
-    dedup.bloom_build(bloom_base, "fp", path)
-    batch = spark.range(400, 450).selectExpr("concat('fp_', id) AS fp")
-    geom = dedup.bloom_append(batch, "fp", path)
-    assert geom["n_keys"] == 450  # tracked for later saturation checks
-    new_members = batch.selectExpr("fp", "CAST(substr(fp, 4) AS LONG) AS doc_id")
-    assert all(
-        r["bloom_hit"]
-        for r in dedup.bloom_classify(new_members, "fp", path).collect()
-    )
-
-
-def test_bloom_saturated_replay_refused(spark, bloom_base, tmp_path):
-    # geometry sized for 400 keys; a 64x-growth append must REFUSE, not
-    # silently degrade into classify-everything-as-duplicate
-    path = str(tmp_path / "bloom")
-    dedup.bloom_build(bloom_base, "fp", path)
-    big = spark.range(1_000, 27_000).selectExpr("concat('fp_', id) AS fp")
-    with pytest.raises(dedup.BloomSaturatedError, match="rebuild with m>="):
-        dedup.bloom_append(big, "fp", path)
-    # the refused append left the store untouched
-    assert dedup.bloom_read_geometry(path)["n_keys"] == 400
-    # the prescribed recovery — rebuild — re-derives m from the new count
-    rebuilt = dedup.bloom_build(bloom_base.union(big), "fp", path)
-    assert rebuilt["m"] == 16 * 26_400
-    assert dedup.bloom_fill(rebuilt) < 0.25
-
-
-def test_bloom_append_replay_idempotent(spark, bloom_base, tmp_path):
-    # ADVICE r7: n_keys must derive FROM DATA — a retried/replayed
-    # identical batch (at-least-once streaming delivery) may not
-    # double-count keys and trip a premature BloomSaturatedError
-    path = str(tmp_path / "bloom")
-    dedup.bloom_build(bloom_base, "fp", path)
-    batch = spark.range(400, 450).selectExpr("concat('fp_', id) AS fp")
-    g1 = dedup.bloom_append(batch, "fp", path)
-    g2 = dedup.bloom_append(batch, "fp", path)  # replay of the SAME batch
-    g3 = dedup.bloom_append(batch, "fp", path)  # and again
-    assert g1["n_keys"] == g2["n_keys"] == g3["n_keys"] == 450
-    assert dedup.bloom_read_geometry(path)["n_keys"] == 450
-    # membership unchanged by the replays
-    new_members = batch.selectExpr("fp", "CAST(substr(fp, 4) AS LONG) AS doc_id")
-    assert all(
-        r["bloom_hit"]
-        for r in dedup.bloom_classify(new_members, "fp", path).collect()
-    )
 
 
 def test_bloom_classify_duplicate_ids_no_false_negative(spark, bloom_base, tmp_path):

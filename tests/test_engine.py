@@ -7,7 +7,12 @@ import pytest
 
 from node_mongo2influx_spark import TransformSpec
 from node_mongo2influx_spark.sinks import MemorySink, ParquetSink
-from node_mongo2influx_spark.sources.catalog import DirectoryCatalog, is_system_table
+from node_mongo2influx_spark.sinks.base import Sink
+from node_mongo2influx_spark.sources.catalog import (
+    Catalog,
+    DirectoryCatalog,
+    is_system_table,
+)
 
 
 @pytest.fixture()
@@ -159,6 +164,92 @@ def test_migrate_rejects_table_concurrency_below_one(engine, catalog, n):
     eng = Engine(engine.spark, EngineConfig(table_concurrency=n))
     with pytest.raises(ValueError, match=f"table_concurrency must be >= 1, got {n}"):
         eng.migrate(catalog, TransformSpec(), MemorySink(), tables=["events"])
+
+
+class _RaisingCatalog(Catalog):
+    """Lists ``events`` but fails to read it, as a broken source would."""
+
+    def table_names(self) -> list[str]:
+        return ["events"]
+
+    def read(self, name: str):
+        raise OSError(f"cannot read {name}")
+
+
+def test_failed_truncate_run_leaves_no_pending_overwrite(engine, tmp_path):
+    # A truncate-run whose read fails must not leave the sink holding a
+    # pending overwrite that a later append run would act on.
+    from node_mongo2influx_spark import Engine
+    from node_mongo2influx_spark.config import EngineConfig
+
+    class OneRow(Catalog):
+        def table_names(self) -> list[str]:
+            return ["events"]
+
+        def read(self, name: str):
+            return self.spark.createDataFrame([(1,)], "v long")
+
+    spec = TransformSpec(time_column=None)
+    sink = ParquetSink(str(tmp_path / "out"))
+    append = Engine(engine.spark, EngineConfig())
+    truncate = Engine(engine.spark, EngineConfig(empty_series=True))
+    assert not append.migrate(OneRow(engine.spark), spec, sink).failed
+    broken = truncate.migrate(_RaisingCatalog(engine.spark), spec, sink)
+    assert [t.table for t in broken.failed] == ["events"]
+    assert not append.migrate(OneRow(engine.spark), spec, sink).failed
+    back = engine.spark.read.parquet(str(tmp_path / "out" / "events"))
+    assert back.count() == 2
+
+
+def test_failed_read_does_not_truncate_spool(tmp_path):
+    # Spark-free: a table that fails before its write keeps what its
+    # series already held; the truncate is never sent.
+    from node_mongo2influx_spark import Engine
+    from node_mongo2influx_spark.config import EngineConfig
+    from node_mongo2influx_spark.sinks.influx import (
+        InfluxLineProtocolSink,
+        SpoolTransport,
+    )
+
+    stale = tmp_path / "out" / "events" / "earlier.lp"
+    stale.parent.mkdir(parents=True)
+    stale.write_text("events v=1i 1\n")
+    sink = InfluxLineProtocolSink(SpoolTransport(str(tmp_path / "out")))
+    eng = Engine(None, EngineConfig(empty_series=True))
+    report = eng.migrate(_RaisingCatalog(None), TransformSpec(), sink)
+    assert "cannot read events" in report.failed[0].error
+    assert stale.read_text() == "events v=1i 1\n"
+
+
+class _RecordingSink(Sink):
+    def __init__(self) -> None:
+        self.calls: list[str] = []
+
+    def truncate(self, series: str) -> None:
+        self.calls.append(f"truncate {series}")
+
+    def write(self, df, series: str) -> int:
+        self.calls.append(f"write {series}")
+        return 0
+
+
+@pytest.mark.parametrize("tables", [None, ["events", "events"]])
+def test_migrate_rejects_repeated_table_names(tmp_path, tables):
+    # Spark-free: events.parquet and events.csv both list as "events", and
+    # an explicit list can repeat a name. Either would migrate the table
+    # twice, so the run fails before any truncate or write.
+    from node_mongo2influx_spark import Engine
+    from node_mongo2influx_spark.config import EngineConfig
+
+    for f in ("events.parquet", "events.csv", "users.json"):
+        (tmp_path / f).write_text("")
+    catalog = DirectoryCatalog(None, tmp_path)
+    assert catalog.table_names() == ["events", "events", "users"]
+    sink = _RecordingSink()
+    eng = Engine(None, EngineConfig(empty_series=True))
+    with pytest.raises(ValueError, match=r"table names repeat: \['events'\]"):
+        eng.migrate(catalog, TransformSpec(), sink, tables=tables)
+    assert sink.calls == []
 
 
 def _sink_count(kind: str, sink, spark, out) -> int:

@@ -160,36 +160,6 @@ def test_sniff_mime_magic_bytes(spark):
     }
 
 
-def test_resize_images_fake_mode(payloads, spark):
-    out = {r["doc_id"]: r for r in multimodal.resize_images(payloads, width=4, height=3).collect()}
-    assert set(out) == {1, 2, 3}
-    for r in out.values():
-        assert (r["width"], r["height"]) == (4, 3)
-        assert len(r["thumb"]) == 12  # fixed output size regardless of input
-        assert r["decoder"] == "stub-fake"
-    # deterministic: same payload -> same thumbnail bytes across runs
-    again = {r["doc_id"]: r for r in multimodal.resize_images(payloads, width=4, height=3).collect()}
-    assert all(bytes(out[k]["thumb"]) == bytes(again[k]["thumb"]) for k in out)
-    # null payloads pass through as null thumbs, not crashes
-    withnull = payloads.unionByName(
-        spark.createDataFrame([(9, None, "text/plain")], "doc_id long, payload binary, mime string")
-    )
-    rows = {r["doc_id"]: r for r in multimodal.resize_images(withnull, width=2, height=2).collect()}
-    assert rows[9]["thumb"] is None
-
-
-def test_resize_images_real_mode_marks_undecodable_rows(payloads):
-    import pytest as _pytest
-
-    rows = multimodal.resize_images(payloads, mode="real").collect()
-    assert rows and all(
-        r["decoder"] in ("null", "unsupported") and r["thumb"] is None
-        for r in rows
-    )  # text payloads aren't PNGs; the job survives and says so per row
-    with _pytest.raises(ValueError):
-        multimodal.resize_images(payloads, mode="nope")
-
-
 # ---------------------------------------------------------------------------
 # Round 5: REAL stdlib decoders (PNG zlib+unfilter, WAV PCM16)
 # ---------------------------------------------------------------------------
@@ -332,29 +302,6 @@ def test_extract_features_real_decodes_png_and_wav(spark):
     assert out[3]["decoder"] == "null" and out[3]["feature"] is None
 
 
-def test_resize_images_real_nearest_neighbor(spark):
-    import numpy as np
-
-    grad = np.tile(
-        np.linspace(0, 255, 16, dtype=np.uint8)[None, :, None], (16, 1, 1)
-    )
-    png = _encode_png(grad, filters=[0, 2])
-    df = spark.createDataFrame(
-        [(0, bytearray(png), "image/png"), (1, bytearray(b"nope"), "text/plain")],
-        "doc_id long, payload binary, mime string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in multimodal.resize_images(df, width=4, height=4, mode="real").collect()
-    }
-    lum = grad.mean(axis=2)
-    ys = np.round(np.linspace(0, 15, 4)).astype(int)
-    expect = lum[ys][:, ys].astype(np.uint8).tobytes()
-    assert bytes(out[0]["thumb"]) == expect
-    assert out[0]["decoder"] == "stdlib-png"
-    assert out[1]["thumb"] is None and out[1]["decoder"] == "unsupported"
-
-
 def test_real_mode_survives_corrupt_payloads(spark):
     # Malformed bytes BEHIND valid magic numbers — the scraped-corpus
     # reality: truncated PNG (signature only), corrupt deflate in IDAT,
@@ -411,12 +358,6 @@ def test_real_mode_survives_corrupt_payloads(spark):
     f = out[2]["feature"]
     assert f[2] == 0.0 and f[3] == 0.0 and sum(f[5:]) == 0.0
     assert out[3]["decoder"] == "unsupported:wav-corrupt"
-    # resize survives the same payloads
-    thumbs = {
-        r["doc_id"]: r["decoder"]
-        for r in multimodal.resize_images(df, mode="real").collect()
-    }
-    assert thumbs[0] == "unsupported" and thumbs[1] == "unsupported"
 
 
 def test_audio_meta_parses_struct_built_headers(spark):

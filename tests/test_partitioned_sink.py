@@ -1,8 +1,6 @@
-"""Partitioned parquet sink → partition pruning on read-back.
-
-At 100 TB the destination layout IS the query accelerator: partitioning the
-sink by day means downstream time-range queries scan only matching
-directories (PartitionFilters), not the whole series.
+"""Parquet sink layout and maintenance: small-file compaction, its
+crash-safe directory swap, and range-clustered writes whose file footers
+prune point lookups.
 """
 
 from __future__ import annotations
@@ -10,84 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from node_mongo2influx_spark import TransformSpec
 from node_mongo2influx_spark.sinks import ParquetSink
 from node_mongo2influx_spark.sinks.parquet import recover_swap, swap_dir
-from node_mongo2influx_spark.sources.catalog import DirectoryCatalog
-
-
-def _plan(df) -> str:
-    jvm = df.sparkSession._jvm
-    return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def test_partitioned_sink_prunes_on_read(engine, sf_dir, tmp_path):
-    catalog = DirectoryCatalog(engine.spark, sf_dir)
-    sink = ParquetSink(str(tmp_path / "out"), partition_by=("day",))
-    spec = TransformSpec(
-        rename={"ts": "time"},
-        set={"day": "CAST(date_trunc('day', time) AS DATE)"},
-    )
-    report = engine.migrate(catalog, spec, sink, tables=["events"])
-    assert not report.failed and report.rows_written == 1000
-
-    back = engine.spark.read.parquet(str(tmp_path / "out" / "events"))
-    one_day = back.where(F.col("day") == "2024-01-02")
-    plan = _plan(one_day)
-    # the day predicate must be a partition filter (directory pruning),
-    # not a data filter
-    assert "PartitionFilters" in plan and "isnotnull(day" in plan
-    n = one_day.count()
-    assert 0 < n < 1000
-    # and day directories exist on disk
-    assert (tmp_path / "out" / "events" / "day=2024-01-02").exists()
-
-
-def test_dynamic_overwrite_replaces_only_touched_partitions(engine, sf_dir, tmp_path):
-    spark = engine.spark
-    from node_mongo2influx_spark.plans.tables import load
-
-    e = load(spark, sf_dir, "events").select(
-        "event_id", "value", F.to_date("ts").alias("day")
-    )
-    sink = ParquetSink(
-        str(tmp_path / "inc"), partition_by=("day",), dynamic_overwrite=True
-    )
-    sink.write(e, "events")
-    days = [r["day"] for r in e.select("day").distinct().collect()]
-    assert len(days) > 2
-    reload_day = sorted(days)[1]
-
-    # incremental reload of ONE day with modified values: that partition is
-    # replaced (not appended), all others byte-identical
-    redo = e.where(F.col("day") == F.lit(reload_day)).withColumn(
-        "value", F.col("value") * 2
-    )
-    n_redo = redo.count()
-    sink.write(redo, "events")
-
-    back = spark.read.parquet(str(tmp_path / "inc" / "events"))
-    assert back.count() == e.count()  # no duplicate rows appended
-    assert back.where(F.col("day") == F.lit(reload_day)).count() == n_redo
-    # untouched partition still matches the original data
-    other_day = sorted(days)[0]
-    orig_sum = e.where(F.col("day") == F.lit(other_day)).agg(
-        F.sum("value")
-    ).first()[0]
-    back_sum = back.where(F.col("day") == F.lit(other_day)).agg(
-        F.sum("value")
-    ).first()[0]
-    assert back_sum == orig_sum
-    # reloaded partition carries the doubled values
-    redo_sum = back.where(F.col("day") == F.lit(reload_day)).agg(
-        F.sum("value")
-    ).first()[0]
-    orig_reload_sum = e.where(F.col("day") == F.lit(reload_day)).agg(
-        F.sum("value")
-    ).first()[0]
-    assert abs(redo_sum - 2 * orig_reload_sum) < 1e-6
 
 
 def test_compact_reduces_file_count_preserves_rows(engine, sf_dir, tmp_path):

@@ -64,7 +64,7 @@ def test_rows_in_equals_out_plus_skipped(spark, sf_dir, spec):
 def test_salted_aggregation_matches_plain(spark, sf_dir, buckets):
     from pyspark.sql import functions as F
 
-    from node_mongo2influx_spark.functions.skew import salted_count, salted_sum
+    from node_mongo2influx_spark.functions.skew import salted_stats
     from node_mongo2influx_spark.plans.tables import load
 
     e = load(spark, sf_dir, "events")
@@ -74,16 +74,11 @@ def test_salted_aggregation_matches_plain(spark, sf_dir, buckets):
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
         .collect()
     }
-    ns = {
-        r["event_type"]: r["n"]
-        for r in salted_count(e, ["event_type"], buckets).collect()
+    salted = {
+        r["event_type"]: (r["n"], round(r["total"], 4))
+        for r in salted_stats(e, ["event_type"], "value", buckets).collect()
     }
-    ss = {
-        r["event_type"]: round(r["total"], 4)
-        for r in salted_sum(e, ["event_type"], "value", buckets).collect()
-    }
-    assert ns == {k: v[0] for k, v in plain.items()}
-    assert ss == {k: v[1] for k, v in plain.items()}
+    assert salted == plain
 
 
 @settings(

@@ -52,8 +52,10 @@ def test_migrate_stream_end_to_end(spark, events_stream_dir, tmp_path, kind):
     assert n_null > 0
     out = tmp_path / "out"
     sink = MemorySink() if kind == "memory" else ParquetSink(str(out))
-    source = sp.read_stream(
-        spark, src, spark.read.parquet(src).schema, max_files_per_trigger=2
+    source = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
     )
     q = sp.migrate_stream(
         source,
@@ -74,63 +76,6 @@ def test_migrate_stream_end_to_end(spark, events_stream_dir, tmp_path, kind):
     want = [tuple(r) for r in expected.collect()]
     assert len(want) == 1000 - n_null
     assert sorted(got, key=repr) == sorted(want, key=repr)
-
-
-def test_stream_foreachbatch_dynamic_overwrite_idempotent(
-    spark, events_stream_dir, tmp_path
-):
-    # Streaming incremental load: each micro-batch lands day-partitioned
-    # with dynamic overwrite. Correct usage REQUIRES partition-complete
-    # micro-batches (a partition split across batches would be replaced,
-    # not accumulated) — modeled here as one source file per day, so every
-    # batch carries whole days. Replaying the same batches (fresh
-    # checkpoint) must then leave the sink equivalent: at-least-once
-    # delivery becomes idempotent without a content-hash dedup key.
-    from node_mongo2influx_spark.sinks import ParquetSink
-
-    day_src = str(tmp_path / "day_src")
-    (
-        spark.read.parquet(events_stream_dir)
-        .withColumn("day", F.to_date("ts"))
-        .coalesce(1)
-        .write.partitionBy("day")
-        .parquet(day_src)
-    )
-    schema = spark.read.parquet(day_src).schema
-    sink = ParquetSink(
-        str(tmp_path / "dyn"), partition_by=("day",), dynamic_overwrite=True
-    )
-
-    def run(ckpt):
-        source = sp.read_stream(
-            spark, day_src, schema, max_files_per_trigger=2
-        )
-        q = (
-            source.writeStream.foreachBatch(
-                lambda df, _id: sink.write(df, "events")
-            )
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run("ck1")
-    first = (
-        spark.read.parquet(str(tmp_path / "dyn" / "events"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    )
-    run("ck2")  # full replay
-    second = (
-        spark.read.parquet(str(tmp_path / "dyn" / "events"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    )
-    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
-    assert sum(r["n"] for r in first) == 1000
 
 
 def test_bloom_positions_stream_union_merge(spark, sf_dir, tmp_path):
@@ -195,7 +140,9 @@ def test_bloom_positions_stream_union_merge(spark, sf_dir, tmp_path):
 
     schema = spark.read.parquet(base_src).schema
     q = (
-        sp.read_stream(spark, base_src, schema, max_files_per_trigger=1)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(base_src)
         .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
