@@ -208,6 +208,14 @@ def main(argv: list[str] | None = None) -> int:
         SpoolCatalog,
     )
 
+    if src_kind != "spool":  # table_names() needs no session: before Spark
+        names = DirectoryCatalog(None, src_path).table_names()
+        twice = {n for n in names if names.count(n) > 1} & set(args.tables or names)
+        files = sorted(p.name for p in pathlib.Path(src_path).iterdir()
+                       if p.stem in twice and p.suffix in DirectoryCatalog._READERS)
+        if files:  # e.g. events.parquet beside events.csv: which is "events"?
+            raise SystemExit(f"--source has more than one file per table: {files}")
+
     engine = Engine.builder(
         master=args.master,
         config=EngineConfig(

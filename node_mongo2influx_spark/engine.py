@@ -18,10 +18,10 @@ from __future__ import annotations
 import logging
 import pathlib
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from node_mongo2influx_spark.config import EngineConfig
 from node_mongo2influx_spark.operators.transform import TransformSpec
@@ -186,8 +186,6 @@ class Engine:
                 pool.submit(self._migrate_table, catalog, name, transform, sink): name
                 for name in names
             }
-            from concurrent.futures import as_completed
-
             for fut in as_completed(futures):
                 name = futures[fut]
                 try:
@@ -220,24 +218,35 @@ class Engine:
     ) -> TableReport:
         t0 = time.monotonic()
         logger.info("table %s: starting", name)
-        out, obs = transform.apply(catalog.read(name))
-        # Truncate only once the table has been read and planned: a table
-        # that fails before its write must leave its series as it was.
-        if self.config.empty_series:
-            sink.truncate(name)
-        written = sink.write(out, name)
-        rep = TableReport(table=name, seconds=time.monotonic() - t0)
-        stats = obs.get
-        rep.rows_in = stats["rows_in"]
-        rep.rows_written = (
-            written if written >= 0 else rep.rows_in - stats["rows_skipped"]
-        )
-        # rows a counting sink drops itself are skipped too
-        rep.rows_skipped = rep.rows_in - rep.rows_written
-        logger.info(
-            "table %s: %d rows in, %d written, %d skipped "
-            "(success %.1f%%, %.0f rows/s)",
-            name, rep.rows_in, rep.rows_written, rep.rows_skipped,
-            rep.success_rate, rep.rows_per_sec,
-        )
-        return rep
+        df = catalog.read(name)
+        return migrate_frame(df, name, transform, sink, self.config.empty_series, t0)
+
+
+def migrate_frame(
+    df: DataFrame, series: str, transform: TransformSpec, sink: Sink,
+    truncate: bool, t0: float, batch_id: int | None = None,
+) -> TableReport:
+    """One table of ``Engine.migrate`` or one micro-batch of
+    ``migrate_stream``: transform with skip accounting, truncate if asked,
+    write, report. ``t0`` is the caller's ``time.monotonic()`` start."""
+    out, obs = transform.apply(df)
+    # Truncate only once the frame has been planned: a table that fails
+    # before its write must leave its series as it was.
+    if truncate:
+        sink.truncate(series)
+    written = sink.write(out, series)
+    seconds, stats = time.monotonic() - t0, obs.get
+    if written < 0:  # a sink that cannot count writes every row it keeps
+        written = stats["rows_in"] - stats["rows_skipped"]
+    # rows a counting sink drops itself are skipped too
+    rep = TableReport(
+        series, stats["rows_in"], written, stats["rows_in"] - written, seconds
+    )
+    logger.info(
+        "table %s%s: %d rows in, %d written, %d skipped "
+        "(success %.1f%%, %.0f rows/s)",
+        series, "" if batch_id is None else f" batch {batch_id}",
+        rep.rows_in, rep.rows_written, rep.rows_skipped,
+        rep.success_rate, rep.rows_per_sec,
+    )
+    return rep

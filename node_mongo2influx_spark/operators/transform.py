@@ -95,16 +95,6 @@ class TransformSpec:
             df = df.where(self.where)
         return df
 
-    def valid(self, df: DataFrame) -> DataFrame:
-        """Transform and drop invalid-time rows, with no accounting. With
-        no ``observe()`` node to pin it, the time filter can push into the
-        scan — at 100 TB that's the difference between reading and
-        skipping the null-time row groups."""
-        out = self.compile(df)
-        if self.time_column is not None:
-            out = out.where(F.col(self.time_column).isNotNull())
-        return out
-
     def apply(self, df: DataFrame) -> tuple[DataFrame, Observation]:
         """Transform, filter invalid-time rows, attach skip accounting.
 
@@ -113,8 +103,7 @@ class TransformSpec:
         ``rows_skipped`` — the one-pass equivalent of the reference's
         ``rowsSkipped`` counter and success-rate log (index.js:271-272),
         with no second scan. The observe() node must see pre-filter rows,
-        which pins the filter above the scan; use :meth:`valid` when no
-        accounting is needed.
+        which pins the filter above the scan.
         """
         out = self.compile(df)
         obs = Observation()

@@ -30,9 +30,10 @@ from node_mongo2influx_spark.plans.tables import TABLE_NAMES, load
     "— rename ts→time, keep all fields, drop rows lacking time (S3+T1+T3+F1).",
 )
 def migrate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # valid(), not apply(): no accounting consumer here, so the time filter
-    # is left free to push into the scan (Engine.migrate counts).
-    out = TransformSpec(rename={"ts": "time"}).valid(load(spark, sf_dir, "events"))
+    # compile(), not apply(): with no observe() node (Engine.migrate counts)
+    # the time filter is left free to push into the scan.
+    out = TransformSpec(rename={"ts": "time"}).compile(load(spark, sf_dir, "events"))
+    out = out.where(F.col("time").isNotNull())
     return out.select("event_id", "time", "user_id", "event_type", "value", "props")
 
 

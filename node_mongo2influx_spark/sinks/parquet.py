@@ -2,8 +2,9 @@
 
 The scale-correct default destination: columnar, splittable, exactly-once via
 Spark's file commit protocol. Truncate-then-load (reference `emptySeries`,
-index.js:321-336) maps onto ``mode("overwrite")`` — atomic per series, unlike
-the reference's separate DELETE round-trip.
+index.js:321-336) is atomic per series, unlike the reference's separate
+DELETE round-trip: the new series is built beside the live one and promoted
+by :func:`swap_dir`, so a write that fails leaves the old rows in place.
 """
 
 from __future__ import annotations
@@ -67,12 +68,15 @@ def swap_dir(target: pathlib.Path, build, suffix: str) -> None:
     two renames, never between a delete and a rename. Run
     :func:`recover_swap` with the same ``suffix`` first (before reading
     ``target``); it also repairs whatever a crash here leaves. On object
-    stores use a manifest instead."""
+    stores use a manifest instead. A missing ``target`` is created, with
+    the same guarantee: it appears complete or not at all."""
     tmp, old = _swap_paths(target, suffix)
     build(tmp)
-    target.rename(old)
+    if target.exists():
+        target.rename(old)
     tmp.rename(target)
-    shutil.rmtree(old)
+    if old.exists():
+        shutil.rmtree(old)
 
 
 class ParquetSink(Sink):
@@ -82,18 +86,21 @@ class ParquetSink(Sink):
 
     def write(self, df: DataFrame, series: str) -> int:
         # A pending truncate is used up by this write even if it fails, so
-        # a later append run cannot inherit it and replace the series.
-        overwrite = series in self._truncated
-        self._truncated.discard(series)
-        df.write.mode("overwrite" if overwrite else "append").parquet(
-            str(self.path / series)
-        )
+        # a later append run cannot inherit it and replace the series. An
+        # append, too, first repairs a load swap that crashed mid-rename.
+        target = self.path / series
+        recover_swap(target, "load")
+        if series in self._truncated:
+            self._truncated.discard(series)
+            swap_dir(target, lambda tmp: df.write.parquet(str(tmp)), "load")
+        else:
+            df.write.mode("append").parquet(str(target))
         return -1
 
     def truncate(self, series: str) -> None:
-        # Deferred: realized as overwrite mode on the next write, which is
-        # atomic (no window where the series is empty), unlike the
-        # reference's DELETE-then-insert (index.js:328).
+        # Deferred to the next write, which swaps the new series in
+        # (``__load_tmp`` / ``__load_old``): no window where the series is
+        # empty, unlike the reference's DELETE-then-insert (index.js:328).
         self._truncated.add(series)
 
     def compact(self, df_reader, series: str, target_file_bytes: int = 128 << 20) -> int:

@@ -32,8 +32,10 @@ per line) — maps onto stock Spark:
   sample of leading documents (the first ``_SCHEMA_SAMPLE_LINES``
   non-blank lines, read across the files in order — union of keys;
   conflicting types widen to string, the schemaless-safe choice). A later
-  document whose value does not fit fails the read, naming the column and
-  the document. A stream reader may pass its own ``schema(...)`` instead.
+  document whose value does not fit, or that holds a key outside the
+  schema, fails the read, naming the column or key and the document. A
+  stream reader may pass its own ``schema(...)`` instead; it is checked
+  the same way.
 
 Usage::
 
@@ -280,11 +282,15 @@ def infer_schema(files: list[str]) -> StructType:
 
 
 def _rows_from_lines(lines, fields) -> Iterator[tuple]:
+    names = {name for name, _ in fields}
     for line in lines:
         line = line.strip()
         if not line:
             continue
         doc = json.loads(line)
+        if not names.issuperset(doc):  # else a key the sample missed is lost
+            extra = sorted(set(doc) - names)
+            raise ValueError(f"spool key(s) {extra} are not in the schema: {line}")
         yield tuple(_coerce(doc.get(name), dtype) for name, dtype in fields)
 
 
@@ -369,7 +375,9 @@ class MongoSpoolDataSource(DataSource):
     def schema(self) -> StructType:
         """Inferred by :func:`infer_schema`; ``.schema(...)`` on the reader
         overrides inference entirely (the right call for a stream that
-        starts on an empty directory)."""
+        starts on an empty directory). An explicit schema is not a
+        projection: a document with a key outside it fails the read, as
+        with an inferred one, so no key is dropped unseen."""
         return infer_schema(spool_files(self.options["path"]))
 
     def simpleStreamReader(self, schema: StructType) -> "MongoSpoolStreamReader":

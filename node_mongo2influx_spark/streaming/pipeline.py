@@ -4,11 +4,10 @@ The reference is strictly batch ("time series" describes its data domain,
 not stream processing — SURVEY.md §2.7), so this is an extension: the same
 ``TransformSpec`` semantics applied to an unbounded source.
 
-Shape: ``readStream`` (file source — at scale: Kafka/Kinesis) → transform →
-time-validity filter → :func:`migrate_stream`, per-micro-batch delivery
-through any batch :class:`~node_mongo2influx_spark.sinks.base.Sink` via
-``foreachBatch`` (reuses the exact batch writers, including the InfluxDB
-line-protocol sink).
+Shape: ``readStream`` (file source — at scale: Kafka/Kinesis) →
+:func:`migrate_stream`, which runs the engine's per-table step
+(``engine.migrate_frame``) on each micro-batch via ``foreachBatch``, into
+any batch :class:`~node_mongo2influx_spark.sinks.base.Sink`.
 
 Micro-batch atomicity note: ``foreachBatch`` provides at-least-once into
 non-idempotent sinks; pair with the sink's (series, time, content-hash)
@@ -17,10 +16,13 @@ dedup key for effectively-once, as in batch (sinks/base.py).
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from node_mongo2influx_spark.engine import migrate_frame
 from node_mongo2influx_spark.operators.transform import TransformSpec
 from node_mongo2influx_spark.sinks.base import Sink
 
@@ -33,21 +35,17 @@ def migrate_stream(
     checkpoint_dir: str,
     trigger_once: bool = False,
 ) -> StreamingQuery:
-    """Continuous migrate: transform + time-filter each micro-batch, deliver
-    through the batch sink adapter (foreachBatch), checkpointed in
+    """Continuous migrate: each micro-batch is migrated like a table of
+    ``Engine.migrate`` (never truncated), checkpointed in
     ``checkpoint_dir``; ``trigger_once`` drains what the source holds and
-    stops.
-
-    ``transform.valid`` (not ``apply``) is used — streaming plans can't
-    carry ``observe`` the same way, so null-time rows are dropped without
-    accounting and no per-batch counts are reported.
+    stops. Each batch logs a table's report line plus its batch id; one
+    that fails fails the query, with its cause.
     """
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sink.write(batch_df, series)
+    def write_batch(df: DataFrame, batch_id: int) -> None:
+        migrate_frame(df, series, transform, sink, False, time.monotonic(), batch_id)
 
     writer = (
-        transform.valid(source)
-        .writeStream.foreachBatch(write_batch)
+        source.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )

@@ -92,6 +92,24 @@ def test_cli_repeated_tables_exit_before_spark(tmp_path, monkeypatch):
     assert exc.value.code == "--tables repeats ['events']"
 
 
+def test_cli_two_files_for_one_table_exit_before_spark(tmp_path, monkeypatch):
+    # events.parquet beside events.csv both list as "events"
+    from node_mongo2influx_spark import Engine
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(Engine, "builder", no_spark)
+    for f in ("events.parquet", "events.csv", "users.json"):
+        (tmp_path / f).write_text("")
+    with pytest.raises(SystemExit) as exc:
+        main(["--source", str(tmp_path), "--sink", f"parquet:{tmp_path}/out"])
+    assert exc.value.code == (
+        "--source has more than one file per table: "
+        "['events.csv', 'events.parquet']"
+    )
+
+
 @pytest.mark.parametrize("spool", [False, True])
 def test_cli_empty_source_exits_with_message(spark, tmp_path, capsys, spool):
     # a source with no tables is a failed migration, not an empty report

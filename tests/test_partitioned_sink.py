@@ -122,26 +122,31 @@ def _store_text(d):
     return {p.name: p.read_text() for p in d.iterdir()}
 
 
+_CRASH_STATES = [
+    # crash while the tmp is being written: the live store stays
+    ("tmp_partly_written", "live"),
+    # crash between the renames: the swap rolls back, even over a
+    # complete tmp
+    ("live_renamed_aside", "live"),
+    ("live_renamed_aside_tmp_partial", "live"),
+    # crash before the old store was removed
+    ("tmp_promoted_old_kept", "new"),
+    ("leftovers_beside_live", "live"),
+]
+
+
 @pytest.mark.parametrize(
-    "state, expect",
-    [
-        # crash while the tmp is being written: the live store stays
-        ("tmp_partly_written", "live"),
-        # crash between the renames: the swap rolls back, even over a
-        # complete tmp
-        ("live_renamed_aside", "live"),
-        ("live_renamed_aside_tmp_partial", "live"),
-        # crash before the old store was removed
-        ("tmp_promoted_old_kept", "new"),
-        ("leftovers_beside_live", "live"),
-    ],
+    "state, expect, suffix",
+    # compaction's swap, then the truncate-then-load swap of ParquetSink.write
+    [pytest.param(s, e, "compact", id=f"{s}-{e}") for s, e in _CRASH_STATES]
+    + [pytest.param(s, e, "load", id=f"load-{s}-{e}") for s, e in _CRASH_STATES],
 )
-def test_swap_recovers_every_crash_window(tmp_path, state, expect):
+def test_swap_recovers_every_crash_window(tmp_path, state, expect, suffix):
     # Spark-free: the tmp holds different content from the live store,
     # so rolling forward and rolling back are told apart
     target = tmp_path / "store"
-    tmp = tmp_path / "store__compact_tmp"
-    old = tmp_path / "store__compact_old"
+    tmp = tmp_path / f"store__{suffix}_tmp"
+    old = tmp_path / f"store__{suffix}_old"
     if state == "tmp_partly_written":
         _write_store(target, "live")
         (tmp / "_temporary").mkdir(parents=True)
@@ -159,13 +164,43 @@ def test_swap_recovers_every_crash_window(tmp_path, state, expect):
         _write_store(tmp, "new")
         _write_store(old, "stale")
 
-    recover_swap(target, "compact")
+    recover_swap(target, suffix)
     assert _store_text(target) == {"part-0.parquet": expect}
     assert not tmp.exists() and not old.exists()
     # the recovered store swaps cleanly again
-    swap_dir(target, lambda d: _write_store(d, "next"), "compact")
+    swap_dir(target, lambda d: _write_store(d, "next"), suffix)
     assert _store_text(target) == {"part-0.parquet": "next"}
     assert sorted(p.name for p in tmp_path.iterdir()) == ["store"]
+
+
+def test_failed_truncate_then_load_keeps_the_series(spark, tmp_path):
+    # Truncate-then-load builds the new series beside the live one: a
+    # write that fails leaves the old rows readable, and the next one
+    # replaces them. The first load creates the series the same way.
+    sink = ParquetSink(str(tmp_path / "out"))
+    target = tmp_path / "out" / "events"
+
+    def ids():
+        return sorted(r.id for r in spark.read.parquet(str(target)).collect())
+
+    sink.truncate("events")
+    sink.write(spark.range(3), "events")
+    assert ids() == [0, 1, 2]
+    sink.truncate("events")
+    bad = spark.range(3).select(
+        F.expr("CASE WHEN id = 2 THEN raise_error('boom') ELSE id END").alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        sink.write(bad, "events")
+    assert ids() == [0, 1, 2]
+    sink.truncate("events")
+    sink.write(spark.range(5, 7), "events")
+    assert ids() == [5, 6]
+    # an append first repairs a load swap that crashed between its renames
+    target.rename(target.with_name("events__load_old"))
+    sink.write(spark.range(7, 8), "events")
+    assert ids() == [5, 6, 7]
+    assert [p.name for p in target.parent.iterdir()] == ["events"]
 
 
 def test_rollup_refresh_from_stored_partials_matches_full_recompute(

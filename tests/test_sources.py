@@ -352,6 +352,41 @@ def test_mongospool_late_type_mismatch_names_column(spark, tmp_path, bad, path):
     assert repr(bad) in msg and json.dumps({"n": bad, "s": "y"}) in msg
 
 
+@pytest.mark.parametrize("path", ["batch", "stream"])
+def test_mongospool_key_past_the_schema_sample_fails_the_read(tmp_path, path):
+    # Spark-free. Only the 101st document adds a key, past the schema
+    # sample: the batch decode and the streaming tail fail naming the key
+    # and the document, instead of dropping the key.
+    import json
+
+    import pyarrow as pa
+
+    from node_mongo2influx_spark.sources.mongospool import (
+        MongoSpoolStreamReader,
+        arrow_decoder,
+        infer_schema,
+        spool_files,
+    )
+
+    d = tmp_path / "sparse"
+    d.mkdir()
+    docs = [{"_id": str(i), "time": i, "v": 0.5} for i in range(100)]
+    docs.append({"_id": "100", "time": 100, "v": 0.5, "late_field": 42})
+    lines = [json.dumps(doc) for doc in docs]
+    (d / "a.jsonl").write_text("".join(line + "\n" for line in lines))
+    schema = infer_schema(spool_files(d))
+    assert schema.fieldNames() == ["_id", "time", "v"]
+    if path == "batch":
+        text = pa.RecordBatch.from_pydict({"value": lines})
+        read = lambda: list(arrow_decoder(schema)(iter([text])))  # noqa: E731
+    else:
+        rdr = MongoSpoolStreamReader(str(d), schema)
+        read = lambda: rdr.read(rdr.initialOffset())  # noqa: E731
+    with pytest.raises(ValueError, match=r"\['late_field'\]") as info:
+        read()
+    assert lines[-1] in str(info.value)
+
+
 def test_mongospool_stream_offsets_track_file_growth(tmp_path):
     # A file listed while still being appended to must keep delivering its
     # later lines, and replay must reproduce the original batch's byte

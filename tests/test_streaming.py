@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import logging
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,12 +32,17 @@ def events_stream_dir(spark, sf_dir, tmp_path_factory):
     return d
 
 
-@pytest.mark.parametrize("kind", ["memory", "parquet"])
-def test_migrate_stream_end_to_end(spark, events_stream_dir, tmp_path, kind):
+@pytest.mark.parametrize("kind", ["memory", "parquet", "influx"])
+def test_migrate_stream_end_to_end(spark, events_stream_dir, tmp_path, caplog, kind):
     # The stream twin of test_engine.py::test_migrate_contract_every_sink:
-    # over several micro-batches, the sink holds exactly the input minus
-    # its null-time rows.
+    # each micro-batch logs rows_in = rows_written + rows_skipped, the
+    # skips add up to the null-time rows, and the sink holds exactly the
+    # input minus those rows.
     from node_mongo2influx_spark.sinks import ParquetSink
+    from node_mongo2influx_spark.sinks.influx import (
+        InfluxLineProtocolSink,
+        SpoolTransport,
+    )
 
     src = str(tmp_path / "src")
     (
@@ -51,12 +59,17 @@ def test_migrate_stream_end_to_end(spark, events_stream_dir, tmp_path, kind):
     n_null = spark.read.parquet(src).where(F.col("ts").isNull()).count()
     assert n_null > 0
     out = tmp_path / "out"
-    sink = MemorySink() if kind == "memory" else ParquetSink(str(out))
+    sink = {
+        "memory": MemorySink,
+        "parquet": lambda: ParquetSink(str(out)),
+        "influx": lambda: InfluxLineProtocolSink(SpoolTransport(str(out))),
+    }[kind]()
     source = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
+    caplog.set_level(logging.INFO, logger="node_mongo2influx_spark")
     q = sp.migrate_stream(
         source,
         TransformSpec(rename={"ts": "time"}),
@@ -66,15 +79,33 @@ def test_migrate_stream_end_to_end(spark, events_stream_dir, tmp_path, kind):
         trigger_once=True,
     )
     q.awaitTermination(120)
-    assert len(q.recentProgress) >= 2  # more than one micro-batch
+    assert q.exception() is None
+    line = re.compile(
+        r"table events batch (\d+): (\d+) rows in, (\d+) written, (\d+) skipped"
+    )
+    reports = [
+        tuple(map(int, m.groups()))
+        for m in map(line.match, caplog.messages) if m
+    ]
+    assert len({r[0] for r in reports}) == len(reports) >= 2  # one per batch
+    for _, rows_in, written, skipped in reports:
+        assert rows_in == written + skipped
+    assert sum(r[1] for r in reports) == 1000
+    assert sum(r[3] for r in reports) == n_null
+    assert sum(r[2] for r in reports) == 1000 - n_null
     cols = expected.columns
+    want = [tuple(r) for r in expected.collect()]
+    assert len(want) == 1000 - n_null
+    if kind == "influx":
+        lines = [ln for f in (out / "events").glob("*.lp")
+                 for ln in f.read_text().splitlines()]
+        assert len(lines) == len(want)
+        return
     if kind == "memory":
         got = [tuple(r[c] for c in cols) for r in sink.series["events"]]
     else:
         got = [tuple(r) for r in spark.read.parquet(str(out / "events"))
                .select(*cols).collect()]
-    want = [tuple(r) for r in expected.collect()]
-    assert len(want) == 1000 - n_null
     assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
